@@ -9308,8 +9308,8 @@ def st11(spark, sf_dir):
     memory sink. The char-identity model (t42's fixture: every
     corpus char a piece, max_piece_length=1) makes the oracle exact
     — n_tokens == length(text); trained-model streaming equals batch
-    by construction since both call the same _unigram_encoder
-    closure."""
+    by construction since both call the same tokenizer-core
+    _encoder closure."""
     import math
     import os
 
@@ -9567,7 +9567,7 @@ def st13(spark, sf_dir):
     char-identity model (t50's fixture: the corpus alphabet in
     positional form, no merges) makes the oracle exact — n_tokens
     == length(text); trained-model streaming equals batch by
-    construction since both call the same _wordpiece_encoder
+    construction since both call the same tokenizer-core _encoder
     closure."""
     import os
 

@@ -280,19 +280,43 @@ def cmd_corpus(args) -> None:
     df.write.mode("overwrite").parquet(args.output)
 
 
+def _tokenizer_family(name: str):
+    """The (load, train, prune, save) functions of a vocab-file
+    tokenizer family — unigram (piece/score TSV) or WordPiece (BERT
+    vocab.txt)."""
+    from polaroam_spark.operators import unigram as u
+    from polaroam_spark.operators import wordpiece as w
+
+    return {
+        "unigram": (
+            u.load_unigram,
+            u.train_unigram,
+            u.prune_unigram_vocab,
+            u.save_unigram,
+        ),
+        "wordpiece": (
+            w.load_wordpiece,
+            w.train_wordpiece,
+            w.prune_wordpiece_vocab,
+            w.save_wordpiece,
+        ),
+    }[name]
+
+
 def cmd_tokenize(args) -> None:
     """documents parquet -> exact token ids (mode=encode) or packed
     fixed-length training sequences (mode=pack): the tokenizer stage
     of the LLM-data pipeline as one restartable command. Bring a
-    model (--vocab/--merges, GPT-2 layout; --model TSV for
-    --family unigram) or train one in place (--train-vocab-size,
-    optionally persisting it for the next stage/run). mode=pack is
-    BPE-only: packing counts its separator via an atomic special
-    token, which the unigram format does not carry."""
+    model (--vocab/--merges, GPT-2 layout; --model TSV / vocab.txt
+    for --family unigram / wordpiece) or train one in place
+    (--train-vocab-size, optionally persisting it for the next
+    stage/run). mode=pack is BPE-only: packing counts its separator
+    via an atomic special token, which the unigram and WordPiece
+    formats do not carry."""
     from pyspark.sql import functions as F
 
     from polaroam_spark.operators.tokenize import (
-        bpe_encode,
+        _encode,
         load_bpe,
         pack_token_stream,
         save_bpe,
@@ -301,89 +325,33 @@ def cmd_tokenize(args) -> None:
 
     spark = _spark(args)
     df = spark.read.parquet(args.input)
-    if args.family == "unigram":
-        from polaroam_spark.operators.unigram import (
-            load_unigram,
-            save_unigram,
-            train_unigram,
-            unigram_encode,
-        )
-
+    if args.family != "bpe":
+        load, train, prune, save = _tokenizer_family(args.family)
         if args.mode != "encode":
             raise SystemExit(
-                "tokenize: --family unigram supports --mode encode "
-                "only (packing needs an atomic eot special, a BPE-"
-                "format feature)"
+                f"tokenize: --family {args.family} supports --mode "
+                "encode only (packing needs an atomic eot special, a "
+                "BPE-format feature)"
             )
         if args.model:
-            model = load_unigram(args.model)
+            model = load(args.model)
         else:
-            model = train_unigram(
+            model = train(
                 df, args.text_col, vocab_size=args.train_vocab_size
             )
         if args.prune_to:
-            from polaroam_spark.operators.unigram import (
-                prune_unigram_vocab,
-            )
-
-            model = prune_unigram_vocab(
-                df, model, args.prune_to, args.text_col
-            )
+            model = prune(df, model, args.prune_to, args.text_col)
         # persist when the run produced a NEW model (trained here
         # or pruned from a loaded one)
         if args.save_model and (not args.model or args.prune_to):
-            save_unigram(model, args.save_model)
-        out = unigram_encode(df, model, args.text_col).select(
-            args.id_col,
-            "token_ids",
-            F.array_size("token_ids").cast("long").alias("n_tokens"),
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        return
-    if args.family == "wordpiece":
-        from polaroam_spark.operators.wordpiece import (
-            load_wordpiece,
-            save_wordpiece,
-            train_wordpiece,
-            wordpiece_encode,
-        )
-
-        if args.mode != "encode":
-            raise SystemExit(
-                "tokenize: --family wordpiece supports --mode "
-                "encode only (packing needs an atomic eot special, "
-                "a BPE-format feature)"
-            )
-        if args.model:
-            model = load_wordpiece(args.model)
-        else:
-            model = train_wordpiece(
-                df, args.text_col, vocab_size=args.train_vocab_size
-            )
-        if args.prune_to:
-            from polaroam_spark.operators.wordpiece import (
-                prune_wordpiece_vocab,
-            )
-
-            model = prune_wordpiece_vocab(
-                df, model, args.prune_to, args.text_col
-            )
-        if args.save_model and (not args.model or args.prune_to):
-            save_wordpiece(model, args.save_model)
-        out = wordpiece_encode(df, model, args.text_col).select(
-            args.id_col,
-            "token_ids",
-            F.array_size("token_ids").cast("long").alias("n_tokens"),
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        return
-    if args.prune_to:
+            save(model, args.save_model)
+    elif args.prune_to:
         raise SystemExit(
             "tokenize: --prune-to needs --family unigram or "
             "wordpiece (a BPE merge chain cannot be pruned safely — "
             "later merges depend on earlier ones)"
         )
-    if args.vocab and args.merges:
+    elif args.vocab and args.merges:
         model = load_bpe(args.vocab, args.merges)
     else:
         model = train_bpe(
@@ -392,9 +360,9 @@ def cmd_tokenize(args) -> None:
         if args.save_vocab and args.save_merges:
             save_bpe(model, args.save_vocab, args.save_merges)
     if args.mode == "encode":
-        # count from the encoded array — calling bpe_token_count here
-        # would re-run the merge UDF over every document just to count
-        out = bpe_encode(df, model, args.text_col).select(
+        # count from the encoded array — a token-count pass here
+        # would re-run the segmenter over every document just to count
+        out = _encode(df, model, args.text_col).select(
             args.id_col,
             "token_ids",
             F.array_size("token_ids").cast("long").alias("n_tokens"),
@@ -665,13 +633,9 @@ def _load_tokenizer(args, stage: str) -> dict:
     --vocab/--merges, a unigram TSV via --model, a BERT vocab.txt
     via --wordpiece-vocab; anything else fails loudly."""
     if getattr(args, "model", None):
-        from polaroam_spark.operators.unigram import load_unigram
-
-        return load_unigram(args.model)
+        return _tokenizer_family("unigram")[0](args.model)
     if getattr(args, "wordpiece_vocab", None):
-        from polaroam_spark.operators.wordpiece import load_wordpiece
-
-        return load_wordpiece(args.wordpiece_vocab)
+        return _tokenizer_family("wordpiece")[0](args.wordpiece_vocab)
     if getattr(args, "vocab", None) and getattr(args, "merges", None):
         from polaroam_spark.operators.tokenize import load_bpe
 

@@ -43,28 +43,6 @@ def local_time(sec: Column | str, tz: str | None) -> Column:
     return F.from_utc_timestamp(ts, tz) if tz else ts
 
 
-def restamp_as_utc(ts: Column | str, tz: str) -> Column:
-    """Reinterpret a wall-clock timestamp in ``tz`` as the same wall
-    clock in UTC (Polars ``replace_time_zone``, reference
-    read_localize_write.py:20-24): shift the instant so its UTC
-    rendering equals the local rendering. ``to_utc_timestamp`` is that
-    exact operation."""
-    return F.to_utc_timestamp(_col(ts), tz)
-
-
-def datetime_parts(ts: Column | str) -> dict[str, Column]:
-    """year/month/day/hour/date expansion (reference
-    models.py:328-333)."""
-    c = _col(ts)
-    return {
-        "year": F.year(c).cast("int"),
-        "month": F.month(c).cast("int"),
-        "day": F.dayofmonth(c).cast("int"),
-        "hour": F.hour(c).cast("int"),
-        "date": F.to_date(c),
-    }
-
-
 def date_diff_days(later: Column | str, earlier: Column | str) -> Column:
     """Inclusive day span (reference utils.py:442-444):
     ``datediff + 1``."""

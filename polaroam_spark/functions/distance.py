@@ -70,19 +70,6 @@ def grid_snap(c: Column | str, resolution: float) -> Column:
     return F.round(_col(c) / F.lit(resolution), 0) * F.lit(resolution)
 
 
-def grid_cell(lat: Column | str, lon: Column | str, cell_deg: float) -> Column:
-    """Integer grid-cell id pair for ε-neighborhood blocking: points
-    within ``cell_deg`` of each other are in the same or an adjacent
-    cell. Used by the distributed clustering path (no reference
-    counterpart — the reference uses an in-memory BallTree,
-    utils.py:32-65; this is the Spark-native range-join analogue).
-    """
-    return F.struct(
-        F.floor(_col(lat) / F.lit(cell_deg)).alias("cx"),
-        F.floor(_col(lon) / F.lit(cell_deg)).alias("cy"),
-    )
-
-
 def zorder_key(
     lat: Column | str,
     lon: Column | str,

@@ -14,6 +14,7 @@ between a cleaned corpus and a training dataloader.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -206,7 +207,6 @@ def packing_plan_bestfit(
     Returns the input columns plus ``pack_id``
     (``shard * 2^40 + local bin``, globally unique).
     """
-    import pandas as pd
 
     budget = int(budget_tokens)
     if budget < 1:
@@ -226,7 +226,7 @@ def packing_plan_bestfit(
     )
     idc = list(id_cols)
 
-    def _bfd(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _bfd(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         shard = int(key[0])
         if pdf["_n"].isna().any():
             raise ValueError(

@@ -790,11 +790,10 @@ def mixture_report(
 
     ``model`` picks the token currency: ``None`` counts whitespace
     tokens (the planner's default currency via
-    :func:`~polaroam_spark.operators.textstats.token_count`); a BPE
-    or unigram model (dispatched on its ``type`` key, the
-    :func:`~polaroam_spark.operators.tokenize.tokenizer_stats`
-    convention) counts EXACT tokenizer tokens — the currency a
-    training run is actually billed in.
+    :func:`~polaroam_spark.operators.textstats.token_count`); a
+    tokenizer model of any family (BPE, unigram, WordPiece) counts
+    EXACT tokenizer tokens — the currency a training run is actually
+    billed in.
 
     Returns one row per plan group: ``group, target_share, rate,
     expected_tokens, achieved_docs, achieved_tokens, achieved_share,
@@ -817,26 +816,10 @@ def mixture_report(
             F.col(group_col).alias("_g"),
             token_count(text_col).alias("_n"),
         )
-    elif model.get("type") == "unigram":
-        from polaroam_spark.operators.unigram import (
-            unigram_token_count,
-        )
-
-        counted = unigram_token_count(
-            sampled, model, text_col, out_col="_n"
-        ).select(F.col(group_col).alias("_g"), "_n")
-    elif model.get("type") == "wordpiece":
-        from polaroam_spark.operators.wordpiece import (
-            wordpiece_token_count,
-        )
-
-        counted = wordpiece_token_count(
-            sampled, model, text_col, out_col="_n"
-        ).select(F.col(group_col).alias("_g"), "_n")
     else:
-        from polaroam_spark.operators.tokenize import bpe_token_count
+        from polaroam_spark.operators.tokenize import _token_count
 
-        counted = bpe_token_count(
+        counted = _token_count(
             sampled, model, text_col, out_col="_n"
         ).select(F.col(group_col).alias("_g"), "_n")
 

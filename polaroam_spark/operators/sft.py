@@ -41,6 +41,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from polaroam_spark.operators.tokenize import (
+    _BYTE_TO_UNI,
+    _encoder,
+    _family,
+)
+
 #: template -> (header fn, footer) over a role Column
 _TEMPLATES = ("chatml", "plain")
 
@@ -109,7 +115,7 @@ def _is_byte_identity(model: dict) -> bool:
     This is the model every trained tokenizer shares as its base
     layer and the one the sft2 oracle gate and the bench's sft_prep
     row use."""
-    if model.get("type") in ("unigram", "wordpiece"):
+    if _family(model) != "bpe":
         return False
     if model.get("merges") or model.get("special"):
         return False
@@ -117,7 +123,6 @@ def _is_byte_identity(model: dict) -> bool:
         return False
     if model.get("pretokenizer", "default") != "default":
         return False
-    from polaroam_spark.operators.tokenize import _BYTE_TO_UNI
 
     vocab = model.get("vocab")
     return vocab == {u: b for b, u in _BYTE_TO_UNI.items()}
@@ -153,20 +158,7 @@ def encode_chat_sft(
     tokenize differently segment-by-segment than whole-text. That
     divergence is intentional — the loss mask, not whole-text id
     parity, is the contract."""
-    if model.get("type") == "unigram":
-        from polaroam_spark.operators.unigram import _unigram_encoder
-
-        enc = _unigram_encoder(model)
-    elif model.get("type") == "wordpiece":
-        from polaroam_spark.operators.wordpiece import (
-            _wordpiece_encoder,
-        )
-
-        enc = _wordpiece_encoder(model)
-    else:
-        from polaroam_spark.operators.tokenize import _encoder
-
-        enc = _encoder(model)
+    enc = _encoder(model)
     header_py, footer_py = _template_parts_py(template)
     loss = tuple(str(r) for r in loss_roles)
 
@@ -454,7 +446,7 @@ def pack_sft_sequences(
         ),
     )
 
-    def _cut(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _cut(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         shard = int(key[0])
         shard_tokens = int(
             pdf["_ids"].map(lambda x: 0 if x is None else len(x)).sum()
@@ -610,20 +602,7 @@ def encode_preference_pairs(
     :func:`encode_chat_sft` rule). NULL prompt or branch → NULL
     outputs for the row; NULL role/content inside an array raises
     loudly (same contract as :func:`encode_chat_sft`)."""
-    if model.get("type") == "unigram":
-        from polaroam_spark.operators.unigram import _unigram_encoder
-
-        enc = _unigram_encoder(model)
-    elif model.get("type") == "wordpiece":
-        from polaroam_spark.operators.wordpiece import (
-            _wordpiece_encoder,
-        )
-
-        enc = _wordpiece_encoder(model)
-    else:
-        from polaroam_spark.operators.tokenize import _encoder
-
-        enc = _encoder(model)
+    enc = _encoder(model)
     header_py, footer_py = _template_parts_py(template)
     loss = tuple(str(r) for r in loss_roles)
 
@@ -1168,20 +1147,7 @@ def encode_eval_prompts(
     continuation bytes, the sft5 oracle arithmetic. NULL prompt or
     continuation → NULL ids/mask (no evidence, not a zero-loss
     row)."""
-    if model.get("type") == "unigram":
-        from polaroam_spark.operators.unigram import _unigram_encoder
-
-        enc = _unigram_encoder(model)
-    elif model.get("type") == "wordpiece":
-        from polaroam_spark.operators.wordpiece import (
-            _wordpiece_encoder,
-        )
-
-        enc = _wordpiece_encoder(model)
-    else:
-        from polaroam_spark.operators.tokenize import _encoder
-
-        enc = _encoder(model)
+    enc = _encoder(model)
 
     out_type = T.StructType(
         [
@@ -1267,20 +1233,7 @@ def encode_eval_choices(
             "encode_eval_choices reserves column names "
             f"{sorted(reserved)}; rename {sorted(clash)} first"
         )
-    if model.get("type") == "unigram":
-        from polaroam_spark.operators.unigram import _unigram_encoder
-
-        enc = _unigram_encoder(model)
-    elif model.get("type") == "wordpiece":
-        from polaroam_spark.operators.wordpiece import (
-            _wordpiece_encoder,
-        )
-
-        enc = _wordpiece_encoder(model)
-    else:
-        from polaroam_spark.operators.tokenize import _encoder
-
-        enc = _encoder(model)
+    enc = _encoder(model)
 
     out_type = T.ArrayType(
         T.StructType(

@@ -191,6 +191,56 @@ def _apply_merges(
 # ---------------------------------------------------------------------------
 
 
+def _word_histogram(
+    df: DataFrame,
+    text_col: str,
+    max_words: int,
+    flavor: str,
+    trainer: str,
+    learned: str,
+) -> "list[tuple[str, int]]":
+    """THE distributed training pass of every tokenizer family:
+    the pre-token frequency histogram (explode → groupBy → count,
+    map-side combined; NULL texts contribute nothing), top
+    ``max_words`` by (count desc, word) — bounded and deterministic.
+
+    One row past the cap is collected: a sentinel row means the
+    corpus has more distinct pre-tokens than ``max_words``, which
+    silently changes what ``trainer`` learns (``learned`` says what)
+    — warn LOUDLY, pointing at the trainer's caller (same detection
+    cost as the capped collect itself; no second counting job)."""
+    _pre_re(flavor)  # fail fast on the driver
+
+    @F.pandas_udf(T.ArrayType(T.StringType()))
+    def _pretok(col: pd.Series) -> pd.Series:
+        pre = _pre_re(flavor)
+        return col.map(
+            lambda t: None if t is None else pre.findall(t)
+        )
+
+    rows = (
+        df.select(F.explode(_pretok(F.col(text_col))).alias("w"))
+        .groupBy("w")
+        .count()
+        .orderBy(F.desc("count"), "w")
+        .limit(int(max_words) + 1)
+        .collect()
+    )
+    if len(rows) > int(max_words):
+        import warnings
+
+        warnings.warn(
+            f"{trainer}: corpus has more than max_words="
+            f"{int(max_words)} distinct pre-tokens; the frequency "
+            "tail was dropped from the training histogram, which can "
+            f"change the learned {learned}. Raise max_words to train "
+            "on the full vocabulary.",
+            stacklevel=3,
+        )
+        rows = rows[: int(max_words)]
+    return [(r["w"], int(r["count"])) for r in rows]
+
+
 def train_bpe(
     df: DataFrame,
     text_col: str = "text",
@@ -222,47 +272,13 @@ def train_bpe(
         raise ValueError(
             f"vocab_size must be >= 256 (got {vocab_size})"
         )
-    _pre_re(pretokenizer)  # fail fast on the driver
-    flavor = pretokenizer
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _pretok(col: pd.Series) -> pd.Series:
-        pre = _pre_re(flavor)
-        return col.map(
-            lambda t: None if t is None else pre.findall(t)
-        )
-
-    # collect one row past the cap: a sentinel row means the corpus
-    # has more distinct pre-tokens than max_words, which silently
-    # changes the learned merges — warn LOUDLY (same detection cost
-    # as the capped collect itself; no second counting job)
-    hist_rows = (
-        df.select(F.explode(_pretok(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .count()
-        .orderBy(F.desc("count"), "w")
-        .limit(int(max_words) + 1)
-        .collect()
-    )
-    if len(hist_rows) > int(max_words):
-        import warnings
-
-        warnings.warn(
-            f"train_bpe: corpus has more than max_words="
-            f"{int(max_words)} distinct pre-tokens; the frequency "
-            "tail was dropped from the training histogram, which can "
-            "change the learned merges. Raise max_words to train on "
-            "the full vocabulary.",
-            stacklevel=2,
-        )
-        hist_rows = hist_rows[: int(max_words)]
-
     # histogram as symbol tuples
     words: "dict[tuple[str, ...], int]" = {}
-    for r in hist_rows:
-        words[_word_to_symbols(r["w"])] = (
-            words.get(_word_to_symbols(r["w"]), 0) + int(r["count"])
-        )
+    for w, c in _word_histogram(
+        df, text_col, max_words, pretokenizer, "train_bpe", "merges"
+    ):
+        syms = _word_to_symbols(w)
+        words[syms] = words.get(syms, 0) + c
 
     import heapq
     from collections import Counter, defaultdict
@@ -443,7 +459,8 @@ def load_bpe(
 
 
 # ---------------------------------------------------------------------------
-# encoding / decoding
+# the tokenizer core: one family dispatch, one encode loop, one set of
+# Arrow encode / count / decode wrappers for BPE, unigram and WordPiece
 # ---------------------------------------------------------------------------
 
 #: per-worker word -> ids cache cap; Zipfian corpora hit >99% at a
@@ -451,30 +468,110 @@ def load_bpe(
 #: no LRU bookkeeping on the hot path).
 _CACHE_CAP = 200_000
 
+#: what each family's model looks like, for the loud wrong-family
+#: error of the family-named entry points
+_FAMILY_MODELS = {
+    "bpe": "a BPE model (train_bpe/load_bpe/load_tiktoken output, "
+    "no 'type' key)",
+    "unigram": "a unigram model (train_unigram/load_unigram output "
+    "with type='unigram')",
+    "wordpiece": "a wordpiece model (train_wordpiece/load_wordpiece "
+    "output with type='wordpiece')",
+}
 
-def _encoder(model: dict):
-    """(text -> list[int]) closure over the model's rank/id tables —
-    shared by the distributed UDFs and the driver-side helpers so
-    there is exactly one encode semantics. When the model carries
-    ``special`` tokens (see :func:`add_special_tokens`), their
-    occurrences encode ATOMICALLY — the text splits at them first,
-    so a special can never be produced by merging ordinary bytes and
-    ordinary text can never leak into a special id."""
+
+def _family(model: dict) -> str:
+    """The model's tokenizer family: its ``type`` key (``unigram``,
+    ``wordpiece``); BPE models carry none."""
+    return model.get("type", "bpe")
+
+
+def _require_family(model: dict, family: str) -> None:
+    if _family(model) != family:
+        raise ValueError(f"expected {_FAMILY_MODELS[family]}")
+
+
+def _for_family(family: str, fn):
+    """``fn`` (a core function taking a ``model`` argument) restricted
+    to ``family``'s models — how the family-named public entry points
+    (``bpe_encode``, ``unigram_decode``, ``encode_text_wordpiece`` …)
+    share one implementation and still reject another family's model
+    with a loud ValueError."""
+    import functools
+    import inspect
+
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def only(*args, **kwargs):
+        model = sig.bind(*args, **kwargs).arguments["model"]
+        _require_family(model, family)
+        return fn(*args, **kwargs)
+
+    return only
+
+
+def _bpe_segmenter(model: dict):
+    """(pre-token -> ids) for BPE: the greedy merge walk over the
+    pre-token's byte symbols. Merge priority is the merges-file pair
+    rank (GPT-2 layout) or, for a tiktoken-layout model, the rank (==
+    id) of the concatenation — a pair merges iff it is in the vocab."""
     vocab = model["vocab"]
     if model.get("rank_by_concat"):
-        # tiktoken layout: a pair merges iff its concatenation is in
-        # the vocab, with the token's rank (== id) as priority
-        def _rank(a: str, b: str):
+
+        def get_rank(a: str, b: str):
             return vocab.get(a + b)
 
-        get_rank = _rank
     else:
         ranks = {p: r for r, p in enumerate(model["merges"])}
 
-        def _rank(a: str, b: str):
+        def get_rank(a: str, b: str):
             return ranks.get((a, b))
 
-        get_rank = _rank
+    def segment(word: str) -> "list[int]":
+        return [
+            vocab[s]
+            for s in _apply_merges(_word_to_symbols(word), get_rank)
+        ]
+
+    return segment
+
+
+def _family_parts(model: dict):
+    """THE ``model["type"]`` dispatch: the family's (segmenter, decode
+    table) builders — BPE merge walk, unigram Viterbi with byte
+    fallback, WordPiece longest match. The family modules import from
+    this one, so theirs are imported here, at call time."""
+    family = _family(model)
+    if family == "unigram":
+        from polaroam_spark.operators.unigram import (
+            _id_to_bytes_unigram,
+            _unigram_segmenter,
+        )
+
+        return _unigram_segmenter, _id_to_bytes_unigram
+    if family == "wordpiece":
+        from polaroam_spark.operators.wordpiece import (
+            _id_to_bytes_wordpiece,
+            _wordpiece_segmenter,
+        )
+
+        return _wordpiece_segmenter, _id_to_bytes_wordpiece
+    return _bpe_segmenter, _id_to_bytes
+
+
+def _encoder(model: dict):
+    """(text -> list[int]) closure for a model of any family — shared
+    by the distributed UDFs, the driver-side helpers and the SFT
+    encoders so there is exactly one encode semantics. The family's
+    segmenter is picked ONCE here; per text the loop pre-tokenizes,
+    serves repeated pre-tokens from a per-worker word cache and
+    segments only cache misses. When the model carries ``special``
+    tokens (see :func:`add_special_tokens`), their occurrences encode
+    ATOMICALLY — the text splits at them first, so a special can
+    never be produced by merging ordinary bytes and ordinary text can
+    never leak into a special id."""
+    segment = _family_parts(model)[0](model)
     flavor = model.get("pretokenizer", "default")
     _pre_re(flavor)  # fail fast on the driver
     special: "dict[str, int]" = model.get("special") or {}
@@ -494,12 +591,7 @@ def _encoder(model: dict):
         for word in _pre_re(flavor).findall(text):
             hit = cache.get(word)
             if hit is None:
-                hit = [
-                    vocab[s]
-                    for s in _apply_merges(
-                        _word_to_symbols(word), get_rank
-                    )
-                ]
+                hit = segment(word)
                 if len(cache) >= _CACHE_CAP:
                     cache.clear()
                 cache[word] = hit
@@ -559,16 +651,16 @@ def add_special_tokens(model: dict, tokens: "list[str]") -> dict:
     return out
 
 
-def bpe_encode(
+def _encode(
     df: DataFrame,
     model: dict,
     text_col: str = "text",
     out_col: str = "token_ids",
 ) -> DataFrame:
     """Append exact token ids (``array<int>``) for every row. The
-    rank/id tables ride to executors inside the serialized pandas
-    UDF (KBs..MBs — broadcast semantics without a join); each Arrow
-    batch amortizes the per-worker word cache. NULL in → NULL out."""
+    model's tables ride to executors inside the serialized pandas UDF
+    (KBs..MBs — broadcast semantics without a join); each Arrow batch
+    amortizes the per-worker word cache. NULL in → NULL out."""
     mk = _encoder(model)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
@@ -578,7 +670,7 @@ def bpe_encode(
     return df.withColumn(out_col, _enc(F.col(text_col)))
 
 
-def bpe_token_count(
+def _token_count(
     df: DataFrame,
     model: dict,
     text_col: str = "text",
@@ -599,8 +691,8 @@ def bpe_token_count(
 
 
 def _id_to_bytes(model: dict) -> dict:
-    """id → raw bytes decode table: vocab tokens map through the
-    byte<->unicode bijection, special tokens to their literal
+    """BPE's id → raw bytes decode table: vocab tokens map through
+    the byte<->unicode bijection, special tokens to their literal
     UTF-8."""
     out = {
         i: bytes(_UNI_TO_BYTE[u] for u in t)
@@ -612,9 +704,9 @@ def _id_to_bytes(model: dict) -> dict:
 
 
 def _decode_ids(table: dict, ids) -> "str | None":
-    """ids → bytes → UTF-8 text (lossy on invalid sequences). THE
-    decode path — bpe_decode, decode_ids and chunk_documents_bpe all
-    call this one function so the three surfaces cannot drift."""
+    """ids → bytes → UTF-8 text (lossy on invalid sequences) through a
+    family's id → bytes table. THE decode path — every decode surface
+    calls this one function so they cannot drift."""
     if ids is None:
         return None
     return b"".join(table[int(i)] for i in ids).decode(
@@ -622,17 +714,19 @@ def _decode_ids(table: dict, ids) -> "str | None":
     )
 
 
-def bpe_decode(
+def _decode(
     df: DataFrame,
     model: dict,
     ids_col: str = "token_ids",
     out_col: str = "decoded",
 ) -> DataFrame:
-    """Invert :func:`bpe_encode` distributed: ids → tokens → bytes →
-    UTF-8 text. Byte-level BPE is lossless, so
-    ``bpe_decode(bpe_encode(df)) == df`` exactly — the roundtrip IS
-    the correctness certificate a gate can pin. NULL in → NULL out."""
-    table = _id_to_bytes(model)
+    """Invert the encode, distributed: ids → bytes → UTF-8 text.
+    Byte-level BPE and unigram byte fallback are lossless, so
+    ``decode(encode(df)) == df`` exactly — the roundtrip IS the
+    correctness certificate a gate can pin; WordPiece is exact
+    whenever no word hit ``[UNK]`` (its literal text is emitted).
+    NULL in → NULL out."""
+    table = _family_parts(model)[1](model)
 
     @F.pandas_udf(T.StringType())
     def _dec(col: pd.Series) -> pd.Series:
@@ -642,13 +736,115 @@ def bpe_decode(
 
 
 def encode_text(model: dict, text: str) -> "list[int]":
-    """Driver-side single-string encode (tests, spot checks)."""
+    """Driver-side single-string encode, any family (tests, spot
+    checks)."""
     return _encoder(model)(text)
 
 
 def decode_ids(model: dict, ids: "list[int]") -> str:
-    """Driver-side single-list decode."""
-    return _decode_ids(_id_to_bytes(model), ids)
+    """Driver-side single-list decode, any family."""
+    return _decode_ids(_family_parts(model)[1](model), ids)
+
+
+bpe_encode = _for_family("bpe", _encode)
+bpe_token_count = _for_family("bpe", _token_count)
+bpe_decode = _for_family("bpe", _decode)
+
+
+def _coverage_stats(
+    docs: DataFrame,
+    model: dict,
+    text_col: str,
+    group_by: "str | None",
+    escape,
+    escape_name: str,
+) -> DataFrame:
+    """The vocabulary-coverage data card (see
+    ``unigram_coverage_stats`` / ``wordpiece_coverage_stats``): per
+    group (or one corpus row) ``n_docs, n_tokens,
+    n_{escape_name}_tokens`` — ids for which ``escape(id)`` holds, the
+    family's escape hatch firing — ``{escape_name}_rate`` and
+    ``n_distinct_pieces_used`` over the other ids.
+
+    Plan: ONE encode pass feeding two aggregations — the count
+    columns are array expressions over the id array (map-side
+    combined), and the distinct-piece count explodes the per-doc
+    DISTINCT pieces (bounded by doc-vocab overlap) into a standard
+    partial-distinct countDistinct — never a corpus-scaled
+    aggregation buffer (a collect_list of per-doc arrays would be
+    one). The persist makes the shared encode execute once for both
+    consumers (the dsir pattern; registered with unpersist_caches).
+    NULL texts are dropped; the rate is NULL for a zero-token
+    group."""
+    from ..cache import track
+
+    n_escaped = f"n_{escape_name}_tokens"
+    enc = _encode(
+        docs.filter(F.col(text_col).isNotNull()), model, text_col,
+        out_col="_ids",
+    )
+    keys = [group_by] if group_by else []
+    proj = track(
+        enc.select(
+            *keys,
+            F.array_size("_ids").alias("_n"),
+            F.size(F.filter("_ids", escape)).alias("_esc"),
+            F.array_distinct(
+                F.filter("_ids", lambda i: ~escape(i))
+            ).alias("_pieces"),
+        ).persist()
+    )
+    counts = proj.groupBy(*keys).agg(
+        F.count("*").alias("n_docs"),
+        F.sum("_n").alias("n_tokens"),
+        F.sum("_esc").alias(n_escaped),
+    )
+    pieces = (
+        proj.select(*keys, F.explode("_pieces").alias("_p"))
+        .groupBy(*keys)
+        .agg(
+            F.countDistinct("_p")
+            .cast("long")
+            .alias("n_distinct_pieces_used")
+        )
+    )
+    agg = (
+        counts.join(pieces, on=keys, how="left")
+        if keys
+        else counts.crossJoin(F.broadcast(pieces))
+    )
+    agg = agg.withColumn(
+        "n_distinct_pieces_used",
+        F.coalesce(F.col("n_distinct_pieces_used"), F.lit(0)),
+    )
+    return agg.select(
+        *keys,
+        "n_docs",
+        "n_tokens",
+        n_escaped,
+        F.when(
+            F.col("n_tokens") > 0,
+            F.col(n_escaped).cast("double")
+            / F.col("n_tokens").cast("double"),
+        ).alias(f"{escape_name}_rate"),
+        "n_distinct_pieces_used",
+    )
+
+
+def _id_usage(df: DataFrame, model: dict, text_col: str) -> dict:
+    """id → occurrence count over ``df``'s encoded texts — the usage
+    ranking of ``prune_unigram_vocab`` / ``prune_wordpiece_vocab``:
+    one distributed encode pass + explode + a count aggregation
+    bounded by the vocab size (map-side combined)."""
+    enc = _encode(df, model, text_col, out_col="_ids")
+    return {
+        r._id: r._n
+        for r in enc.filter(F.col("_ids").isNotNull())
+        .select(F.explode("_ids").alias("_id"))
+        .groupBy("_id")
+        .agg(F.count("*").alias("_n"))
+        .collect()  # bounded: <= |vocab| rows
+    }
 
 
 def chunk_documents_bpe(
@@ -694,25 +890,22 @@ def chunk_documents_bpe(
         F.sequence(F.lit(0), n_chunks.cast("int") - 1),
         lambda i: F.slice("_ids", i * stride + 1, int(chunk_tokens)),
     )
-    table = _id_to_bytes(model)
-
-    def _dec_batch(col):
-        return col.map(lambda ids: _decode_ids(table, ids))
-
-    dec_udf = F.pandas_udf(_dec_batch, T.StringType())
-    out = encoded.select(
-        F.col(id_col),
-        F.posexplode(
-            F.when(F.col("_ids").isNotNull(), windows).otherwise(
-                F.array(F.array().cast("array<int>"))
-            )
-        ).alias("chunk_id", "token_ids"),
-    ).select(
-        id_col,
-        F.col("chunk_id").cast("long").alias("chunk_id"),
-        "token_ids",
-        F.array_size("token_ids").cast("long").alias("n_tokens"),
-        dec_udf(F.col("token_ids")).alias("chunk_text"),
+    out = _decode(
+        encoded.select(
+            F.col(id_col),
+            F.posexplode(
+                F.when(F.col("_ids").isNotNull(), windows).otherwise(
+                    F.array(F.array().cast("array<int>"))
+                )
+            ).alias("chunk_id", "token_ids"),
+        ).select(
+            id_col,
+            F.col("chunk_id").cast("long").alias("chunk_id"),
+            "token_ids",
+            F.array_size("token_ids").cast("long").alias("n_tokens"),
+        ),
+        model,
+        out_col="chunk_text",
     )
     if drop_empty:
         out = out.filter(F.col("n_tokens") > 0)
@@ -888,7 +1081,7 @@ def pack_token_stream(
 
     cap = int(max_shard_tokens)
 
-    def _cut(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _cut(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         shard = int(key[0])
         shard_tokens = int(
             pdf["_ids"].map(lambda x: 0 if x is None else len(x)).sum()
@@ -976,27 +1169,15 @@ def tokenizer_stats(
 
     ``model`` may be any tokenizer family: a BPE model (this
     module), a unigram model (``unigram.py``) or a WordPiece model
-    (``wordpiece.py``), dispatched on its ``type`` key — the whole
-    point of the table is comparing the families on one corpus."""
-    if model.get("type") == "unigram":
-        from polaroam_spark.operators.unigram import unigram_encode
-
-        encode_fn = unigram_encode
-    elif model.get("type") == "wordpiece":
-        from polaroam_spark.operators.wordpiece import (
-            wordpiece_encode,
-        )
-
-        encode_fn = wordpiece_encode
-    else:
-        encode_fn = bpe_encode
+    (``wordpiece.py``) — the whole point of the table is comparing
+    the families on one corpus."""
     words = F.size(
         F.filter(
             F.split(F.lower(F.col(text_col)), r"\s+"),
             lambda t: t != "",
         )
     )
-    enc = encode_fn(
+    enc = _encode(
         docs.filter(F.col(text_col).isNotNull()), model, text_col,
         out_col="_ids",
     ).select(

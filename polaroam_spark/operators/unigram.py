@@ -52,9 +52,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from polaroam_spark.operators.tokenize import (
-    _CACHE_CAP,
+    _coverage_stats,
+    _decode,
+    _encode,
+    _for_family,
+    _id_usage,
     _open_model_file,
     _pre_re,
+    _require_family,
+    _token_count,
+    _word_histogram,
+    decode_ids,
+    encode_text,
 )
 
 #: SentencePiece byte-fallback token strings, ids 0..255.
@@ -65,43 +74,6 @@ _BYTE_TOKEN_ID = {t: i for i, t in enumerate(_BYTE_TOKENS)}
 # ---------------------------------------------------------------------------
 # training
 # ---------------------------------------------------------------------------
-
-
-def _word_histogram(
-    df: DataFrame, text_col: str, max_words: int, flavor: str
-) -> "list[tuple[str, int]]":
-    """The train_bpe distributed pass verbatim: pre-token frequency
-    histogram, top ``max_words`` by (count desc, word), loud warning
-    when the tail was dropped."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _pretok(col: pd.Series) -> pd.Series:
-        pre = _pre_re(flavor)
-        return col.map(
-            lambda t: None if t is None else pre.findall(t)
-        )
-
-    rows = (
-        df.select(F.explode(_pretok(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .count()
-        .orderBy(F.desc("count"), "w")
-        .limit(int(max_words) + 1)
-        .collect()
-    )
-    if len(rows) > int(max_words):
-        import warnings
-
-        warnings.warn(
-            f"train_unigram: corpus has more than max_words="
-            f"{int(max_words)} distinct pre-tokens; the frequency "
-            "tail was dropped from the training histogram, which can "
-            "change the learned pieces. Raise max_words to train on "
-            "the full vocabulary.",
-            stacklevel=3,
-        )
-        rows = rows[: int(max_words)]
-    return [(r["w"], int(r["count"])) for r in rows]
 
 
 def _forward_backward(
@@ -255,12 +227,13 @@ def train_unigram(
         )
     if not 0.0 < float(shrink) < 1.0:
         raise ValueError(f"shrink must be in (0, 1) (got {shrink})")
-    _pre_re(pretokenizer)  # fail fast on the driver
     max_len = int(max_piece_length)
     if max_len < 1:
         raise ValueError("max_piece_length must be >= 1")
 
-    words = _word_histogram(df, text_col, max_words, pretokenizer)
+    words = _word_histogram(
+        df, text_col, max_words, pretokenizer, "train_unigram", "pieces"
+    )
     if not words:
         raise ValueError("train_unigram: empty corpus")
 
@@ -409,23 +382,13 @@ def train_unigram(
 # ---------------------------------------------------------------------------
 
 
-def _unigram_encoder(model: dict):
-    """(text -> list[int]) closure — Viterbi per pre-token with byte
-    fallback, per-worker word cache (the _encoder shape)."""
-    if model.get("type") != "unigram":
-        raise ValueError(
-            "expected a unigram model (train_unigram/load_unigram "
-            "output with type='unigram')"
-        )
+def _unigram_segmenter(model: dict):
+    """(pre-token -> ids) for the unigram family: Viterbi over the
+    piece log-probabilities; characters with no piece encode as their
+    UTF-8 bytes (ids 0..255)."""
     vocab = model["vocab"]
     scores = model["scores"]
     max_len = int(model.get("max_piece_length", 16))
-    flavor = model.get("pretokenizer", "default")
-    _pre_re(flavor)  # fail fast on the driver
-    cache: "dict[str, list[int]]" = {}
-
-    def _fallback(ch: str) -> "list[int]":
-        return [b for b in ch.encode("utf-8")]
 
     def _segment(word: str) -> "list[int]":
         seg = _viterbi(word, scores, max_len)
@@ -442,122 +405,35 @@ def _unigram_encoder(model: dict):
                 if run:
                     ids.extend(_segment("".join(run)))
                     run = []
-                ids.extend(_fallback(ch))
+                ids.extend(ch.encode("utf-8"))
         if run:
             ids.extend(_segment("".join(run)))
         return ids
 
-    def encode(text: "str | None") -> "list[int] | None":
-        if text is None:
-            return None
-        ids: "list[int]" = []
-        for word in _pre_re(flavor).findall(text):
-            hit = cache.get(word)
-            if hit is None:
-                hit = _segment(word)
-                if len(cache) >= _CACHE_CAP:
-                    cache.clear()
-                cache[word] = hit
-            ids.extend(hit)
-        return ids
-
-    return encode
+    return _segment
 
 
-def unigram_encode(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    out_col: str = "token_ids",
-) -> DataFrame:
-    """Append exact unigram token ids (``array<int>``) per row —
-    the bpe_encode contract for the unigram family. NULL in →
-    NULL out."""
-    mk = _unigram_encoder(model)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _enc(col: pd.Series) -> pd.Series:
-        return col.map(mk)
-
-    return df.withColumn(out_col, _enc(F.col(text_col)))
-
-
-def unigram_token_count(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    out_col: str = "n_tokens",
-) -> DataFrame:
-    """Append the EXACT unigram token count (``long``) per row.
-    NULL in → NULL out."""
-    mk = _unigram_encoder(model)
-
-    @F.pandas_udf(T.LongType())
-    def _cnt(col: pd.Series) -> pd.Series:
-        return col.map(
-            lambda t: None if t is None else len(mk(t))
-        ).astype("Int64")
-
-    return df.withColumn(out_col, _cnt(F.col(text_col)))
-
-
-def _id_to_piece(model: dict) -> "dict[int, str | int]":
-    """id → piece string, or the raw byte VALUE (int) for the 256
-    fallback ids — decode assembles byte runs into UTF-8."""
-    out: "dict[int, str | int]" = {i: i for i in range(256)}
+def _id_to_bytes_unigram(model: dict) -> "dict[int, bytes]":
+    """id → bytes decode table: the 256 fallback ids are raw byte
+    values, pieces their UTF-8 — byte-fallback runs reassemble into
+    characters on decode."""
+    out = {i: bytes([i]) for i in range(256)}
     for p, i in model["vocab"].items():
         if i >= 256:
-            out[i] = p
+            out[i] = p.encode("utf-8")
     return out
 
 
-def _decode_unigram_ids(table: dict, ids) -> "str | None":
-    if ids is None:
-        return None
-    parts: "list[str]" = []
-    buf = bytearray()
-    for i in ids:
-        v = table[int(i)]
-        if isinstance(v, int):
-            buf.append(v)
-        else:
-            if buf:
-                parts.append(buf.decode("utf-8", errors="replace"))
-                buf.clear()
-            parts.append(v)
-    if buf:
-        parts.append(buf.decode("utf-8", errors="replace"))
-    return "".join(parts)
-
-
-def unigram_decode(
-    df: DataFrame,
-    model: dict,
-    ids_col: str = "token_ids",
-    out_col: str = "decoded",
-) -> DataFrame:
-    """Invert :func:`unigram_encode`: piece ids emit their literal
-    string, byte-fallback runs reassemble to UTF-8 — so
-    ``decode(encode(x)) == x`` exactly (pre-tokenization is an exact
-    partition and every character either has a piece or round-trips
-    through its own bytes). NULL in → NULL out."""
-    table = _id_to_piece(model)
-
-    @F.pandas_udf(T.StringType())
-    def _dec(col: pd.Series) -> pd.Series:
-        return col.map(lambda ids: _decode_unigram_ids(table, ids))
-
-    return df.withColumn(out_col, _dec(F.col(ids_col)))
-
-
-def encode_text_unigram(model: dict, text: str) -> "list[int]":
-    """Driver-side single-string encode (tests, spot checks)."""
-    return _unigram_encoder(model)(text)
-
-
-def decode_ids_unigram(model: dict, ids: "list[int]") -> str:
-    """Driver-side single-list decode."""
-    return _decode_unigram_ids(_id_to_piece(model), ids)
+#: the tokenizer core's encode / count / decode restricted to unigram
+#: models: piece ids emit their literal string and byte-fallback runs
+#: reassemble to UTF-8, so ``decode(encode(x)) == x`` exactly
+#: (pre-tokenization is an exact partition and every character either
+#: has a piece or round-trips through its own bytes)
+unigram_encode = _for_family("unigram", _encode)
+unigram_token_count = _for_family("unigram", _token_count)
+unigram_decode = _for_family("unigram", _decode)
+encode_text_unigram = _for_family("unigram", encode_text)
+decode_ids_unigram = _for_family("unigram", decode_ids)
 
 
 # ---------------------------------------------------------------------------
@@ -573,8 +449,7 @@ def save_unigram(model: dict, path: str) -> None:
     may legitimately contain a space or tab (pre-tokens carry their
     leading space, the raw analogue of BPE's Ġ). Paths may be URIs
     — the same pyarrow.fs routing as save_bpe."""
-    if model.get("type") != "unigram":
-        raise ValueError("save_unigram expects a unigram model")
+    _require_family(model, "unigram")
     flavor = model.get("pretokenizer", "default")
     header = (
         f"#unigram v1 max_piece_length="
@@ -712,11 +587,7 @@ def _sampling_encoder(model: dict, alpha: float, seed: int):
 
     import random as _random
 
-    if model.get("type") != "unigram":
-        raise ValueError(
-            "expected a unigram model (train_unigram/load_unigram "
-            "output with type='unigram')"
-        )
+    _require_family(model, "unigram")
     a = float(alpha)
     if a <= 0.0:
         raise ValueError(
@@ -826,67 +697,12 @@ def unigram_coverage_stats(
     covers everything by construction), which is why this report is
     unigram-family-specific.
 
-    Plan: ONE encode pass feeding two aggregations — the count
-    columns are array expressions over the id array (fallback =
-    ids < 256, map-side combined), and the distinct-piece count
-    explodes the per-doc DISTINCT pieces (bounded by doc-vocab
-    overlap) into a standard partial-distinct countDistinct — never
-    a corpus-scaled aggregation buffer (a collect_list of per-doc
-    arrays would be one). The persist makes the shared encode
-    execute once for both consumers (the dsir pattern; registered
-    with unpersist_caches). NULL texts are dropped;
-    ``fallback_rate`` is NULL for a zero-token group."""
-    from ..cache import track
-
-    enc = unigram_encode(
-        docs.filter(F.col(text_col).isNotNull()), model, text_col,
-        out_col="_ids",
-    )
-    keys = [group_by] if group_by else []
-    proj = track(
-        enc.select(
-            *keys,
-            F.array_size("_ids").alias("_n"),
-            F.size(F.filter("_ids", lambda i: i < 256)).alias("_fb"),
-            F.array_distinct(
-                F.filter("_ids", lambda i: i >= 256)
-            ).alias("_pieces"),
-        ).persist()
-    )
-    counts = proj.groupBy(*keys).agg(
-        F.count("*").alias("n_docs"),
-        F.sum("_n").alias("n_tokens"),
-        F.sum("_fb").alias("n_fallback_tokens"),
-    )
-    pieces = (
-        proj.select(*keys, F.explode("_pieces").alias("_p"))
-        .groupBy(*keys)
-        .agg(
-            F.countDistinct("_p")
-            .cast("long")
-            .alias("n_distinct_pieces_used")
-        )
-    )
-    agg = (
-        counts.join(pieces, on=keys, how="left")
-        if keys
-        else counts.crossJoin(F.broadcast(pieces))
-    )
-    agg = agg.withColumn(
-        "n_distinct_pieces_used",
-        F.coalesce(F.col("n_distinct_pieces_used"), F.lit(0)),
-    )
-    return agg.select(
-        *keys,
-        "n_docs",
-        "n_tokens",
-        "n_fallback_tokens",
-        F.when(
-            F.col("n_tokens") > 0,
-            F.col("n_fallback_tokens").cast("double")
-            / F.col("n_tokens").cast("double"),
-        ).alias("fallback_rate"),
-        "n_distinct_pieces_used",
+    Plan: one persisted encode pass feeding two map-side-combined
+    aggregations (the tokenizer core's coverage card). NULL texts are
+    dropped; ``fallback_rate`` is NULL for a zero-token group."""
+    _require_family(model, "unigram")
+    return _coverage_stats(
+        docs, model, text_col, group_by, lambda i: i < 256, "fallback"
     )
 
 
@@ -925,11 +741,7 @@ def prune_unigram_vocab(
     by the vocab size (map-side combined); the final rank runs
     driver-side over at most |vocab| rows — the train_bpe split.
     """
-    if model.get("type") != "unigram":
-        raise ValueError(
-            "expected a unigram model (train_unigram/load_unigram "
-            "output with type='unigram')"
-        )
+    _require_family(model, "unigram")
     tgt = int(target_vocab_size)
     n_keep = tgt - 256
     if n_keep < 0:
@@ -942,15 +754,7 @@ def prune_unigram_vocab(
     if n_keep >= len(scores) and min_usage <= 0:
         return dict(model)  # nothing to prune
 
-    enc = unigram_encode(df, model, text_col, out_col="_ids")
-    id_counts = {
-        r._id: r._n
-        for r in enc.filter(F.col("_ids").isNotNull())
-        .select(F.explode("_ids").alias("_id"))
-        .groupBy("_id")
-        .agg(F.count("*").alias("_n"))
-        .collect()  # bounded: <= |vocab| rows
-    }
+    id_counts = _id_usage(df, model, text_col)
     by_id = {i: p for p, i in model["vocab"].items() if i >= 256}
     ranked = sorted(
         ((p, id_counts.get(i, 0)) for i, p in by_id.items()),

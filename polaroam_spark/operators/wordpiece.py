@@ -42,15 +42,22 @@ id), so third-party BERT vocabularies load directly.
 """
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from polaroam_spark.operators.tokenize import (
-    _CACHE_CAP,
+    _coverage_stats,
+    _decode,
+    _encode,
+    _for_family,
+    _id_usage,
     _open_model_file,
     _pre_re,
+    _require_family,
+    _token_count,
+    _word_histogram,
+    decode_ids,
+    encode_text,
 )
 
 import re as _re
@@ -95,38 +102,15 @@ def train_wordpiece(
             "1-char prefix collides with the single-character "
             "alphabet forms and makes written forms ambiguous"
         )
-    _pre_re(pretokenizer)  # fail fast on the driver
-    flavor = pretokenizer
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _pretok(col: pd.Series) -> pd.Series:
-        pre = _pre_re(flavor)
-        return col.map(
-            lambda t: None if t is None else pre.findall(t)
-        )
-
-    hist_rows = (
-        df.select(F.explode(_pretok(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .count()
-        .orderBy(F.desc("count"), "w")
-        .limit(int(max_words) + 1)
-        .collect()
+    hist = _word_histogram(
+        df,
+        text_col,
+        max_words,
+        pretokenizer,
+        "train_wordpiece",
+        "merges AND drop tail-only characters from the alphabet "
+        "(their words will encode to UNK)",
     )
-    if len(hist_rows) > int(max_words):
-        import warnings
-
-        warnings.warn(
-            f"train_wordpiece: corpus has more than max_words="
-            f"{int(max_words)} distinct pre-tokens; the frequency "
-            "tail was dropped from the training histogram, which "
-            "can change the learned merges AND drop tail-only "
-            "characters from the alphabet (their words will encode "
-            "to UNK). Raise max_words to train on the full "
-            "vocabulary.",
-            stacklevel=2,
-        )
-        hist_rows = hist_rows[: int(max_words)]
 
     def _syms(word: str) -> "tuple[str, ...]":
         return tuple(
@@ -134,9 +118,9 @@ def train_wordpiece(
         )
 
     words: "dict[tuple[str, ...], int]" = {}
-    for r in hist_rows:
-        s = _syms(r["w"])
-        words[s] = words.get(s, 0) + int(r["count"])
+    for w, c in hist:
+        s = _syms(w)
+        words[s] = words.get(s, 0) + c
 
     import heapq
     from collections import Counter, defaultdict
@@ -288,15 +272,10 @@ def train_wordpiece(
     return out
 
 
-def _wordpiece_encoder(model: dict):
-    """(text -> list[int]) closure — greedy longest-match-first per
-    pre-token with ``##`` continuation lookups and whole-word UNK,
-    per-worker word cache (the _encoder shape)."""
-    if model.get("type") != "wordpiece":
-        raise ValueError(
-            "expected a wordpiece model (train_wordpiece/"
-            "load_wordpiece output with type='wordpiece')"
-        )
+def _wordpiece_segmenter(model: dict):
+    """(pre-token -> ids) for the WordPiece family: greedy
+    longest-match-first with ``##`` continuation lookups and
+    whole-word UNK."""
     vocab = model["vocab"]
     cp = model.get("continuation_prefix", "##")
     ncp = len(cp)
@@ -311,9 +290,6 @@ def _wordpiece_encoder(model: dict):
         ),
         default=1,
     )
-    flavor = model.get("pretokenizer", "default")
-    _pre_re(flavor)  # fail fast on the driver
-    cache: "dict[str, list[int]]" = {}
 
     def _segment(word: str) -> "list[int]":
         n = len(word)
@@ -349,107 +325,35 @@ def _wordpiece_encoder(model: dict):
             i = j
         return ids
 
-    def encode(text: "str | None") -> "list[int] | None":
-        if text is None:
-            return None
-        ids: "list[int]" = []
-        for word in _pre_re(flavor).findall(text):
-            hit = cache.get(word)
-            if hit is None:
-                hit = _segment(word)
-                if len(cache) >= _CACHE_CAP:
-                    cache.clear()
-                cache[word] = hit
-            ids.extend(hit)
-        return ids
-
-    return encode
+    return _segment
 
 
-def wordpiece_encode(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    out_col: str = "token_ids",
-) -> DataFrame:
-    """Append exact WordPiece token ids (``array<int>``) per row —
-    the bpe_encode contract for the third family. NULL in → NULL
-    out."""
-    mk = _wordpiece_encoder(model)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _enc(col: pd.Series) -> pd.Series:
-        return col.map(mk)
-
-    return df.withColumn(out_col, _enc(F.col(text_col)))
-
-
-def wordpiece_token_count(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    out_col: str = "n_tokens",
-) -> DataFrame:
-    """Append the EXACT WordPiece token count (``long``) per row.
-    NULL in → NULL out."""
-    mk = _wordpiece_encoder(model)
-
-    @F.pandas_udf(T.LongType())
-    def _cnt(col: pd.Series) -> pd.Series:
-        return col.map(
-            lambda t: None if t is None else len(mk(t))
-        ).astype("Int64")
-
-    return df.withColumn(out_col, _cnt(F.col(text_col)))
-
-
-def _id_to_text(model: dict) -> "dict[int, str]":
-    """id → emitted text: continuation pieces drop the prefix; the
+def _id_to_bytes_wordpiece(model: dict) -> "dict[int, bytes]":
+    """id → emitted UTF-8: continuation pieces drop the prefix; the
     UNK id emits the UNK token literally (an UNK'd word is the one
     place the family is lossy, by design)."""
     cp = model.get("continuation_prefix", "##")
-    out: "dict[int, str]" = {}
+    out: "dict[int, bytes]" = {}
     for t, i in model["vocab"].items():
-        out[int(i)] = t[len(cp):] if t.startswith(cp) else t
+        out[int(i)] = (t[len(cp):] if t.startswith(cp) else t).encode(
+            "utf-8"
+        )
     unk = model.get("unk_token", "[UNK]")
-    out[int(model["vocab"][unk])] = unk
+    out[int(model["vocab"][unk])] = unk.encode("utf-8")
     return out
 
 
-def wordpiece_decode(
-    df: DataFrame,
-    model: dict,
-    ids_col: str = "token_ids",
-    out_col: str = "decoded",
-) -> DataFrame:
-    """Invert :func:`wordpiece_encode`: pieces emit their content
-    (continuation prefix stripped), concatenated in order — the
-    pre-tokenization split keeps whitespace inside pre-tokens, so
-    ``decode(encode(x)) == x`` exactly whenever no word hit UNK
-    (guaranteed on the training corpus with the default
-    ``max_word_chars=None``). NULL in → NULL out."""
-    table = _id_to_text(model)
-
-    @F.pandas_udf(T.StringType())
-    def _dec(col: pd.Series) -> pd.Series:
-        return col.map(
-            lambda ids: None
-            if ids is None
-            else "".join(table[int(i)] for i in ids)
-        )
-
-    return df.withColumn(out_col, _dec(F.col(ids_col)))
-
-
-def encode_text_wordpiece(model: dict, text: str) -> "list[int]":
-    """Driver-side single-string encode (tests, spot checks)."""
-    return _wordpiece_encoder(model)(text)
-
-
-def decode_ids_wordpiece(model: dict, ids: "list[int]") -> str:
-    """Driver-side single-sequence decode (tests, spot checks)."""
-    table = _id_to_text(model)
-    return "".join(table[int(i)] for i in ids)
+#: the tokenizer core's encode / count / decode restricted to
+#: WordPiece models: pieces emit their content (continuation prefix
+#: stripped), concatenated in order — the pre-tokenization split
+#: keeps whitespace inside pre-tokens, so ``decode(encode(x)) == x``
+#: exactly whenever no word hit UNK (guaranteed on the training
+#: corpus with the default ``max_word_chars=None``)
+wordpiece_encode = _for_family("wordpiece", _encode)
+wordpiece_token_count = _for_family("wordpiece", _token_count)
+wordpiece_decode = _for_family("wordpiece", _decode)
+encode_text_wordpiece = _for_family("wordpiece", encode_text)
+decode_ids_wordpiece = _for_family("wordpiece", decode_ids)
 
 
 def _esc_line(t: str) -> str:
@@ -574,65 +478,19 @@ unigram_coverage_stats` twin for the third family, where the escape
     alphabet, whose words then UNK — the trainer's loud warning,
     quantified here per corpus).
 
-    Plan (the unigram twin's exactly): ONE encode pass persisted for
-    two map-side-combined aggregations; distinct pieces explode
-    per-doc DISTINCT ids into a partial-distinct countDistinct,
-    never a corpus-sized buffer. NULL texts are dropped;
-    ``unk_rate`` is NULL for a zero-token group."""
-    from ..cache import track
-
+    Plan (the unigram twin's exactly): one persisted encode pass
+    feeding two map-side-combined aggregations (the tokenizer core's
+    coverage card). NULL texts are dropped; ``unk_rate`` is NULL for
+    a zero-token group."""
+    _require_family(model, "wordpiece")
     unk_id = int(model["vocab"][model.get("unk_token", "[UNK]")])
-    enc = wordpiece_encode(
-        docs.filter(F.col(text_col).isNotNull()), model, text_col,
-        out_col="_ids",
-    )
-    keys = [group_by] if group_by else []
-    proj = track(
-        enc.select(
-            *keys,
-            F.array_size("_ids").alias("_n"),
-            F.size(
-                F.filter("_ids", lambda i: i == F.lit(unk_id))
-            ).alias("_unk"),
-            F.array_distinct(
-                F.filter("_ids", lambda i: i != F.lit(unk_id))
-            ).alias("_pieces"),
-        ).persist()
-    )
-    counts = proj.groupBy(*keys).agg(
-        F.count("*").alias("n_docs"),
-        F.sum("_n").alias("n_tokens"),
-        F.sum("_unk").alias("n_unk_tokens"),
-    )
-    pieces = (
-        proj.select(*keys, F.explode("_pieces").alias("_p"))
-        .groupBy(*keys)
-        .agg(
-            F.countDistinct("_p")
-            .cast("long")
-            .alias("n_distinct_pieces_used")
-        )
-    )
-    agg = (
-        counts.join(pieces, on=keys, how="left")
-        if keys
-        else counts.crossJoin(F.broadcast(pieces))
-    )
-    agg = agg.withColumn(
-        "n_distinct_pieces_used",
-        F.coalesce(F.col("n_distinct_pieces_used"), F.lit(0)),
-    )
-    return agg.select(
-        *keys,
-        "n_docs",
-        "n_tokens",
-        "n_unk_tokens",
-        F.when(
-            F.col("n_tokens") > 0,
-            F.col("n_unk_tokens").cast("double")
-            / F.col("n_tokens").cast("double"),
-        ).alias("unk_rate"),
-        "n_distinct_pieces_used",
+    return _coverage_stats(
+        docs,
+        model,
+        text_col,
+        group_by,
+        lambda i: i == F.lit(unk_id),
+        "unk",
     )
 
 
@@ -683,11 +541,7 @@ def prune_wordpiece_vocab(
     shape: one distributed encode pass + an id-count aggregation
     bounded by vocab size — the train_bpe driver split.
     """
-    if model.get("type") != "wordpiece":
-        raise ValueError(
-            "expected a wordpiece model (train_wordpiece/"
-            "load_wordpiece output with type='wordpiece')"
-        )
+    _require_family(model, "wordpiece")
     vocab: "dict[str, int]" = model["vocab"]
     cp = model.get("continuation_prefix", "##")
     unk = model.get("unk_token", "[UNK]")
@@ -722,15 +576,7 @@ def prune_wordpiece_vocab(
     if len(vocab) <= tgt and int(min_usage) <= 0:
         return dict(model)  # nothing to prune
 
-    enc = wordpiece_encode(df, model, text_col, out_col="_ids")
-    id_counts = {
-        r._id: r._n
-        for r in enc.filter(F.col("_ids").isNotNull())
-        .select(F.explode("_ids").alias("_id"))
-        .groupBy("_id")
-        .agg(F.count("*").alias("_n"))
-        .collect()  # bounded: <= |vocab| rows
-    }
+    id_counts = _id_usage(df, model, text_col)
     prunable = sorted(
         (
             (t, id_counts.get(i, 0), i)

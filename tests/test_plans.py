@@ -951,3 +951,33 @@ def test_topk_windows_rank_projected_candidates(spark):
         )
         assert win is not None, plan
         assert int(win.group(1)) == 3, plan
+
+
+def test_grouped_map_plans_infer_eval_type(spark):
+    """The three applyInPandas grouped maps (token-stream packing, SFT
+    packing, best-fit packing plan) type-hint every parameter, so
+    PySpark infers the grouped-map eval type from the hints instead of
+    warning "Cannot infer the eval type" on every plan build."""
+    import warnings
+
+    from polaroam_spark.operators.chunking import packing_plan_bestfit
+    from polaroam_spark.operators.sft import pack_sft_sequences
+    from polaroam_spark.operators.tokenize import pack_token_stream
+
+    ids = spark.createDataFrame(
+        [(0, [1, 2, 3], [0, 1, 1])],
+        "doc_id long, token_ids array<int>, loss_mask array<int>",
+    )
+    chunks = spark.createDataFrame(
+        [(0, 0, 5)], "doc_id long, chunk_id long, n_tokens long"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        pack_token_stream(
+            ids, None, seq_len=2, ids_col="token_ids", num_shards=2
+        )
+        pack_sft_sequences(ids, seq_len=2, num_shards=2)
+        packing_plan_bestfit(chunks, budget_tokens=8, num_shards=2)
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]

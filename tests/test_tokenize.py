@@ -447,19 +447,40 @@ def test_pack_token_stream_semantics(spark, model):
         pack_token_stream(docs, model, seq_len=0)
 
 
-def test_histogram_cap_warns_loudly(corpus):
+@pytest.mark.parametrize(
+    "trainer, vocab_size",
+    [
+        ("train_bpe", 280),
+        ("train_unigram", 256 + 200),
+        ("train_wordpiece", 400),
+    ],
+    ids=["train_bpe", "train_unigram", "train_wordpiece"],
+)
+def test_histogram_cap_warns_loudly(corpus, trainer, vocab_size):
     """r13 hardening: truncating the training histogram silently
-    changes the learned merges — the cap must WARN. No warning when
-    the vocabulary fits."""
+    changes what a trainer learns — the cap must WARN, naming the
+    trainer, with the warning attributed to the trainer's caller.
+    No warning when the vocabulary fits."""
     import warnings
 
-    with pytest.warns(UserWarning, match="max_words"):
-        capped = train_bpe(corpus, "text", vocab_size=280, max_words=10)
-    assert 0 < len(capped["merges"]) <= 24
+    from polaroam_spark.operators import tokenize, unigram, wordpiece
+
+    train = {
+        "train_bpe": tokenize.train_bpe,
+        "train_unigram": unigram.train_unigram,
+        "train_wordpiece": wordpiece.train_wordpiece,
+    }[trainer]
+    with pytest.warns(UserWarning, match=f"{trainer}: .*max_words") as rec:
+        capped = train(corpus, "text", vocab_size=vocab_size, max_words=10)
+    assert [w.filename for w in rec if "max_words" in str(w.message)] == [
+        __file__
+    ]
+    if trainer == "train_bpe":
+        assert 0 < len(capped["merges"]) <= 24
 
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        train_bpe(corpus, "text", vocab_size=260, max_words=1_000_000)
+        train(corpus, "text", vocab_size=vocab_size, max_words=1_000_000)
     assert not [
         w for w in caught if "max_words" in str(w.message)
     ]

@@ -236,7 +236,7 @@ def test_bad_inputs(spark, docs):
     """Loud failures: undersized vocab names the floor; 1-char
     continuation prefix rejected; wrong model type rejected."""
     from polaroam_spark.operators.wordpiece import (
-        _wordpiece_encoder,
+        encode_text_wordpiece,
         train_wordpiece,
     )
 
@@ -245,7 +245,7 @@ def test_bad_inputs(spark, docs):
     with pytest.raises(ValueError, match="at least 2 chars"):
         train_wordpiece(docs, continuation_prefix="_")
     with pytest.raises(ValueError, match="wordpiece"):
-        _wordpiece_encoder({"type": "unigram", "vocab": {}})
+        encode_text_wordpiece({"type": "unigram", "vocab": {}}, "x")
 
 
 def test_coverage_stats(spark, docs, model):

@@ -1,7 +1,10 @@
 """Capture .explain('formatted') for every bench query into
 plans/r20/<query>_<suffix>.txt.
 
-Usage: python tools/plan_capture_r20.py <suffix> [query ...]
+Usage: python tools/plan_capture.py <suffix> [query ...]
+
+The output directory defaults to plans/r20 (the plan set the repo
+keeps); set PLAN_OUT_DIR to write elsewhere.
 
 Mirrors bench.py's query construction (same operators, same params)
 but dumps the physical plan instead of executing the noop sink.

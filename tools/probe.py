@@ -1,7 +1,7 @@
-"""Isolated per-query timing probe: reuse plan_capture_r20's
-builders, time the noop sink N times for the named queries only.
+"""Isolated per-query timing probe: reuse plan_capture's builders,
+time the noop sink N times for the named queries only.
 
-Usage: python tools/probe_r20.py <runs> <query> [query...]
+Usage: python tools/probe.py <runs> <query> [query...]
 """
 import os
 import sys
@@ -21,16 +21,15 @@ spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as em  # noqa: F401
 
-# import builders from plan_capture_r20 without executing its capture
-# loop: exec the file up to the capture loop and take its builders
-# dict (the ADVICE r19 fix: point at the sibling that actually
-# exists, and no dead env vars)
+# import builders from the sibling plan_capture.py without executing
+# its capture loop: exec the file up to the capture loop and take its
+# builders dict
 import importlib.util
 
 spec = importlib.util.spec_from_file_location(
     "plan_capture_mod",
     os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "plan_capture_r20.py"
+        os.path.dirname(os.path.abspath(__file__)), "plan_capture.py"
     ),
 )
 
@@ -40,7 +39,7 @@ def load_builders():
     cut = src.index("os.makedirs(OUT_DIR")
     g = {"__file__": spec.origin, "__name__": "plan_capture_mod"}
     import sys as _s
-    _s.argv = ["plan_capture_r20.py", "probe"]
+    _s.argv = ["plan_capture.py", "probe"]
     exec(src[:cut], g)
     return g["builders"]
 
