@@ -90,17 +90,16 @@ def cmd_cluster(args) -> None:
     )
 
     spark = _spark(args)
-    med = spark.read.parquet(args.input)
-    if args.distributed:
-        labeled = cluster_stops_dbscan_distributed(
-            med, r2=args.r2,
-            min_spacial_resolution=args.min_spacial_resolution,
-        )
-    else:
-        labeled = cluster_stops_dbscan(
-            med, r2=args.r2,
-            min_spacial_resolution=args.min_spacial_resolution,
-        )
+    cluster = (
+        cluster_stops_dbscan_distributed
+        if args.distributed
+        else cluster_stops_dbscan
+    )
+    labeled = cluster(
+        spark.read.parquet(args.input),
+        r2=args.r2,
+        min_spacial_resolution=args.min_spacial_resolution,
+    )
     attach_medoids(labeled).write.mode("overwrite").parquet(args.output)
 
 

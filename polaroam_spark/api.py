@@ -56,6 +56,12 @@ class StopDetect:
         distributed_clustering: bool = False,
         tiebreaker: str | None = None,
     ) -> None:
+        if distributed_clustering and distance_metric != "haversine":
+            raise ValueError(
+                "distributed_clustering is haversine-only (its grid join"
+                " sizes cells in degrees from a metre radius); got"
+                f" distance_metric={distance_metric!r}"
+            )
         self._r1 = r1
         self._r2 = r2
         self._label_singleton = label_singleton
@@ -101,27 +107,19 @@ class StopDetect:
         """Cluster stop medians into stop locations + medoid stats
         (reference models.py:206-265)."""
         self._assert_fitted(self._median_coords)
-        cluster = (
-            cluster_stops_dbscan_distributed
-            if self._distributed
-            else cluster_stops_dbscan
-        )
-        # the distributed grid-join path sizes cells in degrees from a
-        # meter radius — haversine-only by construction
-        kwargs = (
-            {}
-            if self._distributed
-            else {
-                "min_samples": 2,
-                "distance_metric": self._distance_metric,
-            }
-        )
-        labeled = cluster(
-            self._median_coords,
-            r2=self._r2,
-            min_spacial_resolution=self._min_spacial_resolution,
-            **kwargs,
-        )
+        if self._distributed:
+            labeled = cluster_stops_dbscan_distributed(
+                self._median_coords,
+                r2=self._r2,
+                min_spacial_resolution=self._min_spacial_resolution,
+            )
+        else:
+            labeled = cluster_stops_dbscan(
+                self._median_coords,
+                r2=self._r2,
+                min_spacial_resolution=self._min_spacial_resolution,
+                distance_metric=self._distance_metric,
+            )
         self._stop_labels = attach_medoids(labeled)
         return self._stop_labels
 

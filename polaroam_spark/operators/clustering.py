@@ -1,28 +1,30 @@
 """Spatial clustering of stop medians into stop locations.
 
-Two code paths behind one API (SURVEY.md §2h, §7 phase 2):
+One per-user clustering core (SURVEY.md §2h, §7 phase 2): every family
+keys a stop median to a graph node by its (optionally grid-snapped,
+reference models.py:60-87) coordinates (``_node_key``), reads one
+node table of unique nodes + visit counts per uid (``_node_table``)
+and joins node labels back to member rows on (uid, node key)
+(``_join_back`` — the reference realigns by list-collect + explode of
+row indexes, models.py:206-265; the join gives the same rows without
+an ordered-list dependency). The per-user families run one guarded
+Arrow grouped map per uid over the nodes sorted by (lat, lon)
+(``_per_user_map``):
 
-1. **Reference-fidelity path** (``cluster_stops_dbscan``): per-user
-   DBSCAN over the (optionally grid-downsampled) stop medians, run as
-   an Arrow-batched ``applyInPandas`` grouped-map UDF. The reference
-   does the same shape with Polars ``map_groups`` + sklearn DBSCAN
-   (reference models.py:206-265, utils.py:203-215); sklearn is not
-   available here, so the DBSCAN itself is a ~40-line exact numpy
-   implementation (haversine metric, identical label semantics:
-   clusters numbered 0..k-1 in order of first core point, noise=-1).
-   Per-user inputs are stop *medians* — bounded small (hundreds), so
-   the O(n²) per-group distance matrix is cheap and the job is
-   embarrassingly parallel across users.
+1. ``cluster_stops_dbscan``: exact DBSCAN (``dbscan_labels``, numpy —
+   sklearn is not available here; its label semantics: clusters
+   0..k-1 in order of first core point, noise = -1);
+2. ``cluster_communities`` / ``community_invariants`` /
+   ``communities_backend_differential``: Infomap over the weighted
+   per-user ε-graph, its certification and its differential.
 
-2. **Scale path** (``cluster_stops_dbscan_distributed``): for the
-   ``min_samples=2`` case (the reference's default), DBSCAN is exactly
-   connected components of the ε-neighbor graph. We build candidate
-   edges with a grid-cell self-join (cell size = ε, join on the 9
-   neighboring cells — a range-join analogue of the reference's
-   BallTree ``query_radius``, utils.py:32-65) and resolve components
-   with alternating large-star/small-star contraction
-   (operators/graph.py, O(log n) rounds). No cross join anywhere;
-   survives data that does NOT fit per-group.
+The scale path ``cluster_stops_dbscan_distributed`` (``min_samples=2``,
+the reference's default, where DBSCAN is exactly connected components
+of the ε-graph) shares the node key, node table and join-back but no
+per-user group: candidate edges come from a grid-cell self-join on the
+9 neighbouring cells (a range-join analogue of the reference's BallTree
+``query_radius``, utils.py:32-65) and components from large-star/
+small-star contraction (operators/graph.py, O(log n) rounds).
 
 Medoid stats (``cluster_medoids``) are plain groupBy aggregates — the
 reference wraps them in a per-group Python callback
@@ -38,7 +40,7 @@ import warnings
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -56,17 +58,182 @@ from polaroam_spark.functions.distance import (
 )
 from polaroam_spark.session import materialize
 
-def _dbscan_schema(df: DataFrame) -> StructType:
-    """Output schema with the uid field typed as in the input — uids
-    may be strings or hashed longs (sources/io.py:hash_uid)."""
-    return StructType(
-        [
-            df.schema["uid"],
-            StructField("latitude", DoubleType()),
-            StructField("longitude", DoubleType()),
-            StructField("stop_locations", LongType()),
-        ]
+#: Unique nodes one user may have on the per-user paths: each builds
+#: an O(n²) distance matrix, and 20k nodes is ~3.2 GB of doubles.
+#: Beyond that a task would silently eat executor memory, so the
+#: per-user map fails loudly and names the remedies instead.
+_MAX_USER_NODES = 20_000
+#: Star-contraction rounds of the distributed path. Each round at
+#: least halves component-tree height, so 50 covers any physically
+#: possible ε-chain and hitting it means an engine bug, not long input.
+_MAX_STAR_ROUNDS = 50
+#: A hot cell of the distributed path is snapped to a grid this many
+#: times finer than ε per axis (~3 m at ε = 25 m, far inside GPS noise).
+_HOT_CELL_SUBDIVISIONS = 8
+
+_COORD_FIELDS = (
+    StructField("latitude", DoubleType()),
+    StructField("longitude", DoubleType()),
+)
+
+
+def _uid_schema(df: DataFrame, *fields: StructField) -> StructType:
+    """Grouped-map output schema: the uid field typed as in the input
+    (uids may be strings or hashed longs, sources/io.py:hash_uid),
+    then ``fields``."""
+    return StructType([df.schema["uid"], *fields])
+
+
+def _metric(distance_metric: str) -> str:
+    metric = str(distance_metric)
+    if metric not in ("haversine", "euclidean"):
+        raise ValueError(f"Unsupported distance metric: {metric}")
+    return metric
+
+
+def _trials(num_trials: int) -> int:
+    trials = int(num_trials)
+    if trials < 1:
+        raise ValueError(
+            f"num_trials must be >= 1 (got {num_trials}): zero trials"
+            " would select no partition at all"
+        )
+    return trials
+
+
+def _node_key(min_spacial_resolution: float) -> "tuple[Column, Column]":
+    """How a stop median becomes a graph node: its coordinates,
+    snapped to the ``min_spacial_resolution`` grid when that is > 0
+    (reference models.py:60-87)."""
+    if min_spacial_resolution > 0:
+        return (
+            grid_snap("latitude", min_spacial_resolution),
+            grid_snap("longitude", min_spacial_resolution),
+        )
+    return F.col("latitude"), F.col("longitude")
+
+
+def _node_table(
+    medians: DataFrame,
+    min_spacial_resolution: float,
+    per_user: bool = True,
+) -> DataFrame:
+    """One row per (uid, node key ``latitude, longitude``) with its
+    visit multiplicity ``n_members`` (the reference's ``count``,
+    models.py:60-87); callers that drop it let column pruning remove it.
+
+    ``per_user`` pins the table to ONE exchange, a keyed repartition on
+    uid (r19, guide §2.2/§2.4) that satisfies both the aggregation and
+    the grouped map's ``groupBy("uid")``. AQE's bytes-based coalescing
+    is the wrong adaptivity for the compute-bound Python stage above:
+    it coalesced the tiny node table to ONE partition, so the per-user
+    sweep ran serially in one worker (~4.5 s of the DBSCAN row's ~6 s).
+    A keyed repartition is exempt, and its count scales with the
+    session. The distributed path passes ``per_user=False``: a uid-only
+    key would put one huge user into one task."""
+    glat, glon = _node_key(min_spacial_resolution)
+    nodes = medians.select(
+        "uid", glat.alias("latitude"), glon.alias("longitude")
     )
+    if per_user:
+        sess = medians.sparkSession
+        n_py = max(
+            sess.sparkContext.defaultParallelism,
+            int(sess.conf.get("spark.sql.shuffle.partitions")),
+        )
+        nodes = nodes.repartition(n_py, "uid")
+    return nodes.groupBy("uid", "latitude", "longitude").agg(
+        F.count("*").alias("n_members")
+    )
+
+
+def _per_user_map(nodes: DataFrame, fn, *fields: StructField) -> DataFrame:
+    """Run ``fn`` on each user's nodes as one Arrow grouped map with
+    output schema ``uid, *fields``. ``fn`` sees the nodes sorted by
+    (lat, lon) — a deterministic order whatever the shuffle arrival
+    order — and never more than ``_MAX_USER_NODES`` of them."""
+
+    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(pdf) > _MAX_USER_NODES:
+            raise ValueError(
+                f"user {pdf['uid'].iloc[0]!r} has {len(pdf)} unique stop"
+                f" coordinates (> {_MAX_USER_NODES}); the per-user"
+                " clustering paths build an O(n^2) distance matrix."
+                " Raise min_spacial_resolution to downsample first, or"
+                " (DBSCAN, min_samples=2) use"
+                " cluster_stops_dbscan_distributed."
+            )
+        return fn(pdf.sort_values(["latitude", "longitude"], kind="mergesort"))
+
+    _run.__name__ = fn.__name__  # the family's name in plans and the UI
+    return nodes.groupBy("uid").applyInPandas(
+        _run, schema=_uid_schema(nodes, *fields)
+    )
+
+
+def _join_back(
+    medians: DataFrame, labeled: DataFrame, min_spacial_resolution: float
+) -> DataFrame:
+    """Give every member row its node's labels: left join of
+    ``labeled`` (``uid, latitude, longitude`` = node key, then label
+    columns) on the rows' own node key. Output: ``uid``, then the
+    other columns of ``medians`` in their order, then the labels."""
+    glat, glon = _node_key(min_spacial_resolution)
+    return (
+        medians.withColumns({"_glat": glat, "_glon": glon})
+        .join(
+            labeled.withColumnsRenamed(
+                {"latitude": "_glat", "longitude": "_glon"}
+            ),
+            on=["uid", "_glat", "_glon"],
+            how="left",
+        )
+        .drop("_glat", "_glon")
+    )
+
+
+def _label_nodes(
+    medians: DataFrame,
+    min_spacial_resolution: float,
+    label_col: str,
+    label_fn,
+    need_counts: bool = True,
+) -> DataFrame:
+    """The labelling families' one shape: node table → per-user map
+    labelling each node with ``label_fn(sorted nodes)`` (a long array)
+    → join-back onto ``medians``."""
+    nodes = _node_table(medians, min_spacial_resolution)
+    if not need_counts:
+        nodes = nodes.drop("n_members")
+
+    def _labels(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf[["uid", "latitude", "longitude"]].assign(
+            **{label_col: label_fn(pdf)}
+        )
+
+    _labels.__name__ = label_fn.__name__
+    labeled = _per_user_map(
+        nodes, _labels, *_COORD_FIELDS, StructField(label_col, LongType())
+    )
+    return _join_back(medians, labeled, min_spacial_resolution)
+
+
+def _components(n: int, edges) -> np.ndarray:
+    """Connected components by union-find: each node's label is the
+    smallest node id of its component."""
+    parent = np.arange(n, dtype=np.int64)
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = int(parent[x])
+        return x
+
+    for a, b in edges:
+        ra, rb = find(int(a)), find(int(b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return np.array([find(i) for i in range(n)], dtype=np.int64)
 
 
 def _haversine_matrix_m(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
@@ -151,101 +318,32 @@ def cluster_stops_dbscan(
     Mirrors ``Stopdetect.compute_dbscan`` (reference models.py:206-265):
     optional grid downsample (reference models.py:60-87), per-user
     DBSCAN over the unique coordinates, labels joined back to every
-    member row. The reference realigns labels by list-collect + explode
-    of row indexes; we join back on the (uid, snapped-coord) key
-    instead — same result, no ordered-list dependency, and the join is
-    a broadcast-friendly equi-join.
+    member row on the (uid, snapped-coord) key (see the module
+    docstring).
 
     Input: ``stop_medians`` output (uid, stop_events, latitude,
     longitude, start_timestamp, end_timestamp). Output: input columns
     + ``stop_locations`` (long, -1 = noise; ids unique per uid only,
     reference quirk SURVEY.md §2i).
     """
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
-    with_cells = medians.withColumns(
-        {"_glat": glat, "_glon": glon}
-    )
-
-    # Pin the Python stage's parallelism (r19 optimization round,
-    # guide §2.2/§2.4): AQE's bytes-based partition coalescing is the
-    # wrong adaptivity for a compute-bound applyInPandas stage — the
-    # per-user coordinate table is a few hundred KB at bench scale,
-    # so AQE coalesced the groupBy exchange to ONE partition and the
-    # whole per-user DBSCAN sweep ran serially in a single Python
-    # worker (measured: ~4.5s of the row's ~6s). An explicit keyed
-    # repartition is exempt from AQE coalescing, and because uid is a
-    # subset of both downstream keys it satisfies dropDuplicates AND
-    # groupBy — still exactly ONE exchange. The count scales with the
-    # session (cores locally, cluster-wide parallelism on a real
-    # deployment), never a constant.
-    sess = medians.sparkSession
-    n_py = max(
-        sess.sparkContext.defaultParallelism,
-        int(sess.conf.get("spark.sql.shuffle.partitions")),
-    )
-    unique_coords = (
-        with_cells.select("uid", F.col("_glat").alias("latitude"), F.col("_glon").alias("longitude"))
-        .repartition(n_py, "uid")
-        .dropDuplicates(["uid", "latitude", "longitude"])
-    )
-
     eps = float(r2)
     msamp = int(min_samples)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
+    metric = _metric(distance_metric)
 
-    # O(n^2) distance matrix per user: 20k points ~= 3.2 GB of doubles.
-    # Beyond that the task would silently eat executor memory — fail
-    # loudly and point at the remedies instead.
-    max_group = 20_000
-
-    def _cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_group:
-            raise ValueError(
-                f"user {pdf['uid'].iloc[0]!r} has {len(pdf)} unique stop"
-                f" coordinates (> {max_group}); the per-user DBSCAN path"
-                " builds an O(n^2) distance matrix. Use"
-                " cluster_stops_dbscan_distributed, or raise"
-                " min_spacial_resolution to downsample first."
-            )
-        # Deterministic input order regardless of shuffle arrival order.
-        pdf = pdf.sort_values(["latitude", "longitude"], kind="mergesort")
-        labels = dbscan_labels(
+    def _cluster(pdf: pd.DataFrame) -> np.ndarray:
+        return dbscan_labels(
             pdf["latitude"].to_numpy(),
             pdf["longitude"].to_numpy(),
             eps_m=eps,
             min_samples=msamp,
             distance_metric=metric,
         )
-        return pd.DataFrame(
-            {
-                "uid": pdf["uid"].to_numpy(),
-                "latitude": pdf["latitude"].to_numpy(),
-                "longitude": pdf["longitude"].to_numpy(),
-                "stop_locations": labels,
-            }
-        )
 
-    labeled_coords = unique_coords.groupBy("uid").applyInPandas(
-        _cluster, schema=_dbscan_schema(unique_coords)
+    # DBSCAN ignores visit multiplicity
+    return _label_nodes(
+        medians, min_spacial_resolution, "stop_locations", _cluster,
+        need_counts=False,
     )
-
-    out = (
-        with_cells.join(
-            labeled_coords.withColumnsRenamed(
-                {"latitude": "_glat", "longitude": "_glon"}
-            ),
-            on=["uid", "_glat", "_glon"],
-            how="left",
-        )
-        .drop("_glat", "_glon")
-    )
-    return out
 
 
 def cluster_medoids(labeled: DataFrame) -> DataFrame:
@@ -270,33 +368,7 @@ def cluster_medoids(labeled: DataFrame) -> DataFrame:
     )
 
 
-def _snapped_unique_nodes(
-    medians: DataFrame, min_spacial_resolution: float
-) -> DataFrame:
-    """Node construction SHARED by :func:`cluster_communities` and
-    :func:`community_invariants`: unique (optionally grid-snapped)
-    coordinates per uid with visit multiplicity. Single source on
-    purpose — the m3c certification gate must check the same graph
-    production computes, and a drift between two hand-maintained
-    copies of this aggregation would silently desynchronize them
-    (see _user_eps_graph's bit-identical contract)."""
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
-    return (
-        medians.withColumns({"_glat": glat, "_glon": glon})
-        .groupBy(
-            "uid",
-            F.col("_glat").alias("latitude"),
-            F.col("_glon").alias("longitude"),
-        )
-        .agg(F.count("*").alias("n_members"))
-    )
-
-
-def attach_medoids(labeled: DataFrame, broadcast: bool = True) -> DataFrame:
+def attach_medoids(labeled: DataFrame) -> DataFrame:
     """Attach medoid stats to member rows (reference models.py:263) —
     column-for-column the old aggregate+join-back output (keys first,
     then member columns, then the three stats), row values identical
@@ -310,10 +382,8 @@ def attach_medoids(labeled: DataFrame, broadcast: bool = True) -> DataFrame:
     lineage under it) executed TWICE per action (2 FlatMapGroupsInPandas
     nodes on the r19 bench plan; guide §2.4 — two operations keyed the
     same way share one exchange). Now: one exchange on the cluster
-    key, zero joins, the member side never recomputes. ``broadcast``
-    is retained for API compatibility but no longer consulted — there
-    is no longer a join side to broadcast, which also removes the old
-    national-scale broadcast-limit caveat.
+    key, zero joins, the member side never recomputes, and there is no
+    join side to broadcast (no national-scale broadcast limit).
     """
     member_cols = [
         c for c in labeled.columns
@@ -355,9 +425,7 @@ def cluster_stops_dbscan_distributed(
     medians: DataFrame,
     r2: float = 10.0,
     min_spacial_resolution: float = 0.0,
-    max_iterations: int = 50,
     max_cell_points: "int | None" = 2000,
-    hot_cell_subdivisions: int = 8,
 ) -> DataFrame:
     """Scale-path DBSCAN for ``min_samples=2``: connected components of
     the ε-graph (exact equivalence — every point with a neighbor within
@@ -373,10 +441,7 @@ def cluster_stops_dbscan_distributed(
       4. connected components of the undirected edge set via
          alternating large-star/small-star contraction
          (operators/graph.py) — O(log n) rounds of two bucket-keyed
-         shuffles each; ``max_iterations`` bounds STAR ROUNDS (each
-         at least halves component-tree height), not ε-hops, so the
-         default 50 covers any physically possible chain and hitting
-         it means an engine bug, not long input.
+         shuffles each, at most ``_MAX_STAR_ROUNDS``.
 
     Labels are re-densified per uid (0..k-1 by first appearance in
     (lat, lon) order) to match the per-user labeling contract;
@@ -388,14 +453,13 @@ def cluster_stops_dbscan_distributed(
     super-linear from shuffle spill past ~8k points in one cell.
     When any (uid, cell) exceeds ``max_cell_points`` unique
     coordinates, the members of THAT CELL ONLY are snapped to a
-    ``cell/hot_cell_subdivisions`` sub-grid before pair generation
-    (bounding the cell at ~subdivisions² unique coordinates, e.g. 64
-    for the default 8) and original coordinates are labeled through
-    a join-back on the snapped key — the same lossy contract as
-    ``min_spacial_resolution``, applied automatically, only where
-    needed, and LOUDLY (a ``UserWarning`` names the hot-cell count
-    and the effective resolution). For ε = 25 m the default sub-grid
-    merges points within ~3 m, far inside GPS noise. Cells below the
+    ``cell/_HOT_CELL_SUBDIVISIONS`` sub-grid before pair generation
+    (bounding the cell at ~64 unique coordinates) and original
+    coordinates are labeled through a join-back on the snapped key —
+    the same lossy contract as ``min_spacial_resolution``, applied
+    automatically, only where needed, and LOUDLY (a ``UserWarning``
+    names the hot-cell count and the effective resolution). For
+    ε = 25 m the sub-grid merges points within ~3 m. Cells below the
     threshold are untouched, so results are bit-identical to the
     exact path whenever no cell is hot (the c3b gate's case at every
     test SF). Pass ``max_cell_points=None`` to forbid degrading and
@@ -410,12 +474,6 @@ def cluster_stops_dbscan_distributed(
     # never lose pairs.
     cell_deg = math.degrees(float(r2) / EARTH_RADIUS_M)
 
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
-
     # Persist the snapped point table FIRST, then take the latitude
     # bound from it: the bound must be a plan-build-time scalar (cell
     # geometry depends on it), and deriving it from the persisted
@@ -425,11 +483,9 @@ def cluster_stops_dbscan_distributed(
     # uses — grid_snap can round an extreme point polewards, and a
     # bound from raw latitudes would make lon_cell_deg fractionally
     # too small to guarantee 3x3 coverage at that snapped latitude.
-    base = (
-        medians.withColumns({"_glat": glat, "_glon": glon})
-        .select("uid", F.col("_glat").alias("latitude"), F.col("_glon").alias("longitude"))
-        .dropDuplicates(["uid", "latitude", "longitude"])
-    )
+    base = _node_table(
+        medians, min_spacial_resolution, per_user=False
+    ).drop("n_members")
     base = base.persist()
     max_abs_lat = (
         base.agg(F.max(F.abs(F.col("latitude")))).first()[0] or 0.0
@@ -464,7 +520,7 @@ def cluster_stops_dbscan_distributed(
         )
         n_hot = hot.count()  # one cheap job over the persisted base
         if n_hot:
-            s = max(int(hot_cell_subdivisions), 2)
+            s = _HOT_CELL_SUBDIVISIONS
             fine_lat = cell_deg / s
             fine_lon = lon_cell_deg / s
             warnings.warn(
@@ -593,7 +649,7 @@ def cluster_stops_dbscan_distributed(
         src="pid_a",
         dst="pid_b",
         key_cols=["uid"],
-        max_rounds=max_iterations,
+        max_rounds=_MAX_STAR_ROUNDS,
     ).select(
         "uid",
         F.col("node").alias("point_id"),
@@ -642,35 +698,17 @@ def cluster_stops_dbscan_distributed(
     # would recompute the expensive cell-replication join from scratch
     labeled_pts = materialize(labeled_pts)
 
-    if min_spacial_resolution > 0:
-        out = medians.withColumns({"_glat": glat, "_glon": glon}).join(
-            labeled_pts.withColumnsRenamed(
-                {"latitude": "_glat", "longitude": "_glon"}
-            ),
-            on=["uid", "_glat", "_glon"],
-            how="left",
-        ).drop("_glat", "_glon")
-    else:
-        out = medians.join(
-            labeled_pts, on=["uid", "latitude", "longitude"], how="left"
-        )
+    out = _join_back(medians, labeled_pts, min_spacial_resolution)
+    if not min_spacial_resolution > 0:
+        # this path's output contract: unsnapped coordinates lead
+        key = ["uid", "latitude", "longitude"]
+        out = out.select(*key, *[c for c in out.columns if c not in key])
     base.unpersist()
     if key_map is not None:
         key_map.unpersist()
     pts0.unpersist()
     edges.unpersist()
     return out
-
-
-def _hull_schema(df: DataFrame) -> StructType:
-    return StructType(
-        [
-            df.schema["uid"],
-            StructField("vertex_order", LongType()),
-            StructField("latitude", DoubleType()),
-            StructField("longitude", DoubleType()),
-        ]
-    )
 
 
 def _monotone_chain(points: np.ndarray) -> np.ndarray:
@@ -739,7 +777,12 @@ def convex_hull(
     return (
         df.select("uid", "latitude", "longitude")
         .groupBy("uid")
-        .applyInPandas(_hull, schema=_hull_schema(df))
+        .applyInPandas(
+            _hull,
+            schema=_uid_schema(
+                df, StructField("vertex_order", LongType()), *_COORD_FIELDS
+            ),
+        )
     )
 
 
@@ -1256,11 +1299,7 @@ def two_level_infomap(
       undirected, where visit rates are degree-proportional and
       teleportation drops out of the two-level map equation.
     """
-    if int(num_trials) < 1:
-        raise ValueError(
-            f"num_trials must be >= 1 (got {num_trials}): zero trials"
-            " would select no partition at all"
-        )
+    num_trials = _trials(num_trials)
     labels = np.arange(n, dtype=np.int64)
     if n == 0 or len(edges) == 0:
         return labels
@@ -1285,7 +1324,7 @@ def two_level_infomap(
     # deterministic base order + fine-tune/eject refinement, which
     # carries most of the quality) always runs.
     eff_trials = max(
-        1, min(int(num_trials), 1_600_000 // max(len(edges), 1))
+        1, min(num_trials, 1_600_000 // max(len(edges), 1))
     )
     best, best_len = None, 0.0
     for t in range(eff_trials):
@@ -1299,21 +1338,7 @@ def two_level_infomap(
     # PAIRWISE module merge improves (only the k-way collapse does).
     # The component partition is a single O(m) candidate — score it
     # like a trial; keep it only when strictly better.
-    comp = np.arange(n, dtype=np.int64)
-    for i, d in enumerate(adj):
-        for j in d:
-            ri, rj = int(comp[i]), int(comp[j])
-            while ri != int(comp[ri]):
-                ri = int(comp[ri])
-            while rj != int(comp[rj]):
-                rj = int(comp[rj])
-            if ri != rj:
-                comp[max(ri, rj)] = min(ri, rj)
-    for i in range(n):
-        r = int(comp[i])
-        while r != int(comp[r]):
-            r = int(comp[r])
-        comp[i] = r
+    comp = _components(n, edges)
     val = map_equation_value(n, edges, weights, comp)
     if val < best_len - 1e-12:
         best, best_len = comp, val
@@ -1421,25 +1446,17 @@ def _user_eps_graph(
     metric: str,
     weighted: bool = False,
     w_exp: float = 1.0,
-    max_group: int = 20_000,
 ):
-    """Shared per-user ε-graph construction of the Infomap paths.
+    """Shared per-user ε-graph construction of the Infomap paths, over
+    one user's nodes as ``_per_user_map`` hands them over (sorted).
     :func:`cluster_communities` and its m3c certification
     (:func:`community_invariants`) MUST build bit-identical graphs —
     a drift between them would make the certification gate check a
     different graph than production computes — so both call this one
-    helper. Returns ``(sorted pdf, lat, lon, edges (m,2), weights,
-    connected mask)``; edge weight is max(count_a, count_b), times
-    d^-w_exp when ``weighted`` (reference utils.py:110-121).
+    helper. Returns ``(edges (m,2), weights, connected mask)``; edge
+    weight is max(count_a, count_b), times d^-w_exp when ``weighted``
+    (reference utils.py:110-121).
     """
-    if len(pdf) > max_group:
-        raise ValueError(
-            f"user {pdf['uid'].iloc[0]!r} has {len(pdf)} unique stop"
-            f" coordinates (> {max_group}); the per-user graph path"
-            " builds an O(n^2) distance matrix. Raise"
-            " min_spacial_resolution to downsample first."
-        )
-    pdf = pdf.sort_values(["latitude", "longitude"], kind="mergesort")
     lat = pdf["latitude"].to_numpy()
     lon = pdf["longitude"].to_numpy()
     counts = pdf["n_members"].to_numpy()
@@ -1454,7 +1471,7 @@ def _user_eps_graph(
     connected = np.zeros(n, dtype=bool)
     connected[ei] = True
     connected[ej] = True
-    return pdf, lat, lon, np.column_stack([ei, ej]), w, connected
+    return np.column_stack([ei, ej]), w, connected
 
 
 def _dense_module_labels(
@@ -1472,20 +1489,6 @@ def _dense_module_labels(
                 order[m] = len(order)
             labels[i] = order[m]
     return labels
-
-
-def _invariants_schema(df: DataFrame) -> StructType:
-    return StructType(
-        [
-            df.schema["uid"],
-            StructField("n_nodes", LongType()),
-            StructField("n_singletons", LongType()),
-            StructField("n_components", LongType()),
-            StructField("descent_ok", BooleanType()),
-            StructField("bounds_ok", BooleanType()),
-            StructField("dense_ok", BooleanType()),
-        ]
-    )
 
 
 def community_invariants(
@@ -1510,40 +1513,17 @@ def community_invariants(
     - ``dense_ok``: non-noise labels are exactly 0..k-1 and noise
       (-1) appears exactly on the ε-singleton nodes.
 
-    Same graph construction as :func:`cluster_communities`
-    (unique coords, max-count edge weights); runs per uid as an Arrow
-    grouped map with the same size guard.
+    Same node table, graph construction and size guard as
+    :func:`cluster_communities`.
     """
-    unique_coords = _snapped_unique_nodes(
-        medians, min_spacial_resolution
-    )
     eps = float(r2)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
-    max_group = 20_000
+    metric = _metric(distance_metric)
 
     def _certify(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, lat, lon, edges, w, connected = _user_eps_graph(
-            pdf, eps, metric, max_group=max_group
-        )
+        edges, w, connected = _user_eps_graph(pdf, eps, metric)
         n = len(pdf)
         n_connected = int(connected.sum())
-
-        # components via union-find (per-user graphs are small)
-        parent = np.arange(n)
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = int(parent[x])
-            return x
-
-        for a, b in edges:
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        n_components = len({find(i) for i in range(n) if connected[i]})
+        n_components = len(set(_components(n, edges)[connected].tolist()))
 
         labels = np.full(n, -1, dtype=np.int64)
         descent_ok = True
@@ -1573,19 +1553,15 @@ def community_invariants(
             }
         )
 
-    return unique_coords.groupBy("uid").applyInPandas(
-        _certify, schema=_invariants_schema(unique_coords)
-    )
-
-
-def _communities_schema(df: DataFrame) -> StructType:
-    return StructType(
-        [
-            df.schema["uid"],
-            StructField("latitude", DoubleType()),
-            StructField("longitude", DoubleType()),
-            StructField("stop_labels", LongType()),
-        ]
+    return _per_user_map(
+        _node_table(medians, min_spacial_resolution),
+        _certify,
+        StructField("n_nodes", LongType()),
+        StructField("n_singletons", LongType()),
+        StructField("n_components", LongType()),
+        StructField("descent_ok", BooleanType()),
+        StructField("bounds_ok", BooleanType()),
+        StructField("dense_ok", BooleanType()),
     )
 
 
@@ -1635,20 +1611,11 @@ def cluster_communities(
     guard as the DBSCAN path; per-user unique stop coordinates are
     bounded small.
     """
-    # Unique coordinate nodes + visit multiplicity (the reference's
-    # `count` column from _downsample, models.py:60-87) — shared with
-    # the m3c certification path via _snapped_unique_nodes.
-    unique_coords = _snapped_unique_nodes(
-        medians, min_spacial_resolution
-    )
-
     eps = float(r2)
     w_exp = float(weight_exponent)
     use_weights = bool(weighted)
     singles_own_label = bool(label_singleton)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
+    metric = _metric(distance_metric)
     if backend not in ("native", "infomap"):
         raise ValueError(
             f"unknown backend {backend!r}: use 'native' or 'infomap'"
@@ -1660,22 +1627,11 @@ def cluster_communities(
             "(pip install infomap); the default backend='native' has "
             "no extra dependency"
         )
-    trials, sd = int(num_trials), int(seed)
-    if trials < 1:
-        raise ValueError(
-            f"num_trials must be >= 1 (got {num_trials}): zero trials"
-            " would select no partition at all"
-        )
-    max_group = 20_000
+    trials, sd = _trials(num_trials), int(seed)
 
-    def _communities(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, lat, lon, edges, w, connected = _user_eps_graph(
-            pdf,
-            eps,
-            metric,
-            weighted=use_weights,
-            w_exp=w_exp,
-            max_group=max_group,
+    def _communities(pdf: pd.DataFrame) -> np.ndarray:
+        edges, w, connected = _user_eps_graph(
+            pdf, eps, metric, weighted=use_weights, w_exp=w_exp
         )
         n = len(pdf)
         labels = np.full(n, -1, dtype=np.int64)
@@ -1695,34 +1651,10 @@ def cluster_communities(
                 if not connected[i]:
                     labels[i] = nxt
                     nxt += 1
-        return pd.DataFrame(
-            {
-                "uid": pdf["uid"].to_numpy(),
-                "latitude": lat,
-                "longitude": lon,
-                "stop_labels": labels,
-            }
-        )
+        return labels
 
-    labeled_coords = unique_coords.groupBy("uid").applyInPandas(
-        _communities, schema=_communities_schema(unique_coords)
-    )
-
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
-    with_cells = medians.withColumns({"_glat": glat, "_glon": glon})
-    return (
-        with_cells.join(
-            labeled_coords.withColumnsRenamed(
-                {"latitude": "_glat", "longitude": "_glon"}
-            ),
-            on=["uid", "_glat", "_glon"],
-            how="left",
-        )
-        .drop("_glat", "_glon")
+    return _label_nodes(
+        medians, min_spacial_resolution, "stop_labels", _communities
     )
 
 
@@ -1846,17 +1778,9 @@ def communities_backend_differential(
         target = (
             "library" if infomap_backend_available() else "vendored"
         )
-    unique_coords = _snapped_unique_nodes(medians, min_spacial_resolution)
     eps = float(r2)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
-    trials, sd = int(num_trials), int(seed)
-    if trials < 1:
-        raise ValueError(
-            f"num_trials must be >= 1 (got {num_trials}): zero trials"
-            " would select no partition at all"
-        )
+    metric = _metric(distance_metric)
+    trials, sd = _trials(num_trials), int(seed)
     esc = int(escalate_trials)
     if esc < 1:
         raise ValueError(
@@ -1868,9 +1792,7 @@ def communities_backend_differential(
     use_library = target == "library"
 
     def _diff(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, _lat, _lon, edges, w, connected = _user_eps_graph(
-            pdf, eps, metric
-        )
+        edges, w, connected = _user_eps_graph(pdf, eps, metric)
         n = len(pdf)
         same, not_worse, escalated = True, True, False
         l_nat, l_ref = 0.0, 0.0
@@ -1914,18 +1836,16 @@ def communities_backend_differential(
             }
         )
 
-    schema = StructType(
-        [
-            unique_coords.schema["uid"],
-            StructField("n_nodes", LongType()),
-            StructField("same_partition", BooleanType()),
-            StructField("native_not_worse", BooleanType()),
-            StructField("native_within_tol", BooleanType()),
-            StructField("escalated", BooleanType()),
-            StructField("codelength_native", DoubleType()),
-            StructField("codelength_reference", DoubleType()),
-            StructField("codelength_margin", DoubleType()),
-            StructField("target", StringType()),
-        ]
+    return _per_user_map(
+        _node_table(medians, min_spacial_resolution),
+        _diff,
+        StructField("n_nodes", LongType()),
+        StructField("same_partition", BooleanType()),
+        StructField("native_not_worse", BooleanType()),
+        StructField("native_within_tol", BooleanType()),
+        StructField("escalated", BooleanType()),
+        StructField("codelength_native", DoubleType()),
+        StructField("codelength_reference", DoubleType()),
+        StructField("codelength_margin", DoubleType()),
+        StructField("target", StringType()),
     )
-    return unique_coords.groupBy("uid").applyInPandas(_diff, schema)

@@ -357,7 +357,9 @@ def train_unigram(
                 del logp[p]
 
     # ---- final renormalize + id assignment -------------------------
-    tot_mass = sum(math.exp(v) for v in logp.values())
+    # fsum: exactly rounded, so the total (and every score) does not
+    # depend on the set order logp was built in
+    tot_mass = math.fsum(math.exp(v) for v in logp.values())
     log_tot = math.log(tot_mass)
     scores = {p: v - log_tot for p, v in logp.items()}
     vocab: "dict[str, int]" = dict(_BYTE_TOKEN_ID)

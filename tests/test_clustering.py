@@ -1112,3 +1112,18 @@ def test_eject_refine_densifies_grown_ids_between_rounds(monkeypatch):
         )
         assert len(out) == n
     assert seen["calls"] > 0  # the boundary was actually exercised
+
+
+def test_stopdetect_rejects_euclidean_distributed():
+    """The distributed grid join sizes its cells in degrees from a
+    metre radius, so it is haversine-only: asking for it with
+    projected (euclidean) coordinates must fail up front instead of
+    clustering them as metres."""
+    from polaroam_spark.api import HWEstimate, StopDetect
+
+    with pytest.raises(ValueError, match="euclidean"):
+        StopDetect(distance_metric="euclidean", distributed_clustering=True)
+    with pytest.raises(ValueError, match="euclidean"):
+        HWEstimate(distance_metric="euclidean", distributed_clustering=True)
+    StopDetect(distance_metric="euclidean")
+    StopDetect(distributed_clustering=True)

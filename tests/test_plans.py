@@ -981,3 +981,55 @@ def test_grouped_map_plans_infer_eval_type(spark):
     assert not [
         w for w in caught if "Cannot infer the eval type" in str(w.message)
     ]
+
+
+def _grouped_map_subtree(df):
+    """Lines of the physical plan under the FlatMapGroupsInPandas
+    node (the node itself excluded)."""
+    plan = df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("simple")
+    ).splitlines()
+
+    def depth(line):
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    top = next(i for i, l in enumerate(plan) if "FlatMapGroupsInPandas" in l)
+    sub = []
+    for line in plan[top + 1:]:
+        if depth(line) <= depth(plan[top]):
+            break
+        sub.append(line)
+    return sub
+
+
+def test_per_user_clustering_maps_one_uid_exchange(spark):
+    """Every per-user clustering grouped map (DBSCAN, Infomap labels,
+    invariants and backend differential) reads its node table through
+    exactly one exchange: the uid-pinned REPARTITION_BY_NUM, which
+    AQE may not coalesce and which also satisfies the per-node count
+    and the groupBy(uid)."""
+    from polaroam_spark.operators.clustering import (
+        cluster_communities,
+        cluster_stops_dbscan,
+        communities_backend_differential,
+        community_invariants,
+    )
+
+    med = spark.createDataFrame(
+        [("a", 0, 19.4, -99.1), ("a", 1, 19.40001, -99.1)],
+        "uid string, stop_events long, latitude double, longitude double",
+    )
+    for df in (
+        cluster_stops_dbscan(med, r2=25.0),
+        cluster_communities(med, r2=25.0),
+        community_invariants(med, r2=25.0),
+        communities_backend_differential(med, r2=25.0, target="vendored"),
+    ):
+        exchanges = [l for l in _grouped_map_subtree(df) if "Exchange" in l]
+        assert len(exchanges) == 1, exchanges
+        assert re.search(
+            r"Exchange hashpartitioning\(uid#\d+, \d+\), REPARTITION_BY_NUM",
+            exchanges[0],
+        ), exchanges

@@ -542,3 +542,46 @@ def test_prune_min_usage_drops_dead_ids(spark):
     by_id = {i: p for p, i in model["vocab"].items() if i >= 256}
     used_pieces = {by_id[i] for i in used if i >= 256}
     assert set(pruned["scores"]) == used_pieces
+
+
+_HASHSEED_SCRIPT = """
+import json
+from polaroam_spark.operators import unigram
+
+text = (
+    "the cat sat on the mat and the dog sat too tokenization is the art"
+    " of splitting text into pieces unigram language models segment text"
+    " via viterbi decoding repetition naive unicode round trip leading and"
+    " irregular whitespace tabs survive the quick brown fox jumps over the"
+    " lazy dog again and again numbers mix with words"
+)
+counts = {}
+for i, w in enumerate(text.split()):
+    counts[w] = counts.get(w, 0) + 1 + i % 5
+words = sorted(counts.items(), key=lambda t: (-t[1], t[0]))
+# the trainer's one Spark pass, replaced by its (fixed) result
+unigram._word_histogram = lambda *args: list(words)
+model = unigram.train_unigram(None, vocab_size=256 + 150, max_piece_length=6)
+print(json.dumps([[p, s.hex()] for p, s in sorted(model["scores"].items())]))
+"""
+
+
+def test_scores_independent_of_hash_seed():
+    """Training is a pure function of the histogram: two interpreters
+    with different string-hash seeds (so different set iteration
+    orders) learn bit-identical scores."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = []
+    for seed in ("1", "3"):
+        env = dict(os.environ, PYTHONHASHSEED=seed, PYTHONPATH=root)
+        outs.append(
+            subprocess.run(
+                [sys.executable, "-c", _HASHSEED_SCRIPT],
+                env=env, capture_output=True, text=True, check=True,
+            ).stdout
+        )
+    assert outs[0] and outs[0] == outs[1]

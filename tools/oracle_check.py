@@ -5,16 +5,35 @@ Usage:
     python tools/oracle_check.py            # all queries at sf0.001
     SF_DIR=/root/testdata/sf0.01 python tools/oracle_check.py
     python tools/oracle_check.py w4_detect_stops m2_stop_medians
+    python tools/oracle_check.py c3 m3b     # id = name up to its first "_"
+    python tools/oracle_check.py --uses operators.clustering --uses api
+
+``--uses MODULE`` (repeatable) selects the gates whose builder source
+(``inspect.getsource``) names that module, e.g. the gates a change to
+``operators/clustering.py`` touches. Names and ``--uses`` combine
+with AND. Exits 1 when any selected gate reports SPARK_ERROR,
+ORACLE_ERROR or MISMATCH, 2 when nothing is selected.
 """
+import argparse
+import inspect
 import os
+import re
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.001")
-ONLY = sys.argv[1:] or None
+
+ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+ap.add_argument("gates", nargs="*", help="gate names or ids (default: all)")
+ap.add_argument(
+    "--uses", action="append", default=[], metavar="MODULE",
+    help="only gates whose builder source names MODULE (repeatable)",
+)
+args = ap.parse_args()
 
 import duckdb
 import pandas as pd
@@ -36,8 +55,26 @@ for t in [
         f"read_parquet('{SF_DIR}/{t}.parquet')"
     )
 
-qs = entry_mod.queries()
 sqls = entry_mod.oracle_sql()
+
+
+def _selected(name: str, fn) -> bool:
+    if args.gates and not any(
+        g in (name, name.split("_")[0]) for g in args.gates
+    ):
+        return False
+    if args.uses:
+        src = inspect.getsource(fn)
+        return any(
+            re.search(rf"\b{re.escape(m)}\b", src) for m in args.uses
+        )
+    return True
+
+
+qs = {n: fn for n, fn in entry_mod.queries().items() if _selected(n, fn)}
+if not qs:
+    print("no gate selected", file=sys.stderr)
+    sys.exit(2)
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -50,8 +87,6 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 results = {}
 for name, fn in qs.items():
-    if ONLY and name not in ONLY:
-        continue
     t0 = time.time()
     try:
         sdf = fn(spark, SF_DIR).toPandas()
@@ -112,3 +147,4 @@ n_ok = sum(1 for s, _ in results.values() if s == "OK")
 n_rows_only = sum(1 for s, _ in results.values() if s == "ROWS_ONLY")
 print(f"\n=== {n_ok} OK, {n_rows_only} rows-only, "
       f"{len(results) - n_ok - n_rows_only} problems / {len(results)} total ===")
+sys.exit(1 if n_ok + n_rows_only < len(results) else 0)
