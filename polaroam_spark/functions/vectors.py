@@ -35,7 +35,12 @@ def l2_norm(a: Column | str) -> Column:
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+    """dot(a, b) / (‖a‖·‖b‖); NULL when either vector is all zeros
+    (a zero norm has no direction). ``try_divide`` rather than a
+    ``when`` guard: the norms are higher-order aggregates with no
+    common-subexpression elimination, so a guard would compute them
+    twice — and plain division aborts the job under ANSI mode."""
+    return F.try_divide(dot_product(a, b), l2_norm(a) * l2_norm(b))
 
 
 def cosine_similarity_arrow():

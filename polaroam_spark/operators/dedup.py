@@ -1,13 +1,37 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five dedup strategies over a documents table (``doc_id, text, ...``),
-each designed around one rule: **candidate generation is always a
-bucketed equi-join** — hash buckets (exact), LSH band buckets
-(MinHash), simhash chunk buckets, or token buckets (n-gram Jaccard).
-No all-pairs comparison ever materializes, so every path survives a
-100 TB corpus: the shuffle key is the bucket, skew is bounded by
-bucket width, and verification cost is proportional to candidate
-pairs, not n².
+Exact dedup groups on a text hash; every near-duplicate pair generator
+is a bucketed ε-neighbour search — the same shape as a radius query
+over a partitioned index: put each item in one or more buckets, pair
+the items that share a bucket, then verify each candidate pair with an
+exact score. No all-pairs comparison ever materializes: the shuffle
+key is the bucket, skew is bounded by bucket width, and verification
+cost is proportional to candidate pairs, not n².
+
+One core serves the MinHash LSH (band buckets), fingerprint-Hamming
+(chunk buckets) and embedding (hyperplane buckets) generators, and the
+two-table embedding join in :mod:`~polaroam_spark.operators.similarity`:
+
+- :func:`_bucket_stats` — bucket size ``_bn`` and representative
+  ``_rep`` (the min id, or the min ``(id, payload)`` struct) from one
+  partition-only window over the bucket keys;
+- :func:`_candidates` — the normal-bucket self-join (``id_a < id_b``)
+  unioned with the hot-bucket star pairs ``(rep, id)``, carrying the
+  payload (fingerprint or vector) when there is one;
+- :func:`_hot_guard` — the one-sided guard: keep normal buckets whole
+  and only the representative of each hot bucket;
+- :func:`_jaccard_verify` — the exact shingle-set Jaccard verify of
+  every MinHash path; :func:`_minhash_self_pairs` is the one
+  within-table MinHash pair generator (batch and incremental);
+  :func:`_verify_then_dedup` is the Hamming and cosine verify.
+
+Each family keeps its bucket keys, its verify expression and its
+verify/dedup order (MinHash dedups candidates before the two shingle
+joins; Hamming and cosine are pure functions of the carried payload,
+so they verify first and dedup the narrow verified rows). Persists
+stay with the callers. The n-gram scorers are an inverted-index join
+(:func:`_gram_pair_counts`) with a document-frequency cap instead of
+a star guard.
 
 No reference counterpart (the reference is a mobility engine); these
 are the beyond-reference components required by the build brief.
@@ -90,6 +114,170 @@ def _shingle_set(
     )
 
 
+#: LSH band bucket keys of the MinHash paths
+_BAND_KEYS = ["band", "bucket"]
+
+
+def _bucket_stats(
+    df: DataFrame, keys: list[str], payload: str | None = None
+) -> DataFrame:
+    """Add the bucket size ``_bn`` and representative ``_rep`` to a
+    bucketed frame of ``_id`` rows. ``_rep`` is the bucket's min id,
+    or with ``payload`` the min ``struct(_id, payload)`` — the
+    representative's id AND payload in one pass (ids are distinct, so
+    the payload never compares). A partition-only window: no
+    driver-side key collection, and no shuffle beyond the bucket key
+    the pair join shuffles on anyway."""
+    w = Window.partitionBy(*keys)
+    rep = F.min("_id") if payload is None else F.min(F.struct("_id", payload))
+    return df.withColumns(
+        {"_bn": F.count("*").over(w), "_rep": rep.over(w)}
+    )
+
+
+def _candidates(
+    b: DataFrame,
+    keys: list[str],
+    max_bucket_size: int,
+    payload: str | None = None,
+) -> DataFrame:
+    """Candidate pairs ``id_a, id_b`` (plus ``<payload>a`` and
+    ``<payload>b`` with a payload) of a :func:`_bucket_stats` frame.
+
+    Degenerate-bucket guard: a bucket holding B items (constant
+    boilerplate, a constant fingerprint chunk, a pile of template
+    vectors) would emit B²/2 candidates from ONE join task. Buckets
+    over ``max_bucket_size`` therefore switch to a star: every member
+    pairs with the representative only (B-1 candidates, still
+    verified). Member-member pairs inside a hot bucket are not
+    emitted, but they collapse to the same representative, so dedup
+    semantics survive; :func:`duplicate_components` gives the full
+    closure. Normal buckets self-join with ``id_a < id_b``. Pairs may
+    repeat across buckets; the caller dedups them before or after its
+    verify."""
+    normal = b.filter(F.col("_bn") <= max_bucket_size)
+    hot = b.filter(F.col("_bn") > max_bucket_size)
+    rep_id = F.col("_rep") if payload is None else F.col("_rep._id")
+    pair_payload, star_payload = [], []
+    if payload is not None:
+        pair_payload = [
+            F.col(f"a.{payload}").alias(f"{payload}a"),
+            F.col(f"b.{payload}").alias(f"{payload}b"),
+        ]
+        star_payload = [
+            F.col(f"_rep.{payload}").alias(f"{payload}a"),
+            F.col(payload).alias(f"{payload}b"),
+        ]
+    pairs = (
+        normal.alias("a")
+        .join(normal.alias("b"), on=keys, how="inner")
+        .filter(F.col("a._id") < F.col("b._id"))
+        .select(
+            F.col("a._id").alias("id_a"),
+            F.col("b._id").alias("id_b"),
+            *pair_payload,
+        )
+    )
+    star = hot.filter(F.col("_id") != rep_id).select(
+        rep_id.alias("id_a"), F.col("_id").alias("id_b"), *star_payload
+    )
+    return pairs.unionByName(star)
+
+
+def _hot_guard(b: DataFrame, max_bucket_size: int) -> DataFrame:
+    """One-sided hot-bucket guard of a :func:`_bucket_stats` frame
+    (id-only ``_rep``) that probes ANOTHER table: normal buckets stay
+    whole, a hot bucket keeps only its min-id member. This bounds the
+    probe's fan-out at the cost of a bounded miss: the dropped members
+    still reach the other table through their other buckets, if any."""
+    return b.filter(
+        (F.col("_bn") <= F.lit(max_bucket_size))
+        | (F.col("_id") == F.col("_rep"))
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact shingle-set Jaccard verify of candidate pairs ``id_a,
+    id_b``: each side's ``(_id, _shingles)`` joins on its id, pairs
+    under ``threshold`` drop. Returns ``id_a, id_b, jaccard_sim``."""
+    return (
+        cand.join(
+            sh_a.select(
+                F.col("_id").alias("id_a"),
+                F.col("_shingles").alias("_sh_a"),
+            ),
+            on="id_a",
+        )
+        .join(
+            sh_b.select(
+                F.col("_id").alias("id_b"),
+                F.col("_shingles").alias("_sh_b"),
+            ),
+            on="id_b",
+        )
+        .withColumn("jaccard_sim", jaccard("_sh_a", "_sh_b"))
+        .filter(F.col("jaccard_sim") >= F.lit(threshold))
+        .select("id_a", "id_b", "jaccard_sim")
+    )
+
+
+def _band_keys(sh: DataFrame, bands: int) -> DataFrame:
+    """``(_id, band, bucket)``: one row per LSH band of each ``_sig``."""
+    return sh.select(
+        "_id", F.explode(band_hashes("_sig", bands)).alias("_band")
+    ).select("_id", "_band.band", "_band.bucket")
+
+
+def _minhash_self_pairs(
+    sh: DataFrame,
+    banded: DataFrame,
+    jaccard_threshold: float,
+    max_bucket_size: int,
+) -> DataFrame:
+    """Verified within-table MinHash pairs ``id_a, id_b, jaccard_sim``
+    of a signature frame ``sh`` (``_id, _shingles, ...``) and its
+    :func:`_band_keys` + :func:`_bucket_stats` frame ``banded``.
+    Candidates dedup BEFORE the verify: the verify joins the shingle
+    arrays in, so each distinct pair should fetch them once."""
+    cand = _candidates(banded, _BAND_KEYS, max_bucket_size).dropDuplicates(
+        ["id_a", "id_b"]
+    )
+    return _jaccard_verify(cand, sh, sh, jaccard_threshold)
+
+
+def _verify_then_dedup(
+    cand: DataFrame, name: str, score: F.Column, keep: F.Column
+) -> DataFrame:
+    """Score payload-carrying candidates as ``name``, keep the rows
+    passing ``keep``, then dedup pairs. Verify BEFORE the dedup (guide
+    §2.3 "aggregate/filter before you shuffle"): the score is a pure
+    function of the pair, so filtering first cannot change the
+    deduplicated set — but it runs map-side, drops every failing
+    candidate before the exchange, and narrows the shuffled row to
+    ``(id_a, id_b, name)`` instead of both payloads. (Multi-bucket
+    repeats of a pair carry identical scores, so the kept row is
+    identical too.)"""
+    return (
+        cand.withColumn(name, score)
+        .filter(keep)
+        .select("id_a", "id_b", name)
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _greedy_survivors(
+    docs: DataFrame, pairs: DataFrame, id_col: str, loser: str = "id_b"
+) -> DataFrame:
+    """The greedy survivor rule: drop every row of ``docs`` whose id
+    appears as a pair's ``loser`` (the larger id of a verified pair,
+    or the new side of an incremental pair). A left-anti join against
+    the distinct loser ids — document bodies never shuffle."""
+    losers = pairs.select(F.col(loser).alias(id_col)).dropDuplicates()
+    return docs.join(losers, on=id_col, how="left_anti")
+
+
 def normalize_text(text_col) -> F.Column:
     """Canonical text form for exact dedup: lowercase, collapse
     whitespace, trim."""
@@ -149,33 +337,26 @@ def minhash_lsh_pairs(
     Output: ``id_a, id_b, jaccard_sim`` with id_a < id_b and
     jaccard_sim ≥ threshold.
 
-    Degenerate-bucket guard: a bucket holding B documents (constant
-    boilerplate — cookie banners, license headers — lands thousands
-    of near-identical docs in one band bucket) would emit B²/2
-    candidate pairs from ONE join task. Buckets larger than
-    ``max_bucket_size`` therefore switch to a star topology: every
-    member pairs with the bucket's min-id representative only (B-1
-    candidates, still exact-Jaccard-verified). Direct member-member
-    pairs inside a hot bucket are not emitted, but they collapse to
-    the same representative, so dedup semantics survive; feed the
-    pairs to :func:`duplicate_components` for the full transitive
-    closure. Bucket sizes come from a partition-only window — no
-    driver-side key collection, no extra shuffle beyond the bucket
-    key the join shuffles on anyway.
+    Hot buckets (over ``max_bucket_size`` documents — constant
+    boilerplate such as cookie banners and license headers lands
+    thousands of near-identical docs in one band bucket) switch to
+    star pairs against the bucket's min-id document (see
+    :func:`_candidates`); feed the pairs to
+    :func:`duplicate_components` for the full transitive closure.
     """
     from ..session import fan_out
 
-    # fan_out BEFORE the signature compute (r19 optimization round,
-    # guide §2.5): shingling + num_hashes MinHash passes are the
-    # heaviest per-row work in this operator, and a single-row-group
-    # input (any local parquet under ~128 MB is one split) serializes
-    # it onto one task — measured ~2x the row wall. Projected to the
-    # two needed columns first (§2.3), so the exchange moves id+text
-    # only; at corpus scale the input already has >= cores splits and
-    # fan_out adds nothing. The token array is projected into its
-    # OWN column below the shingle projection (r20 — see
-    # _shingle_set's ``toks``): inlined, the CodegenFallback tokenize
-    # chain re-ran once per word_shingles slice.
+    # fan_out BEFORE the signature compute (guide §2.5): shingling +
+    # num_hashes MinHash passes are the heaviest per-row work in this
+    # operator, and a single-row-group input (any local parquet under
+    # ~128 MB is one split) serializes it onto one task — measured ~2x
+    # the row wall. Projected to the two needed columns first (§2.3),
+    # so the exchange moves id+text only; at corpus scale the input
+    # already has >= cores splits and fan_out adds nothing. The token
+    # array is projected into its OWN column below the shingle
+    # projection (see _shingle_set's ``toks``): inlined, the
+    # CodegenFallback tokenize chain re-ran once per word_shingles
+    # slice.
     sh = fan_out(
         docs.select(F.col(id_col).alias("_id"), F.col(text_col))
     ).select(
@@ -199,65 +380,15 @@ def minhash_lsh_pairs(
     # result eagerly and release all intermediate caches before
     # returning (see _finalize_pairs).
     sh = sh.persist()
-
-    banded = sh.select(
-        "_id", F.explode(band_hashes("_sig", bands)).alias("_band")
-    ).select("_id", "_band.band", "_band.bucket")
-    bucket_w = Window.partitionBy("band", "bucket")
-    banded = banded.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            "_rep": F.min("_id").over(bucket_w),
-        }
-    )
     # persist: referenced by both self-join sides AND the hot path —
     # exchange reuse does NOT kick in here (verified on the executed
     # adaptive plan: 3 Window nodes, 0 ReusedExchange), so without the
     # persist the explode + band-hash + window shuffle runs three
-    # times. At bench scale that is a wash (AQE coalescing hides it);
-    # at corpus scale three shuffles of the banded table vs one is
-    # not. The frame is five narrow columns.
-    banded = banded.persist()
-    normal = banded.filter(F.col("_bn") <= max_bucket_size)
-    hot = banded.filter(F.col("_bn") > max_bucket_size)
-
-    cand_normal = (
-        normal.alias("a")
-        .join(
-            normal.alias("b"),
-            on=["band", "bucket"],
-            how="inner",
-        )
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
-    )
-    cand_hot = hot.filter(F.col("_id") != F.col("_rep")).select(
-        F.col("_rep").alias("id_a"), F.col("_id").alias("id_b")
-    )
-    cand = cand_normal.unionByName(cand_hot).dropDuplicates(
-        ["id_a", "id_b"]
-    )
-
-    verified = (
-        cand.join(
-            sh.select(
-                F.col("_id").alias("id_a"),
-                F.col("_shingles").alias("_sh_a"),
-            ),
-            on="id_a",
-        )
-        .join(
-            sh.select(
-                F.col("_id").alias("id_b"),
-                F.col("_shingles").alias("_sh_b"),
-            ),
-            on="id_b",
-        )
-        .withColumn("jaccard_sim", jaccard("_sh_a", "_sh_b"))
-        .filter(F.col("jaccard_sim") >= F.lit(jaccard_threshold))
-        .select("id_a", "id_b", "jaccard_sim")
+    # times. At corpus scale three shuffles of the banded table vs one
+    # is not a wash. The frame is five narrow columns.
+    banded = _bucket_stats(_band_keys(sh, bands), _BAND_KEYS).persist()
+    verified = _minhash_self_pairs(
+        sh, banded, jaccard_threshold, max_bucket_size
     )
     return _finalize_pairs(verified, [sh, banded], materialize)
 
@@ -276,8 +407,7 @@ def dedup_minhash_lsh(
     clustering.cluster_stops_dbscan_distributed).
     """
     pairs = minhash_lsh_pairs(docs, text_col, id_col, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
-    return docs.join(losers, on=id_col, how="left_anti")
+    return _greedy_survivors(docs, pairs, id_col)
 
 
 def _survivors(
@@ -312,8 +442,7 @@ def _survivors(
                 " the greedy rule has no duplicate component to pick"
                 f" a best member from (got keep={keep!r})"
             )
-        losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
-        return docs.join(losers, on=id_col, how="left_anti")
+        return _greedy_survivors(docs, pairs, id_col)
     comp = duplicate_components(pairs)
     if keep == "min_id":
         losers = comp.filter(
@@ -409,15 +538,11 @@ def duplicate_components(
     hundreds of near-dup hops, and per-hop iteration is the scale
     failure mode there.
 
-    CHANGED (round 4, star-contraction rewrite): ``max_iterations``
-    now bounds STAR ROUNDS (each round at least halves component-tree
-    height — N rounds cover ~2^N-node components) and its default
-    moved 50 → 30. Under the old propagation engine it bounded
-    one-hop label moves, so a small tuned value (say 5, as a cheap
-    chain guard) that formerly converged on shallow graphs now covers
-    only ~32-node components and raises ``RuntimeError`` beyond that.
-    Re-tune legacy small values to ``ceil(log2(max component size)) +
-    2``; the default needs no tuning at any realistic scale.
+    ``max_iterations`` bounds STAR ROUNDS: each round at least halves
+    component-tree height, so N rounds cover ~2^N-node components and
+    a larger component raises ``RuntimeError``. Size it as
+    ``ceil(log2(max component size)) + 2``; the default needs no
+    tuning at any realistic scale.
     """
     from polaroam_spark.operators.graph import connected_components
 
@@ -514,22 +639,28 @@ def fingerprint_hamming_pairs(
     feeds perceptual hashes through it). NULL fingerprints are
     dropped (undecodable media can't be near anything).
 
+    Requires ``1 <= chunks <= bits <= 64``: each chunk is
+    ``bits // chunks`` bits wide, so more chunks than bits would make
+    every chunk value 0 and put every document in one bucket.
+
     Same degenerate-bucket guard as :func:`minhash_lsh_pairs`: a
     (chunk, value) bucket holding B rows — constant regions drive a
-    chunk to a constant — would emit B²/2 candidates from one task.
-    Buckets over ``max_bucket_size`` switch to star pairs against
-    the bucket's min-id member (still hamming-verified);
-    member-member pairs inside a hot bucket collapse through the
-    representative via :func:`duplicate_components`.
+    chunk to a constant — switches to star pairs against the
+    bucket's min-id member, still hamming-verified (see
+    :func:`_candidates`).
 
     ``id_col`` is assumed to identify a document (one fingerprint
     per id). Duplicate-id inputs resolve each pair ANY-MATCH — the
     pair is emitted if any of an id's fingerprints passes the
-    hamming gate (the verify-before-dedup order, r19) — where the
-    pre-r19 dedup-first order let an arbitrary surviving duplicate
-    decide; both are nondeterministic under duplicate ids, neither
-    is contractual (ADVICE r19).
+    hamming gate (the verify-before-dedup order); this is
+    nondeterministic under duplicate ids and not contractual.
     """
+    if not 1 <= chunks <= bits <= 64:
+        raise ValueError(
+            f"need 1 <= chunks <= bits <= 64 (got chunks={chunks}, "
+            f"bits={bits}): a chunk must hold at least one bit of a "
+            "64-bit fingerprint"
+        )
     if max_hamming >= chunks:
         raise ValueError(
             f"pigeonhole requires chunks > max_hamming (got "
@@ -538,10 +669,11 @@ def fingerprint_hamming_pairs(
         )
     fp = fingerprints.filter(F.col(fp_col).isNotNull())
     chunk_bits = bits // chunks
-    mask = (1 << chunk_bits) - 1
+    # a full 64-bit chunk's mask is all ones: -1 as a signed long
+    mask = -1 if chunk_bits == 64 else (1 << chunk_bits) - 1
     chunked = fp.select(
         F.col(id_col).alias("_id"),
-        F.col(fp_col).alias("_fp"),
+        F.col(fp_col).alias("_f"),
         F.explode(
             F.array(
                 *[
@@ -555,65 +687,25 @@ def fingerprint_hamming_pairs(
                 ]
             )
         ).alias("_c"),
-    ).select("_id", "_fp", "_c.chunk", "_c.val")
-    bucket_w = Window.partitionBy("chunk", "val")
-    chunked = chunked.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            # struct-min: the representative's id AND fingerprint in
-            # one pass (ids are distinct, so _fp never compares)
-            "_rep": F.min(F.struct("_id", "_fp")).over(bucket_w),
-        }
-    )
+    ).select("_id", "_f", "_c.chunk", "_c.val")
+    keys = ["chunk", "val"]
+    chunked = _bucket_stats(chunked, keys, payload="_f")
     # referenced by both self-join sides + the hot path (see the
-    # minhash persist note). Materialized EAGERLY (r19 optimization
-    # round): the self-join needs no exchange (the window already
-    # partitioned by (chunk, val)), so both sides' InMemoryTableScan
-    # iterators open inside the SAME task and race a cold cache —
-    # the full fingerprint lineage (for images: decode + dHash, the
-    # heaviest stage of the operator) ran once per side on top of the
-    # window build (~3x total, stage-profiled on the image bench
-    # row). One count() builds the cache once; the join then reads it.
+    # minhash persist note). Materialized EAGERLY: the self-join needs
+    # no exchange (the window already partitioned by (chunk, val)), so
+    # both sides' InMemoryTableScan iterators open inside the SAME
+    # task and race a cold cache — the full fingerprint lineage (for
+    # images: decode + dHash, the heaviest stage of the operator) ran
+    # once per side on top of the window build (~3x total,
+    # stage-profiled on the image bench row). One count() builds the
+    # cache once; the join then reads it.
     chunked = chunked.persist()
     chunked.count()
-    normal = chunked.filter(F.col("_bn") <= max_bucket_size)
-    hot = chunked.filter(F.col("_bn") > max_bucket_size)
-
-    cand_normal = (
-        normal.alias("a")
-        .join(normal.alias("b"), on=["chunk", "val"], how="inner")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._fp").alias("_fa"),
-            F.col("b._fp").alias("_fb"),
-        )
-    )
-    cand_hot = hot.filter(F.col("_id") != F.col("_rep._id")).select(
-        F.col("_rep._id").alias("id_a"),
-        F.col("_id").alias("id_b"),
-        F.col("_rep._fp").alias("_fa"),
-        F.col("_fp").alias("_fb"),
-    )
-    # verify BEFORE the pair dedup (r19 optimization round, guide
-    # §2.3 "aggregate/filter before you shuffle"): hamming is a pure
-    # function of the pair, so filtering first cannot change the
-    # deduplicated set — but it moves the bit_count map-side, drops
-    # every failing candidate before the exchange, and narrows the
-    # shuffled row from (id_a, id_b, _fa, _fb) to (id_a, id_b,
-    # hamming). The old shape shuffled BOTH fingerprints for every
-    # candidate (including the vast majority that fail verification
-    # on a diverse corpus) just to recompute hamming after the dedup.
-    cand = cand_normal.unionByName(cand_hot)
-    verified = (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))),
-        )
-        .filter(F.col("hamming") <= F.lit(max_hamming))
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
+    verified = _verify_then_dedup(
+        _candidates(chunked, keys, max_bucket_size, payload="_f"),
+        "hamming",
+        F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))),
+        F.col("hamming") <= F.lit(max_hamming),
     )
     return _finalize_pairs(verified, [chunked], materialize)
 
@@ -663,16 +755,19 @@ def _gram_pair_counts(
     id_col: str,
     n: int,
     block_col: str | None,
-    max_gram_df: int | None,
+    max_gram_df: int | None | str,
 ) -> DataFrame:
     """Shared inverted-index scaffolding of the n-gram pair scorers
     (:func:`ngram_jaccard_pairs` and :func:`containment_pairs`):
     explode distinct n-grams, optionally prune grams whose document
-    frequency exceeds ``max_gram_df`` from the INDEX side (denominator
+    frequency exceeds ``max_gram_df`` (``"auto"`` =
+    :data:`DEFAULT_MAX_GRAM_DF`) from the INDEX side (denominator
     sizes still count every gram — scores become lower bounds, never
     false positives), self-equi-join on the gram (+ optional blocking
     key), and count shared grams per ``id_a < id_b`` pair. Returns
     ``[id_a, id_b, _inter, _na, _nb]`` for the caller's scorer."""
+    if max_gram_df == "auto":
+        max_gram_df = DEFAULT_MAX_GRAM_DF
     grams = docs.select(
         F.col(id_col).alias("_id"),
         *([F.col(block_col).alias("_blk")] if block_col else []),
@@ -735,8 +830,6 @@ def ngram_jaccard_pairs(
     text; use :func:`ngram_jaccard_pairs_exact` (``max_gram_df=None``)
     when exact Jaccard on every pair is required — that variant is
     what the d4/d6/k4 oracle gates pin."""
-    if max_gram_df == "auto":
-        max_gram_df = DEFAULT_MAX_GRAM_DF
     return (
         _gram_pair_counts(docs, text_col, id_col, n, block_col, max_gram_df)
         .withColumn(
@@ -804,8 +897,6 @@ def containment_pairs(
     blocking keys. Pass ``max_gram_df=None`` for exact semantics on
     bounded corpora (what the d11 oracle gate pins).
     """
-    if max_gram_df == "auto":
-        max_gram_df = DEFAULT_MAX_GRAM_DF
     return (
         _gram_pair_counts(docs, text_col, id_col, n, block_col, max_gram_df)
         .withColumn(
@@ -839,9 +930,9 @@ def embedding_neardup_pairs(
     operators/similarity.py for the bucketing primitive.
 
     Hot buckets (> ``max_bucket_size`` vectors — e.g. a pile of
-    zero-ish or template embeddings hashing identically) take star
-    pairs against the bucket's min-id vector instead of the B²/2
-    self-join, mirroring :func:`minhash_lsh_pairs`.
+    template embeddings hashing identically) take star pairs against
+    the bucket's min-id vector instead of the B²/2 self-join (see
+    :func:`_candidates`). All-zero vectors score NULL and never pair.
 
     ``scorer='arrow'`` swaps the verification cosine for the
     numpy/BLAS pandas UDF (similarity.py's scale knob) — candidate
@@ -852,9 +943,9 @@ def embedding_neardup_pairs(
     ``id_col`` is assumed to identify a vector (one embedding per
     id). Duplicate-id inputs resolve each pair ANY-MATCH — emitted
     if any of an id's vectors clears the cosine threshold (the
-    verify-before-dedup order, r19) — rather than by an arbitrary
-    surviving duplicate; both are nondeterministic under duplicate
-    ids, neither is contractual (ADVICE r19).
+    verify-before-dedup order) — rather than by an arbitrary
+    surviving duplicate; this is nondeterministic under duplicate ids
+    and not contractual.
     """
     from polaroam_spark.functions.vectors import make_scorer
     from polaroam_spark.operators.similarity import add_lsh_bucket
@@ -863,53 +954,19 @@ def embedding_neardup_pairs(
 
     b = add_lsh_bucket(
         embeddings.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
         ),
-        "_vec",
+        "_v",
         num_planes,
     )
-    bucket_w = Window.partitionBy("lsh_bucket")
-    b = b.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            "_rep": F.min(F.struct("_id", "_vec")).over(bucket_w),
-        }
-    )
-    b = b.persist()  # both self-join sides + hot path
-    normal = b.filter(F.col("_bn") <= max_bucket_size)
-    hot = b.filter(F.col("_bn") > max_bucket_size)
-
-    cand_normal = (
-        normal.alias("a")
-        .join(normal.alias("b"), on="lsh_bucket", how="inner")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._vec").alias("_va"),
-            F.col("b._vec").alias("_vb"),
-        )
-    )
-    cand_hot = hot.filter(F.col("_id") != F.col("_rep._id")).select(
-        F.col("_rep._id").alias("id_a"),
-        F.col("_id").alias("id_b"),
-        F.col("_rep._vec").alias("_va"),
-        F.col("_vec").alias("_vb"),
-    )
-    # verify BEFORE the pair dedup (r19 optimization round, guide
-    # §2.3 — the fingerprint_hamming_pairs fix): cosine is a pure
-    # function of the pair, so filter-then-dedup yields the identical
-    # set while the dedup exchange moves (id_a, id_b, cosine) instead
-    # of BOTH embedding vectors per candidate, and sub-threshold
-    # candidates never shuffle at all. (A vector pair can only reach
-    # the dedup once per shared bucket; multi-bucket duplicates carry
-    # identical cosines, so the kept row is identical too.)
-    cand = cand_normal.unionByName(cand_hot)
-    verified = (
-        cand.withColumn("cosine", score("_va", "_vb"))
-        .filter(F.col("cosine") >= F.lit(cosine_threshold))
-        .select("id_a", "id_b", "cosine")
-        .dropDuplicates(["id_a", "id_b"])
+    keys = ["lsh_bucket"]
+    # persist: both self-join sides + the hot path
+    b = _bucket_stats(b, keys, payload="_v").persist()
+    verified = _verify_then_dedup(
+        _candidates(b, keys, max_bucket_size, payload="_v"),
+        "cosine",
+        score("_va", "_vb"),
+        F.col("cosine") >= F.lit(cosine_threshold),
     )
     return _finalize_pairs(verified, [b], materialize)
 
@@ -1619,23 +1676,13 @@ def expand_index_bands(
     micro-batch would pay an O(corpus) window shuffle on every
     trigger for data that never changes between refreshes.
     """
-    idx_bands = index.select(
-        F.col(id_col).alias("_cid"),
-        F.explode(band_hashes("sig", bands)).alias("_band"),
-    ).select("_cid", "_band.band", "_band.bucket")
-    bucket_w = Window.partitionBy("band", "bucket")
-    idx_bands = idx_bands.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            "_rep": F.min("_cid").over(bucket_w),
-        }
-    )
+    sigs = index.select(F.col(id_col).alias("_id"), F.col("sig").alias("_sig"))
     return (
-        idx_bands.filter(
-            (F.col("_bn") <= F.lit(max_bucket_size))
-            | (F.col("_cid") == F.col("_rep"))
+        _hot_guard(
+            _bucket_stats(_band_keys(sigs, bands), _BAND_KEYS),
+            max_bucket_size,
         )
-        .select("_cid", "band", "bucket")
+        .select(F.col("_id").alias("_cid"), *_BAND_KEYS)
         # bands marker: band keys are a function of `bands` (slice
         # width AND bucket seed), so a persisted table probed under a
         # different bands silently never collides — the readers check
@@ -1654,113 +1701,48 @@ def _incremental_pairs_from_sigs(
     max_bucket_size: int,
     include_batch_pairs: bool,
 ) -> DataFrame:
-    """Pair generation given prepared signatures: ``new_sh`` has
-    columns (_nid, _nsh, _nsig) — caller owns its persistence (it is
-    consumed by the band explode, both verification joins, and the
-    batch self-join)."""
-    new_bands = new_sh.select(
-        "_nid", F.explode(band_hashes("_nsig", bands)).alias("_band")
-    ).select("_nid", "_band.band", "_band.bucket")
-
+    """Pair generation given prepared signatures: ``new_sh`` is a
+    :func:`_batch_signatures` frame (``_id, _shingles, _sig``) — the
+    caller owns its persistence (it is consumed by the band explode,
+    both verification joins, and the batch self-join)."""
+    banded = _bucket_stats(_band_keys(new_sh, bands), _BAND_KEYS)
     # batch-side hot-bucket guard for the CORPUS join: a degenerate
     # batch bucket (100k boilerplate docs in one (band, bucket))
     # would otherwise fan out batch_rows x index_bucket_rows
-    # candidates from a single join task. Same star rule and the same
-    # bounded-miss tradeoff as expand_index_bands on the index side:
-    # only the min-id batch doc in a hot bucket probes the corpus
-    # through that bucket (its bucket-mates still reach the corpus
-    # through their other, non-hot bands, and still pair with the
-    # representative via the guarded batch self-join below).
-    bw0 = Window.partitionBy("band", "bucket")
-    corpus_probe = (
-        new_bands.withColumns(
-            {
-                "_bn0": F.count("*").over(bw0),
-                "_rep0": F.min("_nid").over(bw0),
-            }
-        )
-        .filter(
-            (F.col("_bn0") <= F.lit(max_bucket_size))
-            | (F.col("_nid") == F.col("_rep0"))
-        )
-        .select("_nid", "band", "bucket")
-    )
+    # candidates from a single join task. Same bounded-miss tradeoff
+    # as expand_index_bands on the index side: only the min-id batch
+    # doc in a hot bucket probes the corpus through that bucket (its
+    # bucket-mates still reach the corpus through their other,
+    # non-hot bands, and still pair with the representative via the
+    # batch self-join below).
     cand = (
-        corpus_probe.join(index_bands, on=["band", "bucket"])
-        .select("_nid", "_cid")
-        .dropDuplicates(["_nid", "_cid"])
+        _hot_guard(banded, max_bucket_size)
+        .join(index_bands, on=_BAND_KEYS)
+        .select(F.col("_id").alias("id_a"), F.col("_cid").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
     )
-    corpus_pairs = (
-        cand.join(new_sh.select("_nid", "_nsh"), on="_nid")
-        .join(
-            index.select(
-                F.col(id_col).alias("_cid"),
-                F.col("shingles").alias("_csh"),
-            ),
-            on="_cid",
-        )
-        .withColumn("jaccard_sim", jaccard("_nsh", "_csh"))
-        .filter(F.col("jaccard_sim") >= F.lit(jaccard_threshold))
-        .select(
-            F.col("_nid").alias("id_new"),
-            F.col("_cid").alias("id_match"),
-            "jaccard_sim",
-            F.lit("corpus").alias("match_side"),
-        )
+    index_sh = index.select(
+        F.col(id_col).alias("_id"), F.col("shingles").alias("_shingles")
+    )
+    corpus_pairs = _jaccard_verify(
+        cand, new_sh, index_sh, jaccard_threshold
+    ).select(
+        F.col("id_a").alias("id_new"),
+        F.col("id_b").alias("id_match"),
+        "jaccard_sim",
+        F.lit("corpus").alias("match_side"),
     )
     if not include_batch_pairs:
         return corpus_pairs
-
     # batch-internal pairs from the SAME signature frame — the batch
-    # is never re-shingled or re-signed. Hot batch buckets get the
-    # same star guard as minhash_lsh_pairs.
-    bw = Window.partitionBy("band", "bucket")
-    nb = new_bands.withColumns(
-        {
-            "_bn": F.count("*").over(bw),
-            "_rep": F.min("_nid").over(bw),
-        }
-    )
-    normal = nb.filter(F.col("_bn") <= F.lit(max_bucket_size))
-    bcand_normal = (
-        normal.alias("a")
-        .join(normal.alias("b"), on=["band", "bucket"])
-        .filter(F.col("a._nid") < F.col("b._nid"))
-        .select(
-            F.col("a._nid").alias("id_a"), F.col("b._nid").alias("id_b")
-        )
-    )
-    bcand_hot = (
-        nb.filter(
-            (F.col("_bn") > F.lit(max_bucket_size))
-            & (F.col("_nid") != F.col("_rep"))
-        )
-        .select(F.col("_rep").alias("id_a"), F.col("_nid").alias("id_b"))
-    )
-    bcand = bcand_normal.unionByName(bcand_hot).dropDuplicates(
-        ["id_a", "id_b"]
-    )
-    batch_pairs = (
-        bcand.join(
-            new_sh.select(
-                F.col("_nid").alias("id_a"), F.col("_nsh").alias("_sh_a")
-            ),
-            on="id_a",
-        )
-        .join(
-            new_sh.select(
-                F.col("_nid").alias("id_b"), F.col("_nsh").alias("_sh_b")
-            ),
-            on="id_b",
-        )
-        .withColumn("jaccard_sim", jaccard("_sh_a", "_sh_b"))
-        .filter(F.col("jaccard_sim") >= F.lit(jaccard_threshold))
-        .select(
-            F.col("id_b").alias("id_new"),
-            F.col("id_a").alias("id_match"),
-            "jaccard_sim",
-            F.lit("batch").alias("match_side"),
-        )
+    # is never re-shingled or re-signed
+    batch_pairs = _minhash_self_pairs(
+        new_sh, banded, jaccard_threshold, max_bucket_size
+    ).select(
+        F.col("id_b").alias("id_new"),
+        F.col("id_a").alias("id_match"),
+        "jaccard_sim",
+        F.lit("batch").alias("match_side"),
     )
     return corpus_pairs.unionByName(batch_pairs)
 
@@ -1776,9 +1758,9 @@ def _batch_signatures(
     return build_minhash_index(
         new_docs, text_col, id_col, shingle_k, num_hashes, portable
     ).select(
-        F.col(id_col).alias("_nid"),
-        F.col("shingles").alias("_nsh"),
-        F.col("sig").alias("_nsig"),
+        F.col(id_col).alias("_id"),
+        F.col("shingles").alias("_shingles"),
+        F.col("sig").alias("_sig"),
     )
 
 
@@ -1860,8 +1842,7 @@ def dedup_incremental(
     pairs = minhash_lsh_pairs_incremental(
         new_docs, index, id_col=id_col, **kwargs
     )
-    losers = pairs.select(F.col("id_new").alias(id_col)).dropDuplicates()
-    return new_docs.join(losers, on=id_col, how="left_anti")
+    return _greedy_survivors(new_docs, pairs, id_col, loser="id_new")
 
 
 def fuzzy_text_join(

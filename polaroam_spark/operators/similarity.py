@@ -556,6 +556,10 @@ def embedding_similarity_join(
     right bucket's min-id representative only — an approximation,
     documented rather than silent: a template-vector pile matches
     through one representative instead of exploding one join task.
+    The bucket window and the right side's one-sided guard are the
+    dedup pair core's (:func:`~polaroam_spark.operators.dedup.
+    _bucket_stats`, :func:`~polaroam_spark.operators.dedup.
+    _hot_guard`). All-zero vectors score NULL and never pair.
 
     SIZING: the bucket space is only ``2^num_planes``, and occupancy
     grows linearly with table size — once
@@ -568,61 +572,43 @@ def embedding_similarity_join(
     instead). Dedup each side first for degenerate corpora.
     """
     from polaroam_spark.functions.vectors import make_scorer
+    from polaroam_spark.operators.dedup import _bucket_stats, _hot_guard
 
     rid = right_id or left_id
     rvec = right_vec or vec_col
     score = make_scorer(scorer)
+    keys = ["lsh_bucket"]
 
-    lb = add_lsh_bucket(
-        left.select(
-            F.col(left_id).alias("_lid"), F.col(vec_col).alias("_lv")
-        ),
-        "_lv",
-        num_planes,
-        bucketer,
-    )
-    rb = add_lsh_bucket(
-        right.select(
-            F.col(rid).alias("_rid"), F.col(rvec).alias("_rv")
-        ),
-        "_rv",
-        num_planes,
-        bucketer,
-    )
-    # ids only in the window aggregates — a min(struct(id, vec))
-    # would shuffle a second full vector copy per row
-    w = Window.partitionBy("lsh_bucket")
-    rb = rb.withColumns(
-        {
-            "_rbn": F.count("*").over(w),
-            "_rep_id": F.min("_rid").over(w),
-        }
-    )
-    rep = rb.filter(F.col("_rid") == F.col("_rep_id")).select(
-        "lsh_bucket", "_rid", "_rv"
-    )
-    r_side = (
-        rb.filter(F.col("_rbn") <= max_bucket_size)
-        .select("lsh_bucket", "_rid", "_rv")
-        .unionByName(
-            rb.filter(
-                (F.col("_rbn") > max_bucket_size)
-                & (F.col("_rid") == F.col("_rep_id"))
-            ).select("lsh_bucket", "_rid", "_rv")
+    def bucketed(df: DataFrame, id_col: str, vec: str, v: str):
+        # ids only in the window aggregates — a min(struct(id, vec))
+        # would shuffle a second full vector copy per row
+        return _bucket_stats(
+            add_lsh_bucket(
+                df.select(F.col(id_col).alias("_id"), F.col(vec).alias(v)),
+                v,
+                num_planes,
+                bucketer,
+            ),
+            keys,
         )
-    )
-    lb = lb.withColumn("_lbn", F.count("*").over(w))
+
+    lb = bucketed(left, left_id, vec_col, "_lv")
+    rb = bucketed(right, rid, rvec, "_rv")
+    r_cols = ["lsh_bucket", F.col("_id").alias("_rid"), "_rv"]
+    r_side = _hot_guard(rb, max_bucket_size).select(*r_cols)
+    rep = rb.filter(F.col("_id") == F.col("_rep")).select(*r_cols)
+    l_cols = ["lsh_bucket", F.col("_id").alias("_lid"), "_lv"]
     cand = (
-        lb.filter(F.col("_lbn") <= max_bucket_size)
-        .drop("_lbn")
-        .join(r_side, on="lsh_bucket", how="inner")
+        lb.filter(F.col("_bn") <= max_bucket_size)
+        .select(*l_cols)
+        .join(r_side, on=keys, how="inner")
         .unionByName(
             # hot LEFT buckets: each left row meets only the right
             # representative — bounds one bucket's work at |left
             # bucket| instead of |left bucket| x |right bucket|
-            lb.filter(F.col("_lbn") > max_bucket_size)
-            .drop("_lbn")
-            .join(rep, on="lsh_bucket", how="inner")
+            lb.filter(F.col("_bn") > max_bucket_size)
+            .select(*l_cols)
+            .join(rep, on=keys, how="inner")
         )
     )
     return (

@@ -320,6 +320,7 @@ def streaming_dedup_incremental(
     """
     from polaroam_spark.operators.dedup import (
         _batch_signatures,
+        _greedy_survivors,
         _incremental_pairs_from_sigs,
         check_index_format,
         expand_index_bands,
@@ -347,10 +348,9 @@ def streaming_dedup_incremental(
                 max_bucket_size,
                 include_batch_pairs=True,
             )
-            losers = pairs.select(
-                F.col("id_new").alias(id_col)
-            ).dropDuplicates()
-            survivors = batch_df.join(losers, on=id_col, how="left_anti")
+            survivors = _greedy_survivors(
+                batch_df, pairs, id_col, loser="id_new"
+            )
             (
                 survivors.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")

@@ -1168,3 +1168,61 @@ def test_memorization_scan_null_id_guards(spark):
     # the NULL-id doc neither counts nor crowds out doc 3
     assert r.n_corpus_docs == 3
     assert list(r.matched_doc_ids) == [1, 2, 3]
+
+
+def test_zero_vectors_never_pair_under_either_scorer(spark):
+    """An all-zero vector has no direction: the native cosine must
+    score it NULL (not abort the job with DIVIDE_BY_ZERO under ANSI)
+    and agree with the arrow scorer on every output."""
+    from polaroam_spark.operators.similarity import (
+        embedding_similarity_join,
+    )
+
+    emb = spark.createDataFrame(
+        [
+            (1, [0.0, 0.0, 0.0]),
+            (2, [0.0, 0.0, 0.0]),
+            (3, [1.0, 0.0, 0.0]),
+            (4, [1.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    pairs = {
+        s: sorted(
+            tuple(r)
+            for r in embedding_neardup_pairs(emb, scorer=s).collect()
+        )
+        for s in ("native", "arrow")
+    }
+    assert pairs["native"] == pairs["arrow"] == [(3, 4, 1.0)]
+    joined = {
+        s: sorted(
+            tuple(r)
+            for r in embedding_similarity_join(emb, emb, scorer=s).collect()
+        )
+        for s in ("native", "arrow")
+    }
+    assert joined["native"] == joined["arrow"] == [
+        (3, 3, 1.0), (3, 4, 1.0), (4, 3, 1.0), (4, 4, 1.0)
+    ]
+
+
+def test_fingerprint_hamming_chunk_bounds(spark):
+    """One 64-bit chunk builds its all-ones mask without overflowing a
+    long; more chunks than bits (zero-bit chunks: one bucket for every
+    document) and widths outside 1..64 are rejected."""
+    from polaroam_spark.operators.dedup import fingerprint_hamming_pairs
+
+    fps = spark.createDataFrame(
+        [(1, 5), (2, 5), (3, -7), (4, -7), (5, 6), (6, None)],
+        "doc_id long, fp long",
+    )
+    got = fingerprint_hamming_pairs(
+        fps, "fp", bits=64, chunks=1, max_hamming=0
+    ).collect()
+    assert sorted(tuple(r) for r in got) == [(1, 2, 0), (3, 4, 0)]
+    for bits, chunks in ((2, 3), (0, 1), (65, 4), (64, 0)):
+        with pytest.raises(ValueError, match="chunks <= bits <= 64"):
+            fingerprint_hamming_pairs(
+                fps, "fp", bits=bits, chunks=chunks, max_hamming=0
+            )
