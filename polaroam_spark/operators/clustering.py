@@ -123,13 +123,17 @@ def _node_table(
     models.py:60-87); callers that drop it let column pruning remove it.
 
     ``per_user`` pins the table to ONE exchange, a keyed repartition on
-    uid (r19, guide §2.2/§2.4) that satisfies both the aggregation and
-    the grouped map's ``groupBy("uid")``. AQE's bytes-based coalescing
-    is the wrong adaptivity for the compute-bound Python stage above:
-    it coalesced the tiny node table to ONE partition, so the per-user
-    sweep ran serially in one worker (~4.5 s of the DBSCAN row's ~6 s).
-    A keyed repartition is exempt, and its count scales with the
-    session. The distributed path passes ``per_user=False``: a uid-only
+    uid that satisfies both the aggregation and the grouped map's
+    ``groupBy("uid")``. Its partition count is the larger of the
+    worker slots (``defaultParallelism``) and the session's shuffle
+    partitions, so a cluster sized by ``spark.sql.shuffle.partitions``
+    spreads straggler users over that many Python tasks. Each task of
+    the grouped map pays a fixed worker set-up cost (0.2-0.75 s of CPU
+    measured on 4 local cores), so a local session that ``get_spark``
+    starts sets the two equal: one task per slot. AQE's bytes-based
+    coalescing would merge the tiny node table into one partition and
+    run every user's sweep in one worker; a keyed repartition is
+    exempt. The distributed path passes ``per_user=False``: a uid-only
     key would put one huge user into one task."""
     glat, glon = _node_key(min_spacial_resolution)
     nodes = medians.select(

@@ -20,13 +20,19 @@ Deliberate, documented divergences (SURVEY.md §2i):
 Scale notes: per-cluster stats frames are tiny relative to the stop
 table (one row per (uid, cluster)); the label join is an equi-join on
 (uid, stop_locations) that AQE will broadcast — we force ``broadcast``
-for determinism. The only wide shuffles are the two groupBys on
-(uid[, stop_locations]), both pre-aggregated map-side.
+for determinism. Each detect pass shuffles once: one uid-keyed
+exchange of the (uid, cluster, date) projection serves the distinct
+dates, the per-uid date count and the per-cluster aggregate. The
+distinct then runs after the exchange, so the pass shuffles every
+stop row it keeps rather than map-side-combined triples: the shape
+pays while stops per (uid, cluster, date) stay near 1 (1.14 in the
+home pass and 1.00 in the work pass of the benchmark's ``mobility``
+input). ``home_work_wide`` is one ``groupBy("uid")``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polaroam_spark.functions.datetimes import from_epoch, iso_weekday
@@ -93,24 +99,20 @@ def date_counts(df: DataFrame, total_days: DataFrame | int) -> DataFrame:
             F.broadcast(total_days.withColumnRenamed("total_days", "time_span"))
         )
 
-    # ONE pass over the (member-scaled) input (r19 optimization
-    # round): the old shape ran TWO independent countDistinct
-    # aggregations (per-uid + per-cluster) and joined them — the
-    # input lineage executed twice per action, and detect_home /
-    # detect_work compound that (the bench homework plan carried 62
-    # Exchanges of the same stop subtree). Now: one map-side-combined
-    # distinct to (uid, cluster, date) triples, then windows over the
-    # TINY triple frame —
+    # One uid-keyed exchange serves all three steps: the distinct to
+    # (uid, cluster, date) triples, the uid window over them and the
+    # (uid, cluster) aggregate, since a uid partitioning satisfies
+    # every one of their keys. Over the triples,
     #   - cluster_dates  == non-NULL-date triples per (uid, cluster)
     #   - total_dates    == max dense_rank of date within uid
     #     (date desc NULLS LAST, so NULL dates never take a rank —
-    #     exactly countDistinct's NULL-skipping)
-    # — and the final groupBy reuses the uid window partitioning.
-    # Same rows, same types, same column order. Guide §2.4.
-    # NULL-uid groups fell out of the old stats join (inner, on uid —
-    # NULL never equals NULL); keep that contract explicitly
+    #     exactly countDistinct's NULL-skipping).
+    # NULL uids are dropped, as an inner join of per-uid and
+    # per-cluster counts on uid would drop them.
     triples = (
         df.filter(F.col("uid").isNotNull())
+        .select("uid", "stop_locations", "date", "time_span")
+        .repartition("uid")
         .groupBy("uid", "stop_locations", "date")
         .agg(F.first("time_span").alias("time_span"))
     )
@@ -335,37 +337,34 @@ def home_work_wide(labeled: DataFrame) -> DataFrame:
     """Wide per-user export ``uid, h_lat, h_lon, w_lat, w_lon``
     (reference get_stops_and_clusters.py:171-182). Requires medoid
     columns (``cluster_latitude``/``cluster_longitude``, reference
-    models.py:263). Keep-first per (uid, location_type) by
-    cluster_counts desc for determinism, then pivot with explicit
-    values — Spark skips the extra distinct-values job when the pivot
-    domain is given.
+    models.py:263). Per user and type, the medoid of the row first by
+    ``cluster_counts`` desc NULLS LAST, then ``stop_locations`` asc
+    NULLS LAST, for determinism: one ``groupBy("uid")`` whose
+    ``max_by`` key orders NULLs lowest and ``~stop_locations``
+    reverses the id order.
     """
-    w = Window.partitionBy("uid", "location_type").orderBy(
-        F.col("cluster_counts").desc_nulls_last(),
-        F.col("stop_locations").asc_nulls_last(),
+    key = F.struct(
+        F.col("cluster_counts"), F.bitwise_not(F.col("stop_locations"))
     )
-    hw = (
-        labeled.filter(F.col("location_type").isin("H", "W"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "uid", "location_type", "cluster_latitude", "cluster_longitude"
-        )
+    medoid = F.struct(
+        F.col("cluster_latitude").alias("lat"),
+        F.col("cluster_longitude").alias("lon"),
     )
+
+    def pick(t: str) -> Column:
+        hit = F.col("location_type") == t
+        return F.max_by(F.when(hit, medoid), F.when(hit, key)).alias(t)
+
     return (
-        hw.groupBy("uid")
-        .pivot("location_type", ["H", "W"])
-        .agg(
-            F.first("cluster_latitude").alias("lat"),
-            F.first("cluster_longitude").alias("lon"),
-        )
-        .withColumnsRenamed(
-            {
-                "H_lat": "h_lat",
-                "H_lon": "h_lon",
-                "W_lat": "w_lat",
-                "W_lon": "w_lon",
-            }
+        labeled.filter(F.col("location_type").isin("H", "W"))
+        .groupBy("uid")
+        .agg(pick("H"), pick("W"))
+        .select(
+            "uid",
+            F.col("H.lat").alias("h_lat"),
+            F.col("H.lon").alias("h_lon"),
+            F.col("W.lat").alias("w_lat"),
+            F.col("W.lon").alias("w_lon"),
         )
     )
 

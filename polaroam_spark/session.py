@@ -5,16 +5,23 @@ Defaults chosen for correctness + scale:
   deterministic regardless of host tz (the reference bakes local wall
   time into epochs explicitly; see sources/io.py:localize_timestamps);
 - AQE on (runtime coalescing, skew-join splitting);
-- Arrow on (grouped-map pandas UDFs transfer columnar batches).
+- Arrow on (grouped-map pandas UDFs transfer columnar batches);
+- on a session it starts on a local master, shuffle partitions equal
+  to ``sc.defaultParallelism`` (N for ``local[N]``) unless something
+  else sets them. A constant larger than the core count only adds
+  tasks, and every task of a Python stage pays a fixed worker set-up
+  cost. A cluster master keeps its deployment's setting, and a live
+  session keeps its own value.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = "32"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def get_spark(
@@ -29,6 +36,12 @@ def get_spark(
     is set, else ``local[*]``. On a real cluster, pass ``master=None``
     and set ``spark.master`` externally (spark-submit); the builder only
     sets master when it resolves to a non-empty value.
+
+    ``shuffle_partitions`` sets ``spark.sql.shuffle.partitions`` (also
+    on a live session). Without it, a value from ``extra_conf``,
+    spark-submit or spark-defaults wins; failing that, a session this
+    call starts on a local master gets ``sc.defaultParallelism``, and a
+    live session or a cluster master is left as it is.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None and "SPARK_MASTER" in os.environ:
@@ -52,20 +65,28 @@ def get_spark(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
         # Stop detection / clustering never needs more than a few hundred
         # MB per task; keep scan splits at the default 128MB and let AQE
         # coalesce small shuffle outputs.
         "spark.sql.parquet.filterPushdown": "true",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
     }
+    if shuffle_partitions:
+        conf[_SHUFFLE_PARTITIONS] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    fresh = SparkContext._active_spark_context is None
+    spark = b.getOrCreate()
+    sc = spark.sparkContext
+    if (
+        fresh
+        and sc.master.split("[")[0] == "local"
+        and not sc.getConf().contains(_SHUFFLE_PARTITIONS)
+    ):
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(sc.defaultParallelism))
+    return spark
 
 
 def fan_out(df, min_factor: int = 1):

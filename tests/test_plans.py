@@ -983,25 +983,39 @@ def test_grouped_map_plans_infer_eval_type(spark):
     ]
 
 
+def _simple_plan(df):
+    return df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("simple")
+    )
+
+
+def _depth(line):
+    m = re.search(r"[+:]- ", line)
+    return m.start() if m else -1
+
+
+def _subtrees(df, node):
+    """Lines of the simple physical plan under each ``node`` line (the
+    node itself excluded), one list per occurrence."""
+    plan = _simple_plan(df).splitlines()
+    subs = []
+    for top, head in enumerate(plan):
+        if node not in head:
+            continue
+        sub = []
+        for line in plan[top + 1:]:
+            if _depth(line) <= _depth(head):
+                break
+            sub.append(line)
+        subs.append(sub)
+    return subs
+
+
 def _grouped_map_subtree(df):
     """Lines of the physical plan under the FlatMapGroupsInPandas
     node (the node itself excluded)."""
-    plan = df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("simple")
-    ).splitlines()
-
-    def depth(line):
-        m = re.search(r"[+:]- ", line)
-        return m.start() if m else -1
-
-    top = next(i for i, l in enumerate(plan) if "FlatMapGroupsInPandas" in l)
-    sub = []
-    for line in plan[top + 1:]:
-        if depth(line) <= depth(plan[top]):
-            break
-        sub.append(line)
-    return sub
+    return _subtrees(df, "FlatMapGroupsInPandas")[0]
 
 
 def test_per_user_clustering_maps_one_uid_exchange(spark):
@@ -1033,3 +1047,71 @@ def test_per_user_clustering_maps_one_uid_exchange(spark):
             r"Exchange hashpartitioning\(uid#\d+, \d+\), REPARTITION_BY_NUM",
             exchanges[0],
         ), exchanges
+
+
+def _own_lines(sub):
+    """``sub`` without the subtrees of the broadcasts nested in it."""
+    own, cut = [], None
+    for line in sub:
+        d = _depth(line)
+        if cut is not None and d > cut:
+            continue
+        cut = None
+        own.append(line)
+        if "BroadcastExchange" in line:
+            cut = d
+    return own
+
+
+def test_homework_detect_pass_stats_one_exchange(spark):
+    """Each detect pass's label frame (the broadcast side of its label
+    join) is built over ONE uid-keyed exchange: the distinct dates,
+    the per-uid date count and the per-cluster aggregate share it. The
+    work pass's input holds the home pass, whose broadcast is left out
+    of the work pass's count."""
+    from polaroam_spark.operators.homework import (
+        detect_home,
+        detect_work,
+        prepare_labeling,
+    )
+
+    stops = spark.createDataFrame(
+        [("u1", i % 3, 1700006400 + i * 3600, 1700006400 + i * 3600 + 1800)
+         for i in range(48)],
+        "uid string, stop_locations long, "
+        "start_timestamp long, end_timestamp long",
+    )
+    for df, passes in (
+        (detect_home(prepare_labeling(stops)), 1),
+        (detect_work(detect_home(prepare_labeling(stops))), 3),
+    ):
+        stats = _subtrees(df, "BroadcastExchange")
+        assert len(stats) == passes
+        for sub in stats:
+            exchanges = [
+                l for l in _own_lines(sub)
+                if "Exchange" in l and "BroadcastExchange" not in l
+            ]
+            assert len(exchanges) == 1, exchanges
+            assert re.search(
+                r"Exchange hashpartitioning\(uid#\d+, \d+\)", exchanges[0]
+            ), exchanges
+
+
+def test_home_work_wide_one_exchange_no_window(spark):
+    """``home_work_wide`` picks each type's medoid in one
+    ``groupBy("uid")``: one exchange, no window, no pivot."""
+    from polaroam_spark.operators.homework import home_work_wide
+
+    labeled = spark.createDataFrame(
+        [("a", "H", 0, 3, 1.0, 2.0), ("a", "W", 1, 2, 3.0, 4.0)],
+        "uid string, location_type string, stop_locations long,"
+        " cluster_counts long, cluster_latitude double,"
+        " cluster_longitude double",
+    )
+    plan = _simple_plan(home_work_wide(labeled))
+    assert re.findall(r"Exchange \w+", plan) == [
+        "Exchange hashpartitioning"
+    ], plan
+    assert "Window" not in plan, plan
+    assert "pivot" not in plan.lower(), plan

@@ -10,7 +10,10 @@ Usage:
 
 ``--uses MODULE`` (repeatable) selects the gates whose builder source
 (``inspect.getsource``) names that module, e.g. the gates a change to
-``operators/clustering.py`` touches. Names and ``--uses`` combine
+``operators/clustering.py`` touches. The scan covers the
+``__spark_entry__`` helpers a builder calls, transitively (the
+home/work gates reach ``operators.homework`` only through
+``_home_df`` and ``_work_df``). Names and ``--uses`` combine
 with AND. Exits 1 when any selected gate reports SPARK_ERROR,
 ORACLE_ERROR or MISMATCH, 2 when nothing is selected.
 """
@@ -58,13 +61,39 @@ for t in [
 sqls = entry_mod.oracle_sql()
 
 
+def _names(code):
+    """Global names ``code`` and the functions nested in it load."""
+    names = set(code.co_names)
+    for c in code.co_consts:
+        if inspect.iscode(c):
+            names |= _names(c)
+    return names
+
+
+def _source(fn) -> str:
+    """Source of ``fn`` and of every ``__spark_entry__`` function it
+    calls, transitively."""
+    seen, todo, srcs = set(), [fn], []
+    while todo:
+        f = todo.pop()
+        if f in seen:
+            continue
+        seen.add(f)
+        srcs.append(inspect.getsource(f))
+        for n in _names(f.__code__):
+            g = getattr(entry_mod, n, None)
+            if inspect.isfunction(g) and g.__module__ == entry_mod.__name__:
+                todo.append(g)
+    return "\n".join(srcs)
+
+
 def _selected(name: str, fn) -> bool:
     if args.gates and not any(
         g in (name, name.split("_")[0]) for g in args.gates
     ):
         return False
     if args.uses:
-        src = inspect.getsource(fn)
+        src = _source(fn)
         return any(
             re.search(rf"\b{re.escape(m)}\b", src) for m in args.uses
         )
