@@ -21,6 +21,15 @@ trading exactness for scale:
 - ``ann_ivfpq_topk`` — IVF × PQ composed (the Faiss-style serving
   layout): probe-pruned lists over quantized codes.
 
+Every path is partition → local top-k → merge over one core, and
+keeps only its candidate generation, score and sort direction: the
+ranking rule :func:`_rank_topk`, the Lloyd step :func:`_lloyd_update`,
+the PQ layout check :func:`_pq_geometry`, the nearest-codeword kernels
+:func:`_nearest_code` (native) and :func:`_codebook_tensor` +
+:func:`_nearest_codes` (numpy, also OPQ's), and the IVF probe and
+centroid join :func:`_ivf_probe` / :func:`_centroid_join`.
+``tests/test_vector_golden.py`` pins every path's output.
+
 Hyperplanes are deterministic pseudo-random (sin-based formula) so
 runs are reproducible across sessions/engines without shipping a
 weights file; components are computed with JVM math functions.
@@ -35,11 +44,53 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from polaroam_spark.functions.vectors import (
-    cosine_similarity,
-    cosine_similarity_arrow,
-    make_scorer as _make_scorer,
-)
+from polaroam_spark.functions.vectors import make_scorer as _make_scorer
+
+# Bound on the rows of the one driver-side codebook collect
+# (:func:`_codebook_tensor`): M × K rows. 256 subspaces × 256 codes
+# (8-bit codes, the Faiss convention) is 65536 rows; the tensor is
+# then K × D doubles, 8 MB at D = 4096. Anything larger is a corpus
+# mistaken for a codebook.
+_MAX_CODEBOOK_ROWS = 1 << 16
+
+
+def _rank_topk(
+    scored: DataFrame, query_id: str, data_id: str, score: str, k: int,
+    ascending: bool = False, dedup: bool = False,
+) -> DataFrame:
+    """The per-query ranking rule: ``[query_id, data_id, score, rank]``
+    for the ``k`` best rows per query by ``score`` (descending unless
+    ``ascending``), ties to the smaller data id. Projects BEFORE the
+    window exchange, which otherwise shuffles both vectors (~2 × dim
+    doubles) per candidate instead of one double; ``dedup`` then drops
+    repeated (query, id) pairs (multi-probe candidates — the score is a
+    pure function of the pair)."""
+    ranked = scored.select(query_id, data_id, score)
+    if dedup:
+        ranked = ranked.dropDuplicates([query_id, data_id])
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(query_id).orderBy(order, F.col(data_id).asc())
+    return ranked.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _lloyd_update(assigned: DataFrame, keys: list, vec: str, out: str):
+    """Lloyd centroid step: ``[*keys, out]``, ``out`` the per-dimension
+    mean of the ``vec`` arrays assigned to each key (posexplode →
+    groupBy(key, dim) → avg, re-assembled in dimension order)."""
+    return (
+        assigned.select(*keys, F.posexplode(vec).alias("_pos", "_val"))
+        .groupBy(*keys, "_pos")
+        .agg(F.avg("_val").alias("_mean"))
+        .groupBy(*keys)
+        .agg(
+            F.array_sort(F.collect_list(F.struct("_pos", "_mean"))).alias(
+                "_dims"
+            )
+        )
+        .select(*keys, F.transform("_dims", lambda s: s["_mean"]).alias(out))
+    )
 
 
 def _plane_component(p: int | Column, d: Column) -> Column:
@@ -185,14 +236,39 @@ def _assign_to_centroids(
         return best.select(
             id_col, F.col("_best.centroid_id").alias("centroid_id")
         )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("_ccos").desc(), F.col("centroid_id")
+    return _rank_topk(scored, id_col, "centroid_id", "_ccos", keep).select(
+        id_col, "centroid_id"
     )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= keep)
-        .select(id_col, "centroid_id")
+
+
+def _centroid_join(
+    df: DataFrame, assign: DataFrame, right: DataFrame, id_col: str
+) -> DataFrame:
+    """``df`` equi-joined on ``id_col`` to ``assign`` (one side
+    carries each row's ``centroid_id``), then to the broadcast,
+    ``centroid_id``-keyed ``right``: the centroid vectors (residuals)
+    or the queries probing each list (IVF search)."""
+    return df.join(assign, on=id_col).join(
+        F.broadcast(right), on="centroid_id"
     )
+
+
+def _ivf_probe(
+    data, queries, index, data_id, query_id, vec_col, num_probes, score
+):
+    """IVF query phase of :func:`ann_ivf_topk` and
+    :func:`ann_ivfpq_topk`: ``(q, q_probe, cand)`` — the query side
+    ``[query_id, _qvec]``, each query's ``num_probes`` nearest
+    centroids, and the ``data`` rows of the probed lists joined to
+    their probing queries."""
+    if num_probes < 1:
+        raise ValueError(f"num_probes must be >= 1, got {num_probes}")
+    centroids, assign = index
+    q = queries.select(F.col(query_id), F.col(vec_col).alias("_qvec"))
+    q_probe = _assign_to_centroids(
+        q, centroids, query_id, "_qvec", num_probes, score
+    )
+    return q, q_probe, _centroid_join(data, assign, q_probe, data_id)
 
 
 def build_ivf_index(
@@ -232,6 +308,8 @@ def build_ivf_index(
     groupBy(centroid, dim) → avg, re-assembled into an array); the
     centroid table never leaves broadcast size.
     """
+    if num_centroids < 1:
+        raise ValueError(f"num_centroids must be >= 1, got {num_centroids}")
     score = _make_scorer(scorer)
     centroids = (
         data.orderBy(F.xxhash64(F.col(data_id).cast("string")))
@@ -246,26 +324,8 @@ def build_ivf_index(
         assigned = _assign_to_centroids(
             d, centroids, data_id, "_dvec", 1, score
         )
-        centroids = (
-            d.join(assigned, on=data_id)
-            .select(
-                "centroid_id",
-                F.posexplode("_dvec").alias("_pos", "_val"),
-            )
-            .groupBy("centroid_id", "_pos")
-            .agg(F.avg("_val").alias("_mean"))
-            .groupBy("centroid_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("_pos", "_mean"))
-                ).alias("_dims")
-            )
-            .select(
-                "centroid_id",
-                F.transform(
-                    F.col("_dims"), lambda s: s["_mean"]
-                ).alias("_cvec"),
-            )
+        centroids = _lloyd_update(
+            d.join(assigned, on=data_id), ["centroid_id"], "_dvec", "_cvec"
         )
     assignment = _assign_to_centroids(
         d, centroids, data_id, "_dvec", 1, score
@@ -327,34 +387,14 @@ def ann_ivf_topk(
             "conflict with a prebuilt index= — they describe "
             "build_ivf_index's job, which already ran"
         )
-    centroids, d_assign = index
-
     d = data.select(F.col(data_id), F.col(vec_col).alias("_dvec"))
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("_qvec"))
-    q_probe = _assign_to_centroids(
-        q, centroids, query_id, "_qvec", num_probes, score
+    q, _, cand = _ivf_probe(
+        d, queries, index, data_id, query_id, vec_col, num_probes, score
     )
-
-    candidates = (
-        d.join(d_assign, on=data_id)
-        .join(F.broadcast(q_probe), on="centroid_id")
-        .join(F.broadcast(q), on=query_id)
-    )
-    # project BEFORE the top-k window exchange (r19 optimization
-    # round, guide §2.3): the window needs only (query, id, cosine);
-    # without the projection the exchange shuffles both embedding
-    # vectors (~2 x dim doubles) per candidate row.
-    scored = candidates.withColumn(
+    scored = cand.join(F.broadcast(q), on=query_id).withColumn(
         "cosine", score("_dvec", "_qvec")
-    ).select(query_id, data_id, "cosine")
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(data_id).asc()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, data_id, "cosine", "rank")
-    )
+    return _rank_topk(scored, query_id, data_id, "cosine", k)
 
 
 def cosine_topk(
@@ -381,23 +421,10 @@ def cosine_topk(
             F.col(query_id), F.col(vec_col).alias("_qvec")
         )
     )
-    # project BEFORE the top-k window exchange (r19 optimization
-    # round, guide §2.3): this exact path scores |data| x |queries|
-    # rows, and without the projection every one of them shuffled
-    # both embedding vectors into the window; now one double each.
     scored = data.select(
         F.col(data_id), F.col(vec_col).alias("_dvec")
-    ).crossJoin(q).withColumn(
-        "cosine", score("_dvec", "_qvec")
-    ).select(query_id, data_id, "cosine")
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(data_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, data_id, "cosine", "rank")
-    )
+    ).crossJoin(q).withColumn("cosine", score("_dvec", "_qvec"))
+    return _rank_topk(scored, query_id, data_id, "cosine", k)
 
 
 def ann_lsh_topk(
@@ -508,26 +535,10 @@ def ann_lsh_topk(
         )
         q = q.withColumn("lsh_bucket", F.explode(probe_buckets))
     q = q.drop("_dots")
-    joined = d.join(F.broadcast(q), on="lsh_bucket", how="inner")
-    # project BEFORE the dedup exchange (r19 optimization round,
-    # guide §2.3): cosine is a pure function of the (query, data)
-    # pair, so multi-probe duplicates carry identical cosines and
-    # deduplicating the 3-column projection yields the identical
-    # result — while the exchange moves one double per candidate
-    # instead of both embedding vectors (~2 x dim doubles).
-    scored = (
-        joined.withColumn("cosine", score("_dvec", "_qvec"))
-        .select(query_id, data_id, "cosine")
-        .dropDuplicates([query_id, data_id])
+    scored = d.join(F.broadcast(q), on="lsh_bucket", how="inner").withColumn(
+        "cosine", score("_dvec", "_qvec")
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(data_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, data_id, "cosine", "rank")
-    )
+    return _rank_topk(scored, query_id, data_id, "cosine", k, dedup=True)
 
 
 def embedding_similarity_join(
@@ -571,12 +582,11 @@ def embedding_similarity_join(
     broader semantic linking run :func:`ann_lsh_topk` per query batch
     instead). Dedup each side first for degenerate corpora.
     """
-    from polaroam_spark.functions.vectors import make_scorer
     from polaroam_spark.operators.dedup import _bucket_stats, _hot_guard
 
     rid = right_id or left_id
     rvec = right_vec or vec_col
-    score = make_scorer(scorer)
+    score = _make_scorer(scorer)
     keys = ["lsh_bucket"]
 
     def bucketed(df: DataFrame, id_col: str, vec: str, v: str):
@@ -649,6 +659,112 @@ def _l2sq(a, b) -> Column:
     )
 
 
+def _vector_dim(df: DataFrame, vec_col: str) -> "int | None":
+    """Length of the first vector in ``df``, None when it is empty."""
+    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    return None if first is None else int(first["d"])
+
+
+def _pq_geometry(
+    dim: int, m: "int | None" = None, codebooks: "DataFrame | None" = None
+) -> tuple[int, int]:
+    """``(m, d_sub)`` of a PQ layout over ``dim``-dim vectors, or a
+    ``ValueError``. Training passes ``m``; encoding and search read it
+    from ``codebooks``, whose subspace ids must be exactly ``0..m-1``:
+    every consumer is positional by subspace, so a missing middle
+    subspace would silently shift later ones onto the wrong codewords.
+    ``m`` must divide ``dim`` (padding would distort the last
+    subspace's metric). Gapped CODE ids are legal (filled with +inf)."""
+    if codebooks is not None:
+        row = codebooks.agg(
+            (F.max("_m") + 1).alias("m"),
+            F.min("_m").alias("m_min"),
+            F.countDistinct("_m").alias("m_distinct"),
+        ).first()
+        if row["m"] is None:
+            raise ValueError("codebooks are empty")
+        m = int(row["m"])
+        if row["m_min"] != 0 or row["m_distinct"] != m:
+            raise ValueError(
+                f"codebooks must cover every subspace 0..{m - 1} exactly"
+                f" once (got min _m={row['m_min']},"
+                f" {row['m_distinct']} distinct of {m} expected)"
+            )
+    if m < 1:
+        raise ValueError(f"num_subspaces must be >= 1, got {m}")
+    if dim % m != 0:
+        raise ValueError(
+            f"subspace count {m} does not divide vector dim {dim} (a dim"
+            " not divisible by it would leave a ragged last subspace)"
+        )
+    return m, dim // m
+
+
+def _nearest_code(
+    slices: DataFrame, codebooks: DataFrame, id_col: str, *carry: str
+) -> DataFrame:
+    """Native nearest-codeword kernel: ``[id_col, _m, _code, *carry]``,
+    one row per (vector, subspace) of ``slices`` (:func:`_pq_slices`),
+    by min-of-struct over :func:`_l2sq` against the broadcast
+    codebooks — no window; ties go to the smallest code id (struct
+    ordering), deterministic on any engine."""
+    return (
+        slices.join(F.broadcast(codebooks), on="_m")
+        .groupBy(id_col, "_m")
+        .agg(
+            F.min(
+                F.struct(
+                    _l2sq("_svec", "_cvec").alias("_d"),
+                    F.col("_code").alias("_code"),
+                    *(F.col(c).alias(c) for c in carry),
+                )
+            ).alias("_best")
+        )
+        .select(id_col, "_m", *(f"_best.{c}" for c in ("_code", *carry)))
+    )
+
+
+def _codebook_tensor(codebooks: DataFrame, m: int, d_sub: int):
+    """The one driver collect of a codebook frame ``[_m, _code,
+    _cvec]``: a dense ``(m, k, d_sub)`` numpy tensor, ``k`` = max code
+    id + 1. Code ids need not be dense (a Lloyd round drops codewords
+    whose cell emptied); gaps are +inf so a phantom code can never win
+    an argmin. More than ``_MAX_CODEBOOK_ROWS`` rows raises."""
+    import numpy as np
+
+    bound = _MAX_CODEBOOK_ROWS
+    rows = codebooks.orderBy("_m", "_code").limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise ValueError(
+            f"codebooks exceed {bound} rows (subspaces x codes), the"
+            " bound on collecting them to the driver"
+        )
+    k = max(int(r["_code"]) for r in rows) + 1
+    books = np.full((m, k, d_sub), np.inf, dtype=np.float64)
+    for r in rows:
+        books[int(r["_m"]), int(r["_code"])] = np.asarray(
+            r["_cvec"], dtype=np.float64
+        )
+    return books
+
+
+def _nearest_codes(x, books):
+    """numpy nearest-codeword kernel: the ``(n, m)`` int32 code matrix
+    of the ``(n, m · d_sub)`` batch ``x`` against the
+    :func:`_codebook_tensor` ``books`` — one broadcast distance block
+    and argmin per subspace (argmin ties to the smallest code, like
+    the native kernel)."""
+    import numpy as np
+
+    m, _, d_sub = books.shape
+    out = np.empty((len(x), m), dtype=np.int32)
+    for mi in range(m):
+        sl = x[:, mi * d_sub : (mi + 1) * d_sub]
+        d2 = ((sl[:, None, :] - books[mi][None, :, :]) ** 2).sum(axis=-1)
+        out[:, mi] = d2.argmin(axis=1)
+    return out
+
+
 def _residualize(
     data: DataFrame,
     index: "tuple[DataFrame, DataFrame]",
@@ -674,15 +790,9 @@ def _residualize(
     SAME index or distances are meaningless (same discipline Faiss
     requires)."""
     centroids, assign = index
-    return (
-        data.join(assign, on=id_col)
-        .join(F.broadcast(centroids), on="centroid_id")
-        .select(
-            F.col(id_col),
-            F.zip_with(
-                F.col(vec_col), F.col("_cvec"), lambda a, b: a - b
-            ).alias(vec_col),
-        )
+    return _centroid_join(data, assign, centroids, id_col).select(
+        F.col(id_col),
+        F.zip_with(vec_col, "_cvec", lambda a, b: a - b).alias(vec_col),
     )
 
 
@@ -704,18 +814,11 @@ def _residual_energy_ratio(
     sq = F.aggregate(
         F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x * x
     )
-    rsq = F.aggregate(
-        F.zip_with(
-            F.col(vec_col), F.col("_cvec"), lambda a, b: a - b
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x * x,
-    )
     row = (
-        data.join(assign, on=id_col)
-        .join(F.broadcast(centroids), on="centroid_id")
+        _centroid_join(data, assign, centroids, id_col)
         .agg(
-            F.avg(sq).alias("_x2"), F.avg(rsq).alias("_r2")
+            F.avg(sq).alias("_x2"),
+            F.avg(_l2sq(vec_col, "_cvec")).alias("_r2"),
         )
         .first()
     )
@@ -774,6 +877,9 @@ def train_pq_codebooks(
     embeddings, residual MSE 1.22 vs raw 0.07 — BASELINE.md
     §residual probe).
     """
+    k = int(codes_per_subspace)
+    if k < 1:
+        raise ValueError(f"codes_per_subspace must be >= 1, got {k}")
     if index is not None:
         ratio = _residual_energy_ratio(data, index, data_id, vec_col)
         if ratio is not None and ratio >= 1.0:
@@ -793,17 +899,10 @@ def train_pq_codebooks(
                 stacklevel=2,
             )
         data = _residualize(data, index, data_id, vec_col)
-    m = int(num_subspaces)
-    k = int(codes_per_subspace)
-    first = data.select(F.size(F.col(vec_col)).alias("d")).first()
-    if first is None:
+    dim = _vector_dim(data, vec_col)
+    if dim is None:
         raise ValueError("cannot train PQ codebooks on an empty frame")
-    dim = int(first["d"])
-    if dim % m != 0:
-        raise ValueError(
-            f"vector dim {dim} is not divisible by num_subspaces={m}"
-        )
-    d_sub = dim // m
+    m, d_sub = _pq_geometry(dim, int(num_subspaces))
 
     seeds = (
         data.orderBy(F.xxhash64(F.col(data_id).cast("string")))
@@ -826,44 +925,8 @@ def train_pq_codebooks(
         data.select(data_id, vec_col), data_id, vec_col, m, d_sub
     )
     for _ in range(int(kmeans_iterations)):
-        assigned = (
-            sl.join(F.broadcast(books), on="_m")
-            .groupBy(data_id, "_m")
-            .agg(
-                F.min(
-                    F.struct(
-                        _l2sq("_svec", "_cvec").alias("_d"),
-                        F.col("_code").alias("_code"),
-                        F.col("_svec").alias("_svec"),
-                    )
-                ).alias("_best")
-            )
-            .select(
-                "_m",
-                F.col("_best._code").alias("_code"),
-                F.col("_best._svec").alias("_svec"),
-            )
-        )
-        books = (
-            assigned.select(
-                "_m", "_code", F.posexplode("_svec").alias("_pos", "_val")
-            )
-            .groupBy("_m", "_code", "_pos")
-            .agg(F.avg("_val").alias("_mean"))
-            .groupBy("_m", "_code")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("_pos", "_mean"))
-                ).alias("_dims")
-            )
-            .select(
-                "_m",
-                "_code",
-                F.transform(F.col("_dims"), lambda s: s["_mean"]).alias(
-                    "_cvec"
-                ),
-            )
-        )
+        assigned = _nearest_code(sl, books, data_id, "_svec")
+        books = _lloyd_update(assigned, ["_m", "_code"], "_svec", "_cvec")
     # Re-densify: emptied k-means cells leave gaps in the code-id
     # space ({0,3} after codes 1,2 lose every member). Relabel per
     # subspace preserving order so ids are 0..K'-1 — positional
@@ -902,11 +965,11 @@ def pq_encode(
     argmins them (~40x the native path's interpreted expressions,
     measured in BASELINE.md; map-side only, NO shuffle at all). The
     codebooks are collected to the driver first — M×K×d_sub doubles,
-    KBs by construction, the same bounded-small contract as a
-    broadcast join. numpy argmin also ties to the smallest code;
-    codes can differ from 'native' only for a vector equidistant to
-    two codewords within float-sum reordering (~1e-15) — the same
-    caveat as every other 'arrow' swap in this module.
+    KBs by construction and capped at ``_MAX_CODEBOOK_ROWS`` rows, the
+    same bounded-small contract as a broadcast join. numpy argmin also
+    ties to the smallest code; codes can differ from 'native' only for
+    a vector equidistant to two codewords within float-sum reordering
+    (~1e-15) — the same caveat as every other 'arrow' swap here.
 
     ``index``: encode RESIDUALS to the assigned IVF centroid (must
     match the index the codebooks were trained with — see
@@ -915,43 +978,18 @@ def pq_encode(
     interchangeable."""
     if index is not None:
         data = _residualize(data, index, data_id, vec_col)
-    mk = codebooks.groupBy().agg(
-        (F.max("_m") + 1).alias("m"),
-    ).first()
-    m = int(mk["m"])
-    first = data.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = int(first["d"]) if first is not None else 0
-    if m == 0 or dim % m != 0:
-        raise ValueError(
-            f"codebook subspace count {m} does not divide vector dim {dim}"
-        )
-    d_sub = dim // m
+    dim = _vector_dim(data, vec_col) or 0
+    m, d_sub = _pq_geometry(dim, codebooks=codebooks)
     if encoder == "arrow":
         import numpy as np
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
 
-        rows = codebooks.orderBy("_m", "_code").collect()
-        # a Lloyd round drops codewords whose cell emptied, so code
-        # ids need not be dense: size by max id and fill the gaps
-        # with +inf so a phantom code can never win an argmin
-        k = max(int(r["_code"]) for r in rows) + 1
-        books = np.full((m, k, d_sub), np.inf, dtype=np.float64)
-        for r in rows:
-            books[int(r["_m"]), int(r["_code"])] = np.asarray(
-                r["_cvec"], dtype=np.float64
-            )
+        books = _codebook_tensor(codebooks, m, d_sub)
 
         def _enc(s):
             x = np.stack(s.to_numpy()).astype(np.float64)
-            out = np.empty((len(x), m), dtype=np.int32)
-            for mi in range(m):
-                sl = x[:, mi * d_sub : (mi + 1) * d_sub]
-                d2 = ((sl[:, None, :] - books[mi][None, :, :]) ** 2).sum(
-                    axis=-1
-                )
-                out[:, mi] = d2.argmin(axis=1)
-            return pd.Series(list(out))
+            return pd.Series(list(_nearest_codes(x, books)))
 
         # explicit (fn, returnType) form: the local `pd` import is
         # invisible to the string-annotation resolver under
@@ -967,23 +1005,11 @@ def pq_encode(
     sl = _pq_slices(
         data.select(data_id, vec_col), data_id, vec_col, m, d_sub
     )
-    best = (
-        sl.join(F.broadcast(codebooks), on="_m")
-        .groupBy(data_id, "_m")
-        .agg(
-            F.min(
-                F.struct(
-                    _l2sq("_svec", "_cvec").alias("_d"),
-                    F.col("_code").alias("_code"),
-                )
-            ).alias("_best")
-        )
-        .select(data_id, "_m", F.col("_best._code").alias("_c"))
-    )
+    best = _nearest_code(sl, codebooks, data_id)
     return best.groupBy(data_id).agg(
         F.transform(
-            F.array_sort(F.collect_list(F.struct("_m", "_c"))),
-            lambda s: s["_c"],
+            F.array_sort(F.collect_list(F.struct("_m", "_code"))),
+            lambda s: s["_code"],
         ).alias("pq_codes")
     )
 
@@ -1015,30 +1041,8 @@ def pq_topk(
     is already ~64x cheaper per row than exact cosine at M=8
     (8 adds + 8 lookups vs 64 mults + adds), which is PQ's
     throughput story."""
-    mk = codebooks.groupBy().agg(
-        (F.max("_m") + 1).alias("m"),
-        F.min("_m").alias("m_min"),
-        F.countDistinct("_m").alias("m_distinct"),
-    ).first()
-    m = int(mk["m"])
-    # The LUT array is positional by subspace (row i scores
-    # pq_codes[i]), so a codebook missing an entire middle subspace
-    # would silently shift later rows onto the wrong codes. Gapped
-    # CODE ids within a subspace are handled by the +inf fill below;
-    # gapped SUBSPACE ids must be rejected up front.
-    if m > 0 and (int(mk["m_min"]) != 0 or int(mk["m_distinct"]) != m):
-        raise ValueError(
-            f"codebooks must cover every subspace 0..{m - 1} exactly"
-            f" once (got min _m={mk['m_min']},"
-            f" {mk['m_distinct']} distinct of {m} expected)"
-        )
-    first = queries.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = int(first["d"]) if first is not None else 0
-    if m == 0 or dim % m != 0:
-        raise ValueError(
-            f"codebook subspace count {m} does not divide query dim {dim}"
-        )
-    d_sub = dim // m
+    dim = _vector_dim(queries, vec_col) or 0
+    m, d_sub = _pq_geometry(dim, codebooks=codebooks)
     qsl = _pq_slices(
         queries.select(query_id, vec_col), query_id, vec_col, m, d_sub
     )
@@ -1108,13 +1112,8 @@ def pq_topk(
             lambda acc, d: acc + d,
         ).alias("approx_l2sq"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("approx_l2sq").asc(), F.col(data_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, data_id, "approx_l2sq", "rank")
+    return _rank_topk(
+        scored, query_id, data_id, "approx_l2sq", k, ascending=True
     )
 
 
@@ -1157,14 +1156,9 @@ def ann_ivfpq_topk(
     probed candidates, ascending ADC distance; recall loses both to
     probe misses (IVF) and quantization (PQ), certified by the n6
     (raw) and n7 (residual) gates against the exact scan."""
-    centroids, d_assign = index
-    score = _make_scorer("native")
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("_qvec"))
-    q_probe = _assign_to_centroids(
-        q, centroids, query_id, "_qvec", num_probes, score
-    )
-    cand = codes.join(d_assign, on=data_id).join(
-        F.broadcast(q_probe), on="centroid_id"
+    q, q_probe, cand = _ivf_probe(
+        codes, queries, index, data_id, query_id, vec_col, num_probes,
+        _make_scorer("native"),
     )
     if not residual:
         return pq_topk(
@@ -1183,15 +1177,9 @@ def ann_ivfpq_topk(
     qc = F.struct(
         F.col(query_id).alias("q"), F.col("centroid_id").alias("c")
     )
-    pseudo = (
-        q_probe.join(q, on=query_id)
-        .join(F.broadcast(centroids), on="centroid_id")
-        .select(
-            qc.alias("_qc"),
-            F.zip_with(
-                "_qvec", "_cvec", lambda a, b: a - b
-            ).alias(vec_col),
-        )
+    pseudo = _centroid_join(q_probe, q, index[0], query_id).select(
+        qc.alias("_qc"),
+        F.zip_with("_qvec", "_cvec", lambda a, b: a - b).alias(vec_col),
     )
     per_list = pq_topk(
         cand.select(qc.alias("_qc"), data_id, "pq_codes"),
@@ -1202,18 +1190,11 @@ def ann_ivfpq_topk(
         query_id="_qc",
         vec_col=vec_col,
     )
-    w = Window.partitionBy("_qc.q").orderBy(
-        F.col("approx_l2sq").asc(), F.col(data_id).asc()
+    merged = per_list.select(
+        F.col("_qc.q").alias(query_id), data_id, "approx_l2sq"
     )
-    return (
-        per_list.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qc.q").alias(query_id),
-            data_id,
-            "approx_l2sq",
-            "rank",
-        )
+    return _rank_topk(
+        merged, query_id, data_id, "approx_l2sq", k, ascending=True
     )
 
 
@@ -1277,30 +1258,24 @@ def mine_contrastive_pairs(
         .withColumn("cosine", cos)
     )
     thr = F.lit(float(pos_threshold))
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col(data_id).asc()
-    )
-    pos = (
-        scored.filter(F.col("cosine") >= thr)
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .select(
-            "anchor_id",
-            F.col(data_id).alias("positive_id"),
-            F.col("cosine").alias("positive_cos"),
-        )
+    pos = _rank_topk(
+        scored.filter(F.col("cosine") >= thr), "anchor_id", data_id,
+        "cosine", 1,
+    ).select(
+        "anchor_id",
+        F.col(data_id).alias("positive_id"),
+        F.col("cosine").alias("positive_cos"),
     )
     negs = scored.filter(F.col("cosine") < thr)
     if neg_floor is not None:
         negs = negs.filter(F.col("cosine") >= F.lit(float(neg_floor)))
     negs = (
-        negs.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= int(k_neg))
+        _rank_topk(negs, "anchor_id", data_id, "cosine", int(k_neg))
         .groupBy("anchor_id")
         .agg(
             F.array_sort(
                 F.collect_list(
-                    F.struct("_r", F.col(data_id).alias("_id"), "cosine")
+                    F.struct("rank", F.col(data_id).alias("_id"), "cosine")
                 )
             ).alias("_ns")
         )

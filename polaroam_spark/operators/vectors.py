@@ -14,7 +14,9 @@ For product quantization use :func:`fit_pq_rotation`, NOT whitening:
 PQ retrieval must preserve the caller's metric, so only an orthogonal
 transform is legal — fit_pq_rotation is the OPQ non-parametric init
 (Ge et al., CVPR 2013: PCA rotation + greedy eigenvalue allocation
-balancing per-subspace variance products). Whitening rescales axes
+balancing per-subspace variance products); its layout check,
+codebook collect and numpy nearest-code kernel are the
+vector-search core's in operators/similarity.py. Whitening rescales axes
 (answers Mahalanobis queries) and is for feature normalization /
 decorrelation ahead of scoring models.
 
@@ -33,6 +35,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from polaroam_spark.operators.similarity import (
+    _codebook_tensor,
+    _nearest_codes,
+    _pq_geometry,
+    train_pq_codebooks,
+)
 
 
 def _partial_moment_stats(vec_col: str, d: int):
@@ -275,21 +284,6 @@ def _eigenvalue_allocation(eigvals: np.ndarray, m: int) -> list:
     return [i for bucket in fill for i in bucket]
 
 
-def _codebook_tensor(codebooks, m: int, d_sub: int):
-    """Collect a trained (_m, _code, _cvec) codebook frame into a
-    dense (m, k, d_sub) numpy tensor (bounded: M x K x d_sub doubles,
-    KBs by construction). Gaps from emptied Lloyd cells are +inf so a
-    phantom code can never win an argmin."""
-    rows = codebooks.orderBy("_m", "_code").collect()
-    k = max(int(r["_code"]) for r in rows) + 1
-    books = np.full((m, k, d_sub), np.inf, dtype=np.float64)
-    for r in rows:
-        books[int(r["_m"]), int(r["_code"])] = np.asarray(
-            r["_cvec"], dtype=np.float64
-        )
-    return books
-
-
 def _reconstruction_moments(rotated: DataFrame, vec_col: str, books):
     """One mapInPandas pass over the ROTATED corpus: per Arrow batch,
     PQ-encode against the broadcast codebook tensor, reconstruct, and
@@ -305,15 +299,8 @@ def _reconstruction_moments(rotated: DataFrame, vec_col: str, books):
             if pdf.empty:
                 continue
             y = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            yhat = np.empty_like(y)
-            for mi in range(m):
-                sl = y[:, mi * d_sub : (mi + 1) * d_sub]
-                d2 = (
-                    (sl[:, None, :] - books[mi][None, :, :]) ** 2
-                ).sum(axis=-1)
-                yhat[:, mi * d_sub : (mi + 1) * d_sub] = books[mi][
-                    d2.argmin(axis=1)
-                ]
+            codes = _nearest_codes(y, books)
+            yhat = books[np.arange(m), codes].reshape(len(y), d)
             yield pd.DataFrame(
                 {
                     "n": [np.int64(len(y))],
@@ -390,10 +377,6 @@ def fit_pq_rotation_iterative(
     loop's internal codebooks stale by one step — same compose
     contract as :func:`fit_pq_rotation`).
     """
-    from polaroam_spark.operators.similarity import (
-        train_pq_codebooks,
-    )
-
     m = int(num_subspaces)
     model = fit_pq_rotation(df, vec_col, m)
     mean = np.asarray(model["mean"], dtype=np.float64)
@@ -460,11 +443,7 @@ def fit_pq_rotation(
     ``train_pq_codebooks``).
     """
     n, d, mean, eigvals, eigvecs = _fit_moments(df, vec_col)
-    m = int(num_subspaces)
-    if m < 1 or d % m != 0:
-        raise ValueError(
-            f"num_subspaces must divide dim {d} (got {m})"
-        )
+    m, _ = _pq_geometry(d, int(num_subspaces))
     perm = _eigenvalue_allocation(eigvals, m)
     components = eigvecs[:, perm].T  # orthonormal rows, (d, d)
     total = float(np.maximum(eigvals, 0.0).sum())

@@ -368,6 +368,33 @@ def test_pq_validation_errors(spark):
     with pytest.raises(ValueError, match="does not divide"):
         pq_encode(bad, books)
 
+    from polaroam_spark.operators.similarity import pq_topk
+
+    emb4 = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), float(i % 7), 1.0])
+         for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    books4 = spark.createDataFrame(
+        [(m, c, [float(c), float(m)]) for m in range(2) for c in range(3)],
+        "_m int, _code int, _cvec array<double>",
+    )
+    # subspace 0 dropped: both encoders must refuse, like pq_topk
+    gapped = books4.filter(F.col("_m") == 1)
+    for encoder in ("native", "arrow"):
+        with pytest.raises(ValueError, match="every subspace"):
+            pq_encode(emb4, gapped, encoder=encoder)
+    empty = books4.limit(0)
+    with pytest.raises(ValueError, match="codebooks are empty"):
+        pq_encode(emb4, empty)
+    q = emb4.withColumnRenamed("vec_id", "query_id")
+    with pytest.raises(ValueError, match="codebooks are empty"):
+        pq_topk(emb4.select("vec_id", F.array().alias("pq_codes")), q, empty)
+    with pytest.raises(ValueError, match="num_subspaces must be >= 1"):
+        train_pq_codebooks(emb4, num_subspaces=0)
+    with pytest.raises(ValueError, match="codes_per_subspace must be >= 1"):
+        train_pq_codebooks(emb4, num_subspaces=2, codes_per_subspace=0)
+
 
 @pytest.mark.slow
 def test_pq_deterministic(spark):
@@ -696,3 +723,57 @@ def test_contrastive_pairs_anchor_batch(spark):
     # self excluded even though anchor is in data
     assert 0 not in set(out[0].negative_ids)
     assert out[0].positive_id == 1
+
+
+def test_ivf_rejects_empty_probe_settings(vectors):
+    """num_probes or num_centroids below 1 would scan no list and
+    return nothing; every IVF entry point raises instead."""
+    from polaroam_spark.operators.dedup import semantic_pairs
+    from polaroam_spark.operators.similarity import (
+        ann_ivf_topk,
+        ann_ivfpq_topk,
+        build_ivf_index,
+    )
+
+    q = vectors.limit(3).withColumnRenamed("vec_id", "query_id")
+    with pytest.raises(ValueError, match="num_probes must be >= 1"):
+        ann_ivf_topk(vectors, q, num_probes=0)
+    with pytest.raises(ValueError, match="num_centroids must be >= 1"):
+        ann_ivf_topk(vectors, q, num_centroids=0)
+    with pytest.raises(ValueError, match="num_centroids must be >= 1"):
+        semantic_pairs(vectors, num_clusters=0)
+    index = build_ivf_index(vectors, num_centroids=4)
+    codes = vectors.select("vec_id", F.array(F.lit(0)).alias("pq_codes"))
+    books = vectors.limit(1).select(
+        F.lit(0).alias("_m"), F.lit(0).alias("_code"),
+        F.col("embedding").alias("_cvec"),
+    )
+    with pytest.raises(ValueError, match="num_probes must be >= 1"):
+        ann_ivfpq_topk(codes, q, books, index, num_probes=0)
+
+
+def test_codebook_collect_is_bounded(spark, monkeypatch):
+    from polaroam_spark.operators import similarity
+    from polaroam_spark.operators.similarity import (
+        _codebook_tensor,
+        pq_encode,
+        train_pq_codebooks,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), float(i % 7), 1.0])
+         for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    books = train_pq_codebooks(
+        emb, num_subspaces=2, codes_per_subspace=4, kmeans_iterations=0
+    )
+    books = spark.createDataFrame(books.collect(), books.schema)
+    assert _codebook_tensor(books, 2, 2).shape == (2, 4, 2)
+    monkeypatch.setattr(similarity, "_MAX_CODEBOOK_ROWS", 7)
+    with pytest.raises(ValueError, match="exceed 7 rows"):
+        _codebook_tensor(books, 2, 2)
+    with pytest.raises(ValueError, match="exceed 7 rows"):
+        pq_encode(emb, books, encoder="arrow")
+    monkeypatch.setattr(similarity, "_MAX_CODEBOOK_ROWS", 8)
+    assert _codebook_tensor(books, 2, 2).shape == (2, 4, 2)
