@@ -200,8 +200,7 @@ def cmd_corpus(args) -> None:
             model = _json.load(f)
         in_cols = df.columns
         df = score_quality_classifier(
-            df, model, text_col=args.text_col, id_col=args.id_col,
-            label_col=None,
+            df, model, text_col=args.text_col, label_col=None
         ).filter(
             F.col("quality_prob") >= args.classifier_threshold
         ).select(*in_cols)
@@ -421,7 +420,6 @@ def cmd_quality(args) -> None:
             df,
             model,
             text_col=args.text_col,
-            id_col=args.id_col,
             threshold=args.threshold,
         )
         out.write.mode("overwrite").parquet(args.output)
@@ -469,9 +467,7 @@ def cmd_langid(args) -> None:
         raise SystemExit("langid: --output is required for score")
     with _open_model_file(args.model, "r", "utf-8") as f:
         model = _json.load(f)
-    out = score_langid(
-        df, model, text_col=args.text_col, id_col=args.id_col
-    )
+    out = score_langid(df, model, text_col=args.text_col)
     if args.keep_languages:
         keep = [
             s for s in args.keep_languages.split(",") if s
@@ -1115,7 +1111,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     pq.add_argument("--output", default=None)
     pq.add_argument("--text-col", default="text")
-    pq.add_argument("--id-col", default="doc_id")
     pq.add_argument("--label-col", default="label")
     pq.add_argument("--threshold", type=float, default=0.5)
     pq.add_argument("--num-buckets", type=int, default=4096)
@@ -1137,7 +1132,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     pg.add_argument("--output", default=None)
     pg.add_argument("--text-col", default="text")
-    pg.add_argument("--id-col", default="doc_id")
     pg.add_argument("--label-col", default="language")
     pg.add_argument(
         "--keep-languages", default=None,

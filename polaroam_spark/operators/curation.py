@@ -266,7 +266,6 @@ kn_ngram_logprob_vs_reference` at ``perplexity_order`` (default 3
             cur,
             classifier_model,
             text_col=text_col,
-            id_col=id_col,
             label_col=None,
         )
         cur = _stage(
@@ -295,7 +294,6 @@ kn_ngram_logprob_vs_reference` at ``perplexity_order`` (default 3
             cur,
             langid_model,
             text_col=text_col,
-            id_col=id_col,
             prob_col=None,
         )
         cur = _stage(

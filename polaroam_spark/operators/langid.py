@@ -6,23 +6,19 @@ This is the K-class softmax extension of
 :mod:`~polaroam_spark.operators.quality`'s hashed-gram logistic
 regression: same feature stream
 (:func:`~polaroam_spark.operators.quality.hashed_gram_buckets`, the
-DSIR unigram+bigram bucket hash), K weight vectors instead of one.
+DSIR unigram+bigram bucket hash, or the char 3–5-gram stream), K
+weight vectors instead of one.
 
-Scale shape — scoring: for K·B within the literal budget every class
-margin is a pure per-row JVM expression (transform → element_at →
-aggregate over one parsed array literal per class) and the argmax /
-softmax-probability are array expressions over the K margins: ZERO
-shuffle, zero join, runs unchanged on readStream — the per-document
-router a 1000-executor cluster streams 100 TB through. Larger K·B
-broadcasts a B-row table of K-vectors with one doc-keyed sum per
-class (DSIR's scoring shape).
-
-Scale shape — training: full-batch softmax gradient descent; each
-iteration is ONE map-side pass over the persisted (class, buckets)
-projection — ``mapInArrow`` partials of (∇W, ∇b, loss, n) per
-partition, summed on the driver (the treeAggregate shape). The batch
-kernel is vectorized numpy (segment sums via ``add.reduceat``,
-scatter via ``bincount``) — no per-row Python in the loop.
+Both scale shapes are the linear-model core in
+:mod:`~polaroam_spark.operators.quality` (see its docstring): scoring
+is one map-only Arrow UDF stage returning the K margins per row
+(``_with_margins``), training is the shared persisted featurization
+and full-batch descent (``_featurize``, ``_descend``). This module
+adds only the K-class parts: the bounded class collect
+(``max_classes``), the softmax residual and cross-entropy, and at
+scoring time the argmax with the first-class tie rule and the
+winner's softmax probability — JVM array expressions over the
+margins, so the router runs unchanged on readStream.
 
 Beyond-reference component (reference is a mobility engine, ref core
 polaroam/*.py — no text surface); closes the "trained multiclass
@@ -32,23 +28,21 @@ is :func:`~polaroam_spark.operators.textstats.detect_language`.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polaroam_spark.operators.quality import (
-    _LITERAL_MAX,
-    _arrow_segments,
-    _gather_segment_sums,
-    _partials_batch,
-    _resolve_engine,
-    gram_bucket_base,
-    hashed_gram_buckets,
+    _check_feature,
+    _descend,
+    _featurize,
+    _fit_args,
+    _with_margins,
 )
 
 
 def _validate_langid_model(model: dict) -> tuple:
+    import numpy as np
+
     classes = [str(c) for c in model["classes"]]
     k = len(classes)
     if k < 2:
@@ -71,49 +65,32 @@ def _validate_langid_model(model: dict) -> tuple:
         raise ValueError(
             f"model has {len(biases)} biases for {k} classes"
         )
-    feature = str(model.get("feature", "word"))
-    if feature not in ("word", "char"):
-        raise ValueError(
-            f"model feature must be 'word' or 'char' (got {feature!r})"
-        )
     return (
         classes,
-        [[float(x) for x in row] for row in w],
+        np.asarray(
+            [[float(x) for x in row] for row in w], dtype=np.float64
+        ).reshape(k, b),
         biases,
-        b,
         int(model.get("seed", 17)),
         bool(model.get("portable", False)),
         bool(model.get("normalize", True)),
-        feature,
+        _check_feature(str(model.get("feature", "word"))),
     )
-
-
-def _sql_array_literal(values: "list[float]"):
-    """One parsed SQL array literal (quality.py's fast path: F.lit on
-    a Python list walks py4j element-by-element and costs seconds of
-    plan-build at B=4096; the SQL string parses in <0.1 s and %.17e
-    round-trips every finite double exactly)."""
-    if all(math.isfinite(x) for x in values):
-        return F.expr(
-            "array(" + ",".join(f"{x:.17e}" for x in values) + ")"
-        )
-    return F.lit(values)
 
 
 def score_langid(
     df: DataFrame,
     model: dict,
     text_col: str = "text",
-    id_col: str = "doc_id",
     out_col: str = "language_pred",
     prob_col: "str | None" = "language_prob",
-    engine: str = "auto",
 ) -> DataFrame:
     """Append the predicted language (argmax class of ``softmax(b_k +
     Σ w_k[bucket(gram)])`` over the document's unigram+bigram
     instances; models with ``"normalize": True`` — the training
-    default — use MEAN features) and, when ``prob_col`` is set, the
-    winner's softmax probability. NULL/empty-gram documents get NULL
+    default, and the reading of a hand-built model without the key —
+    use MEAN features) and, when ``prob_col`` is set, the winner's
+    softmax probability. NULL/empty-gram documents get NULL
     prediction and probability (no evidence — same contract as the
     quality scorer and DSIR). Ties go to the first class in
     ``model["classes"]`` order (deterministic).
@@ -123,176 +100,53 @@ def score_langid(
     "num_buckets": B, "seed": s, "portable": p, "feature":
     "word"|"char"}`` — ``"char"`` scores over fasttext's char
     3–5-gram stream, the robust choice for short / no-whitespace
-    text). For K·B within
-    the literal budget scoring is a pure per-row JVM expression (no
-    shuffle, no join — module docstring); larger models broadcast a
-    B-row table of K-vectors and sum per ``id_col`` — on THAT path
-    ``id_col`` must be unique (the per-row literal path has no such
-    precondition). ``engine`` selects the margin kernel (see
-    :func:`~polaroam_spark.operators.quality._resolve_engine`):
-    ``'arrow'`` computes all K margins in one vectorized Arrow UDF
-    stage — map-only at every K·B, no join, no unique-id
-    precondition."""
-    classes, w, biases, b, seed, portable, normalize, feature = (
+    text). All K margins come from one map-only Arrow UDF stage at
+    every K·B (module docstring), one output row per input row."""
+    classes, w2d, biases, seed, portable, normalize, feature = (
         _validate_langid_model(model)
     )
-    k = len(classes)
-    # project the gram base, then the bucket array, each into its own
-    # column (r19 optimization round — see quality.gram_bucket_base):
-    # the bucket stream references its base ~4x and the literal path
-    # folds over the bucket array once PER CLASS; inline, every
-    # reference re-ran the whole chain
-    base_c = "_hgb_base"
-    bk_c = "_hgb_buckets"
-    while base_c in df.columns:
-        base_c += "_"
-    while bk_c in df.columns:
-        bk_c += "_"
-    src = df.withColumn(
-        base_c, gram_bucket_base(text_col, feature)
-    ).withColumn(
-        bk_c,
-        hashed_gram_buckets(
-            text_col, b, seed, portable,
-            feature=feature, base=F.col(base_c),
-        ),
+    out, m_c, tmp = _with_margins(
+        df, text_col, w2d, biases, seed, portable, normalize, feature,
+        reserved=(out_col, prob_col),
     )
-    buckets = F.col(bk_c)
-    _tmp_cols = [base_c, bk_c]
+    margins = F.col(m_c)
     classes_lit = F.array(*[F.lit(c) for c in classes])
-    eng = _resolve_engine(engine)
-
-    if eng == "arrow":
-        # all K margins in ONE vectorized ArrowEvalPython stage (the
-        # quality scorer's gather+segment-sum kernel, K rows of
-        # weights at once) — replaces K interpreted transform/
-        # aggregate folds over K parsed B-element array literals
-        # (CodegenFallback, ~K ms/doc, plus K·B literal parse+codegen
-        # driver time per plan build) and the broadcast-join path's
-        # gram-stream shuffle. Map-only at every K·B — still the
-        # 100 TB router shape; argmax/softmax stay JVM expressions
-        # over the returned margins array. Guide §4.2.
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql.functions import arrow_udf
-
-        bcw = df.sparkSession.sparkContext.broadcast(
-            np.asarray(
-                [np.asarray(row, dtype=np.float64) for row in w]
-            ).reshape(k, b)
-        )
-        biases_np = np.asarray(biases, dtype=np.float64)
-        norm_flag = bool(normalize)
-        k_local = k
-
-        def _margins_arr(bk):
-            sums, counts = _gather_segment_sums(bk, bcw.value)
-            if norm_flag:
-                sums = sums / np.where(counts > 0, counts, 1)
-            m = np.ascontiguousarray(
-                (sums + biases_np[:, None]).T
-            )  # (n_rows, k) row-major
-            n_rows = m.shape[0]
-            offs = np.arange(
-                0, (n_rows + 1) * k_local, k_local, dtype=np.int32
-            )
-            # NULL margins for no-evidence rows (NULL text / zero
-            # grams) — the same contract as the literal path's
-            # array_size(buckets) > 0 gate
-            return pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()),
-                pa.array(m.reshape(-1), type=pa.float64()),
-                mask=pa.array(counts == 0),
-            )
-
-        # real-object annotations (module-level `from __future__
-        # import annotations` would leave strings arrow_udf's
-        # eval-type inference cannot resolve)
-        _margins_arr.__annotations__ = {
-            "bk": pa.Array,
-            "return": pa.Array,
-        }
-        _margins_arr = arrow_udf("array<double>")(_margins_arr)
-
-        out = src.withColumn("_margins", _margins_arr(buckets))
-    elif k * b <= _LITERAL_MAX:
-        # NB: the lookup lambda must take exactly ONE parameter —
-        # PySpark treats a 2-arg transform lambda as (element, index)
-        # — so the weight literal binds via a closure helper
-        def _fold(wl):
-            return F.aggregate(
-                F.transform(
-                    buckets,
-                    lambda i: F.element_at(wl, i + F.lit(1)),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
-        margins = []
-        for ki in range(k):
-            ssum = _fold(_sql_array_literal(w[ki]))
-            if normalize:
-                ssum = ssum / F.array_size(buckets)
-            margins.append(F.lit(biases[ki]) + ssum)
-        marr = F.when(
-            F.array_size(buckets) > 0, F.array(*margins)
-        )
-        out = src.withColumn("_margins", marr)
-    else:
-        spark = df.sparkSession
-        wtab = spark.createDataFrame(
-            [
-                (i, [float(w[ki][i]) for ki in range(k)])
-                for i in range(b)
-            ],
-            "_bucket int, _w array<double>",
-        )
-        scale = (
-            1.0 / F.count("*") if normalize else F.lit(1.0)
-        )
-        per_doc = (
-            src.select(id_col, F.explode(buckets).alias("_bucket"))
-            .join(F.broadcast(wtab), on="_bucket", how="left")
-            .groupBy(id_col)
-            .agg(
-                F.array(
-                    *[
-                        (
-                            F.lit(biases[ki])
-                            + F.sum(F.element_at("_w", ki + 1))
-                            * scale
-                        )
-                        for ki in range(k)
-                    ]
-                ).alias("_margins")
-            )
-        )
-        out = df.join(per_doc, on=id_col, how="left").select(
-            *df.columns, "_margins"
-        )
-
-    mx = F.array_max("_margins")
+    mx = F.array_max(margins)
     # the isNotNull guard is load-bearing: codegen'd element_at over
     # a literal array does NOT propagate a NULL array_position result
     # (observed returning the last class for NULL-margin rows on
     # Spark 4.1) — the CASE branch short-circuits before element_at
     pred = F.when(
-        F.col("_margins").isNotNull(),
+        margins.isNotNull(),
         F.element_at(
             classes_lit,
-            F.array_position("_margins", mx).cast("int"),
+            F.array_position(margins, mx).cast("int"),
         ),
     )
     out = out.withColumn(out_col, pred)
     if prob_col is not None:
         denom = F.aggregate(
-            F.transform(F.col("_margins"), lambda m: F.exp(m - mx)),
+            F.transform(margins, lambda m: F.exp(m - mx)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
         out = out.withColumn(prob_col, F.lit(1.0) / denom)
-    return out.drop("_margins", *_tmp_cols)
+    return out.drop(*tmp)
+
+
+def _softmax_residual(m, y):
+    """K-class link of the shared descent: stable softmax, clamped
+    log-likelihood of the true class, residual ``p − onehot(y)``."""
+    import numpy as np
+
+    y = np.asarray(y, dtype=np.int64)
+    m = m - m.max(axis=0, keepdims=True)
+    e = np.exp(m)
+    p = e / e.sum(axis=0, keepdims=True)
+    rows = np.arange(len(y))
+    ll = np.log(np.maximum(p[y, rows], 1e-300)).sum()
+    p[y, rows] -= 1.0
+    return p, ll
 
 
 def train_langid(
@@ -325,32 +179,15 @@ def train_langid(
 
     ``normalize=True`` (default) uses MEAN features — same rationale
     as the binary trainer (raw counts scale the gradient's Lipschitz
-    constant with document length squared).
-
-    The per-batch kernel is vectorized numpy: one ``add.reduceat``
-    segment-sum per class for the margins and one ``bincount``
-    scatter per class for the gradient — no per-row Python loop.
-    ``max_classes`` bounds the label collect (the model is K·B
-    doubles; an unbounded label space would make both the collect
-    and the model corpus-sized).
+    constant with document length squared). ``max_classes`` bounds
+    the label collect (the model is K·B doubles; an unbounded label
+    space would make both the collect and the model corpus-sized).
 
     Determinism: same contract as the binary trainer — float sums
     over partition partials, so exactness gates pin the SCORER on
     fixed weights while training is certified by descent/accuracy
     invariants."""
-    import numpy as np
-
-    from ..cache import track
-
-    b = int(num_buckets)
-    iters = int(n_iter)
-    lr = float(learning_rate)
-    reg = float(l2)
-    if iters < 1:
-        raise ValueError(f"n_iter must be >= 1 (got {n_iter})")
-    if b < 1:
-        raise ValueError(f"num_buckets must be >= 1 (got {num_buckets})")
-
+    b, iters = _fit_args(num_buckets, n_iter)
     lbl = F.col(label_col).cast("string")
     classes = sorted(
         r[0]
@@ -371,115 +208,27 @@ def train_langid(
             f"need >= 2 distinct classes (got {classes!r})"
         )
     k = len(classes)
-    classes_lit = F.array(*[F.lit(c) for c in classes])
-
-    # base projected below the bucket transform so its ~4 references
-    # share one computation (r19 — see quality.gram_bucket_base)
-    buckets = hashed_gram_buckets(
-        text_col, b, seed, portable,
-        feature=feature, base=F.col("_hgb_base"),
-    )
-    total = df.count()
-    feats = track(
-        df.select(
-            (F.array_position(classes_lit, lbl) - 1)
-            .cast("int")
-            .alias("_y"),
-            gram_bucket_base(text_col, feature).alias("_hgb_base"),
+    # every non-NULL label is a class, so only NULL labels map to NULL
+    y = (
+        F.array_position(F.array(*[F.lit(c) for c in classes]), lbl) - 1
+    ).cast("int")
+    with _featurize(
+        df, y, text_col, b, seed, portable, feature, "train_langid"
+    ) as (feats, n, total):
+        w, biases, losses = _descend(
+            feats, n, k, b, iters, float(learning_rate), float(l2),
+            bool(normalize), _softmax_residual,
         )
-        .select(
-            "_y",
-            buckets.alias("_bk"),
-        )
-        .filter(F.col("_y") >= 0)
-        .filter(F.array_size("_bk") > 0)
-        .persist()
-    )
-    n = feats.count()
-    if n == 0:
-        raise ValueError(
-            "train_langid: no usable rows (every row had a NULL "
-            "label or no grams)"
-        )
-
-    W = np.zeros((k, b), dtype=np.float64)
-    biases = np.zeros(k, dtype=np.float64)
-    norm_flag = bool(normalize)
-    losses: "list[float]" = []
-    schema = "grad array<double>, gbias array<double>, loss double, n long"
-
-    for _ in range(iters):
-        cur_w, cur_b = W.copy(), biases.copy()
-
-        def _partial(batches):
-            g = np.zeros((k, b), dtype=np.float64)
-            gb = np.zeros(k, dtype=np.float64)
-            loss = 0.0
-            cnt = 0
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                y = np.asarray(batch.column("_y"), dtype=np.int64)
-                idx, starts, counts = _arrow_segments(batch, "_bk")
-                scale = (
-                    1.0 / counts if norm_flag
-                    else np.ones(batch.num_rows, dtype=np.float64)
-                )
-                # margins: per-class segment sums over each row's grams
-                m = np.add.reduceat(
-                    cur_w[:, idx], starts, axis=1
-                ) * scale + cur_b[:, None]
-                m -= m.max(axis=0, keepdims=True)
-                e = np.exp(m)
-                p = e / e.sum(axis=0, keepdims=True)
-                rows = np.arange(batch.num_rows)
-                loss -= np.log(
-                    np.maximum(p[y, rows], 1e-300)
-                ).sum()
-                r = p  # residual: p - onehot(y)
-                r[y, rows] -= 1.0
-                rs = r * scale  # (k, n_rows)
-                # one shared int row-index per gram instead of a
-                # dense (k, n_grams) repeat: peak extra memory is
-                # n_grams int64 + one n_grams float64 temp per
-                # class, not K x n_grams doubles (r15 verdict note)
-                rows_per_gram = np.repeat(rows, counts)
-                for ki in range(k):
-                    g[ki] += np.bincount(
-                        idx,
-                        weights=rs[ki][rows_per_gram],
-                        minlength=b,
-                    )
-                gb += r.sum(axis=1)
-                cnt += batch.num_rows
-            yield _partials_batch(
-                g.reshape(-1).tolist(), gb.tolist(), loss, cnt
-            )
-
-        parts = feats.mapInArrow(_partial, schema=schema).collect()
-        g = np.zeros((k, b), dtype=np.float64)
-        gb = np.zeros(k, dtype=np.float64)
-        loss = 0.0
-        for row in parts:
-            g += np.asarray(row["grad"], dtype=np.float64).reshape(
-                k, b
-            )
-            gb += np.asarray(row["gbias"], dtype=np.float64)
-            loss += row["loss"]
-        W -= lr * (g / n + reg * W)
-        biases -= lr * (gb / n)
-        losses.append(loss / n)
-
     return {
         "classes": classes,
-        "weights": [row.tolist() for row in W],
+        "weights": [row.tolist() for row in w],
         "biases": biases.tolist(),
         "num_buckets": b,
         "seed": int(seed),
         "portable": bool(portable),
-        "normalize": norm_flag,
+        "normalize": bool(normalize),
         "feature": str(feature),
         "loss_history": losses,
-        "n_rows": int(n),
-        "n_dropped": int(total - n),
+        "n_rows": n,
+        "n_dropped": total - n,
     }

@@ -13,21 +13,29 @@ into ``num_buckets`` — the same dimensionality-reduction property
 that makes DSIR 100 TB-safe makes the classifier so: the model is a
 fixed B-vector of weights, never an open vocabulary.
 
-Scale shape — scoring: for B ≤ 65536 the weight vector rides into
-the plan as an array literal and the margin is a pure per-row JVM
-expression (transform → element_at → aggregate): ZERO shuffle, zero
-join, whole-stage-codegen'd — the filter a 1000-executor cluster
-streams 100 TB through. Larger B switches to a broadcast-joined
-B-row weight table with one doc-keyed sum (exactly DSIR's scoring
-shape). Both paths produce identical margins.
+This module also holds the one core of every hashed-gram linear
+model — this binary classifier and the K-class softmax of
+:mod:`~polaroam_spark.operators.langid` (K = 1 here). A family adds
+only its link: sigmoid, threshold and label here; class list,
+argmax and softmax probability there.
 
-Scale shape — training: full-batch gradient descent; each iteration
-is ONE map-side pass over the persisted (label, buckets) projection
-— ``mapInArrow`` partials of (∇w, ∇b, loss, n) per partition, a
-(B+1)-vector each, summed on the driver (the treeAggregate shape of
-every distributed LR, incl. pyspark.ml's). No shuffle anywhere in
-the loop; iteration cost is a corpus scan of the projected frame,
-linear in executors.
+- Scoring (:func:`_with_margins`): one projection adds the gram
+  base, the bucket array and the margin column under collision-safe
+  names, and one Arrow UDF (:func:`_margin_kernel`) computes all K
+  margins per row — a numpy gather plus ``add.reduceat`` segment sum
+  over the broadcast K×B weights, NULL for rows without grams.
+  Map-only at every K·B: no shuffle, no join, no id precondition,
+  and it runs unchanged on readStream. Needs PySpark ≥ 4.1
+  (``arrow_udf``).
+- Training (:func:`_featurize`, :func:`_descend`): full-batch
+  gradient descent. The ``(label, buckets)`` projection is persisted
+  once, one aggregate counts its usable rows, and each iteration is
+  ONE map-side ``mapInArrow`` pass of per-partition (∇W, ∇b, loss)
+  partials summed on the driver (the treeAggregate shape of every
+  distributed LR, incl. pyspark.ml's). The batch kernel shares the
+  margin gather and the ``bincount`` gradient scatter; only the
+  residual/loss differs per family. The cache is released before
+  the trainer returns, also when it raises.
 
 Beyond-reference component (the reference is a mobility engine, ref
 core polaroam/*.py — no text surface); part of the LLM-pipeline
@@ -36,15 +44,10 @@ brief's text-analysis family.
 
 from __future__ import annotations
 
-import math
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-#: largest num_buckets scored via the in-plan array-literal fast
-#: path; bigger weight vectors go through the broadcast-join path
-#: (a 65536-child CreateArray is fine; a 2^20 one strains analysis).
-_LITERAL_MAX = 65_536
 
 
 def gram_bucket_base(
@@ -123,48 +126,13 @@ def hashed_gram_buckets(
     )
 
 
-def _resolve_engine(engine: str) -> str:
-    """Scorer execution engine: ``'arrow'`` runs the gather+sum dot
-    product as ONE vectorized Arrow UDF (numpy ``take`` +
-    ``add.reduceat`` — the trainer's own margin kernel), ``'native'``
-    keeps the pure-JVM expression paths (interpreted higher-order
-    fold for B ≤ 65536, broadcast-join for larger). ``'auto'``
-    (default) picks arrow when pyspark's ``arrow_udf`` and pyarrow
-    are importable, else native. Both engines produce margins equal
-    up to float-addition order — the SAME tolerance the DuckDB
-    oracles already grant (they re-sum in hash-aggregation order and
-    compare at 6 decimals); gates t34/t36/t37/t39/t39b and the
-    curation ladder stay hash-exact on either engine (verified at
-    all three SFs, r19 optimization round)."""
-    if engine == "auto":
-        try:
-            import numpy  # noqa: F401
-            import pyarrow  # noqa: F401
-            from pyspark.sql.functions import arrow_udf  # noqa: F401
-        except ImportError:
-            return "native"
-        return "arrow"
-    if engine not in ("native", "arrow"):
-        raise ValueError(
-            f"engine must be 'auto', 'native' or 'arrow' (got {engine!r})"
-        )
-    return engine
-
-
-def _gather_segment_sums(bk, w2d):
-    """Vectorized scorer kernel over one Arrow list<int> column:
-    per-row sums of ``w[bucket]`` for each weight vector in ``w2d``
-    — the same zero-copy gather + ``np.add.reduceat`` segment sum
-    :func:`train_quality_classifier`'s gradient pass uses. Returns
-    ``(sums, counts)`` with ``sums`` shaped (K, n_rows) and
-    ``counts`` the per-row instance count, 0 for NULL/empty rows
-    (whose sums are garbage by construction — callers must gate on
-    ``counts > 0``, exactly as the JVM paths gate on
-    ``array_size > 0``). Out-of-range indices (possible only in the
-    unused child slots of NULL rows) read clipped, never raise."""
+def _segments(bk):
+    """(flattened int64 bucket ids, segment starts, per-row counts)
+    of an Arrow list<int> column — zero-copy off the Arrow buffers,
+    no per-row Python. NULL rows count 0. A sliced ListArray's values
+    buffer can extend beyond the slice, hence the offset window."""
     import numpy as np
 
-    n = len(bk)
     offs = np.asarray(bk.offsets, dtype=np.int64)
     vals = np.asarray(bk.values)
     idx = vals[offs[0] : offs[-1]].astype(np.int64, copy=False)
@@ -172,78 +140,129 @@ def _gather_segment_sums(bk, w2d):
     counts = np.diff(offs)
     if bk.null_count:
         counts = np.where(np.asarray(bk.is_valid()), counts, 0)
+    return idx, starts, counts
+
+
+def _segment_sums(w2d, idx, starts, counts):
+    """(K, n_rows) per-row sums of ``w[bucket]`` for each weight row
+    of ``w2d``: one gather and one ``np.add.reduceat`` per class, so
+    the extra memory is one n_grams vector, never K × n_grams. Rows
+    with no grams sum to 0; out-of-range ids (possible only in the
+    unused child slots of NULL rows) read clipped, never raise."""
+    import numpy as np
+
     k = w2d.shape[0]
     if idx.size == 0:
-        return np.zeros((k, n), dtype=np.float64), counts
-    np.clip(idx, 0, w2d.shape[1] - 1, out=idx)
+        return np.zeros((k, len(counts)), dtype=np.float64)
+    idx = np.clip(idx, 0, w2d.shape[1] - 1)
     safe_starts = np.minimum(starts, idx.size - 1)
     empty = counts == 0
-    sums = np.empty((k, n), dtype=np.float64)
+    sums = np.empty((k, len(counts)), dtype=np.float64)
     for ki in range(k):
         s = np.add.reduceat(w2d[ki][idx], safe_starts)
         s[empty] = 0.0
         sums[ki] = s
-    return sums, counts
+    return sums
 
 
-def _arrow_segments(batch, list_col: str):
-    """(flattened int64 ids, segment-start offsets, per-row counts)
-    for a RecordBatch's list column — zero-copy off the Arrow
-    buffers, no per-row Python. A sliced ListArray's values buffer
-    can extend beyond the slice, hence the offset window."""
+def _margin_kernel(spark, w2d, biases, normalize: bool):
+    """The Arrow UDF ``list<int> buckets → array<double>`` of the K
+    margins ``b_k + Σ w_k[bucket]`` (divided by the gram count for
+    mean features), NULL for rows with no grams. The K×B weights ship
+    once per executor as a broadcast."""
     import numpy as np
-
-    bk = batch.column(list_col)
-    offs = np.asarray(bk.offsets)
-    vals = np.asarray(bk.values)
-    idx = vals[offs[0] : offs[-1]].astype(np.int64, copy=False)
-    starts = (offs[:-1] - offs[0]).astype(np.int64, copy=False)
-    counts = np.diff(offs).astype(np.int64, copy=False)
-    return idx, starts, counts
-
-
-def _partials_batch(grad, gbias, loss, n):
-    """One-row Arrow batch carrying a partition's partial gradient
-    (the mapInArrow return contract shared by both trainers; gbias
-    is a scalar for the binary model, a K-list for softmax)."""
     import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    gb = (
-        pa.array([gbias], type=pa.list_(pa.float64()))
-        if isinstance(gbias, list)
-        else pa.array([float(gbias)], type=pa.float64())
+    bcw = spark.sparkContext.broadcast(w2d)
+    bias = np.asarray(biases, dtype=np.float64)[:, None]
+    k = w2d.shape[0]
+
+    def _margins(bk):
+        idx, starts, counts = _segments(bk)
+        sums = _segment_sums(bcw.value, idx, starts, counts)
+        if normalize:
+            sums = sums / np.where(counts > 0, counts, 1)
+        m = np.ascontiguousarray((sums + bias).T)  # (n_rows, k)
+        offs = np.arange(0, (m.shape[0] + 1) * k, k, dtype=np.int32)
+        return pa.ListArray.from_arrays(
+            pa.array(offs, type=pa.int32()),
+            pa.array(m.reshape(-1), type=pa.float64()),
+            mask=pa.array(counts == 0),
+        )
+
+    # module-level `from __future__ import annotations` turns inline
+    # hints into strings arrow_udf's eval-type inference cannot
+    # resolve — attach real objects instead
+    _margins.__annotations__ = {"bk": pa.Array, "return": pa.Array}
+    return arrow_udf("array<double>")(_margins)
+
+
+def _with_margins(
+    df: DataFrame,
+    text_col: str,
+    w2d,
+    biases,
+    seed: int,
+    portable: bool,
+    normalize: bool,
+    feature: str,
+    reserved: "tuple[str, ...]" = (),
+) -> "tuple[DataFrame, str, list[str]]":
+    """The scorer projection: ``df`` plus the gram base, the bucket
+    array and the K-margin array, each in its own column (the bucket
+    stream references its base ~4x; inline, every reference re-runs
+    the lower/split/trim chain — see :func:`gram_bucket_base`).
+    Temp names avoid every input column and ``reserved`` (the
+    caller's output names). Returns ``(frame, margin column, temp
+    columns to drop)``."""
+    taken = set(df.columns) | {c for c in reserved if c}
+    tmp = []
+    for name in ("_hgb_base", "_hgb_buckets", "_margins"):
+        while name in taken:
+            name += "_"
+        taken.add(name)
+        tmp.append(name)
+    base_c, bk_c, m_c = tmp
+    kernel = _margin_kernel(df.sparkSession, w2d, biases, normalize)
+    out = (
+        df.withColumn(base_c, gram_bucket_base(text_col, feature))
+        .withColumn(
+            bk_c,
+            hashed_gram_buckets(
+                text_col, w2d.shape[1], seed, portable,
+                feature=feature, base=F.col(base_c),
+            ),
+        )
+        .withColumn(m_c, kernel(F.col(bk_c)))
     )
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([grad], type=pa.list_(pa.float64())),
-            gb,
-            pa.array([float(loss)], type=pa.float64()),
-            pa.array([int(n)], type=pa.int64()),
-        ],
-        names=["grad", "gbias", "loss", "n"],
-    )
+    return out, m_c, tmp
+
+
+def _check_feature(feature: str) -> str:
+    if feature not in ("word", "char"):
+        raise ValueError(
+            f"model feature must be 'word' or 'char' (got {feature!r})"
+        )
+    return feature
 
 
 def _validate_model(model: dict) -> tuple:
+    import numpy as np
+
     w = model["weights"]
     b = int(model["num_buckets"])
     if len(w) != b:
         raise ValueError(
             f"model weights length {len(w)} != num_buckets {b}"
         )
-    feature = str(model.get("feature", "word"))
-    if feature not in ("word", "char"):
-        raise ValueError(
-            f"model feature must be 'word' or 'char' (got {feature!r})"
-        )
     return (
-        [float(x) for x in w],
+        np.asarray([[float(x) for x in w]], dtype=np.float64),
         float(model.get("bias", 0.0)),
-        b,
         int(model.get("seed", 17)),
         bool(model.get("portable", False)),
         bool(model.get("normalize", False)),
-        feature,
+        _check_feature(str(model.get("feature", "word"))),
     )
 
 
@@ -251,11 +270,9 @@ def score_quality_classifier(
     df: DataFrame,
     model: dict,
     text_col: str = "text",
-    id_col: str = "doc_id",
     out_col: str = "quality_prob",
     label_col: "str | None" = "quality_label",
     threshold: float = 0.5,
-    engine: str = "auto",
 ) -> DataFrame:
     """Append the classifier probability (``sigmoid(bias + Σ
     w[bucket(gram)])`` over the document's unigram+bigram instances
@@ -271,155 +288,196 @@ def score_quality_classifier(
 
     ``model`` is :func:`train_quality_classifier`'s dict (or any
     hand-built ``{"weights": [...], "bias": f, "num_buckets": B,
-    "seed": s, "portable": p, "feature": "word"|"char"}`` —
+    "seed": s, "portable": p, "normalize": n, "feature":
+    "word"|"char"}``; a missing ``"normalize"`` reads as False —
     ``"char"`` scores over the char 3–5-gram stream, the langid
-    feature set, when a quality model is trained on it). For B ≤ 65536 scoring is a pure
-    per-row JVM expression (no shuffle, no join — see module
-    docstring); larger models broadcast a B-row weight table and sum
-    per ``id_col`` — on THAT path ``id_col`` must be unique (two
-    rows sharing an id would silently score against their pooled
-    grams; the per-row literal path has no such precondition).
-    Composes with
+    feature set, when a quality model is trained on it). Scoring is
+    one map-only Arrow UDF stage (module docstring), one output row
+    per input row. Composes with
     :func:`~polaroam_spark.operators.textstats.calibrate_scores` /
     ``quality_stratified_filter`` downstream (the probability is a
     score column like any other)."""
-    w, bias, b, seed, portable, normalize, feature = _validate_model(
+    w2d, bias, seed, portable, normalize, feature = _validate_model(
         model
     )
-    # project the gram base, then the bucket array, each into its own
-    # column (r19 optimization round — see gram_bucket_base): the
-    # bucket stream references its base ~4x and the literal scoring
-    # path references the bucket array 3x; inline, every reference
-    # re-ran the whole chain (CodegenFallback lambdas, no
-    # subexpression elimination)
-    base_c = "_hgb_base"
-    bk_c = "_hgb_buckets"
-    while base_c in df.columns:
-        base_c += "_"
-    while bk_c in df.columns:
-        bk_c += "_"
-    src = df.withColumn(
-        base_c, gram_bucket_base(text_col, feature)
-    ).withColumn(
-        bk_c,
-        hashed_gram_buckets(
-            text_col, b, seed, portable,
-            feature=feature, base=F.col(base_c),
-        ),
+    out, m_c, tmp = _with_margins(
+        df, text_col, w2d, [bias], seed, portable, normalize, feature,
+        reserved=(out_col, label_col),
     )
-    buckets = F.col(bk_c)
-    _tmp_cols = [base_c, bk_c]
-    eng = _resolve_engine(engine)
-
-    if eng == "arrow":
-        # one vectorized ArrowEvalPython stage computing (Σ w[bucket],
-        # instance count) per row — replaces the interpreted
-        # higher-order fold (B ≤ 65536: transform/aggregate are
-        # CodegenFallback, ~1 ms/doc, plus a B-element array literal
-        # whose parse+codegen costs seconds of DRIVER time per plan
-        # build) AND the broadcast-join path (B > 65536: its
-        # explode + join + per-doc sum shuffled the gram stream and
-        # required unique ids; this path needs neither). The weight
-        # vector ships once per executor as a SparkContext broadcast.
-        # Map-only at every B — still the 100 TB shape. Guide §4.2.
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql.functions import arrow_udf
-
-        bcw = df.sparkSession.sparkContext.broadcast(
-            np.asarray(w, dtype=np.float64).reshape(1, b)
-        )
-
-        def _margin_sum(bk):
-            sums, counts = _gather_segment_sums(bk, bcw.value)
-            return pa.StructArray.from_arrays(
-                [
-                    pa.array(sums[0], type=pa.float64()),
-                    pa.array(counts, type=pa.int64()),
-                ],
-                names=["s", "c"],
-            )
-
-        # module-level `from __future__ import annotations` turns
-        # inline hints into strings arrow_udf's eval-type inference
-        # cannot resolve — attach real objects instead
-        _margin_sum.__annotations__ = {
-            "bk": pa.Array,
-            "return": pa.Array,
-        }
-        _margin_sum = arrow_udf("struct<s: double, c: bigint>")(
-            _margin_sum
-        )
-
-        tmp = src.withColumn("_qsc", _margin_sum(buckets))
-        ssum = F.col("_qsc.s")
-        cnt = F.col("_qsc.c")
-        if normalize:
-            ssum = ssum / cnt
-        margin = F.when(cnt > 0, F.lit(bias) + ssum)
-        out = tmp.withColumn(
-            out_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-        ).drop("_qsc", *_tmp_cols)
-    elif b <= _LITERAL_MAX:
-        # one parsed SQL array literal, not F.lit(list): the latter
-        # walks the list element-by-element over py4j, costing ~2 s
-        # of driver time per plan BUILD at B=4096 (measured; the SQL
-        # string parses in <0.1 s and folds to the identical
-        # constant — %.17e round-trips every finite double exactly)
-        if all(math.isfinite(x) for x in w):
-            wlit = F.expr(
-                "array(" + ",".join(f"{x:.17e}" for x in w) + ")"
-            )
-        else:  # inf/nan have no SQL literal — take the slow path
-            wlit = F.lit(w)
-        ssum = F.aggregate(
-            F.transform(
-                buckets,
-                lambda i: F.element_at(wlit, i + F.lit(1)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        if normalize:
-            ssum = ssum / F.array_size(buckets)
-        margin = F.when(
-            F.array_size(buckets) > 0, F.lit(bias) + ssum
-        )
-        out = src.withColumn(
-            out_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-        ).drop(*_tmp_cols)
-    else:
-        spark = df.sparkSession
-        wtab = spark.createDataFrame(
-            [(i, float(x)) for i, x in enumerate(w)],
-            "_bucket int, _w double",
-        )
-        msum = F.sum("_w")
-        per_doc = (
-            src.select(id_col, F.explode(buckets).alias("_bucket"))
-            .join(F.broadcast(wtab), on="_bucket", how="left")
-            .groupBy(id_col)
-            .agg(
-                (
-                    msum / F.count("*") if normalize else msum
-                ).alias("_m")
-            )
-            .select(
-                id_col,
-                (
-                    F.lit(1.0)
-                    / (F.lit(1.0) + F.exp(-(F.lit(bias) + F.col("_m"))))
-                ).alias(out_col),
-            )
-        )
-        out = df.join(per_doc, on=id_col, how="left").select(
-            *df.columns, out_col
-        )
+    out = out.withColumn(
+        out_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col(m_c)[0]))
+    ).drop(*tmp)
     if label_col is not None:
         out = out.withColumn(
             label_col, F.col(out_col) >= F.lit(float(threshold))
         )
     return out
+
+
+@contextmanager
+def _featurize(
+    df: DataFrame,
+    label: Column,
+    text_col: str,
+    num_buckets: int,
+    seed: int,
+    portable: bool,
+    feature: str,
+    who: str,
+    bad_label: "Column | None" = None,
+):
+    """Persist the ``(_y, _bk)`` projection of every row of ``df``
+    once and count it with ONE aggregate: total rows, usable rows
+    (non-NULL label, at least one gram) and, when ``bad_label`` is
+    given, the smallest usable label it flags. Yields ``(usable
+    frame, usable count, total count)``; the usable frame is a
+    filter over the cache, so it keeps the partitions and row order
+    the descent's float sums depend on. Raises ``ValueError`` when
+    no row is usable or a label is bad. The cache is released when
+    the block exits, also when it raises."""
+    proj = (
+        df.select(
+            label.alias("_y"),
+            gram_bucket_base(text_col, feature).alias("_hgb_base"),
+        )
+        .select(
+            "_y",
+            hashed_gram_buckets(
+                text_col, num_buckets, seed, portable,
+                feature=feature, base=F.col("_hgb_base"),
+            ).alias("_bk"),
+        )
+        .persist()
+    )
+    try:
+        usable = F.col("_y").isNotNull() & (F.array_size("_bk") > 0)
+        aggs = [F.count("*"), F.count_if(usable)]
+        if bad_label is not None:
+            aggs.append(F.min(F.when(usable & bad_label, F.col("_y"))))
+        row = proj.agg(*aggs).first()
+        total, n = int(row[0]), int(row[1])
+        if n == 0:
+            raise ValueError(
+                f"{who}: no usable rows (every row had a NULL label "
+                "or no grams)"
+            )
+        if bad_label is not None and row[2] is not None:
+            raise ValueError(f"labels must be 0/1; found {row[2]!r}")
+        yield proj.filter(usable), n, total
+    finally:
+        proj.unpersist()
+
+
+def _descend(
+    feats: DataFrame,
+    n: int,
+    k: int,
+    num_buckets: int,
+    n_iter: int,
+    learning_rate: float,
+    l2: float,
+    normalize: bool,
+    residual,
+) -> tuple:
+    """Full-batch gradient descent of a K-row linear model over the
+    usable ``(_y, _bk)`` rows :func:`_featurize` yields. Per
+    iteration, one ``mapInArrow`` pass computes per-partition partials
+    of (∇W, ∇b, loss) against the current weights, the driver sums
+    them in partition order and steps ``W -= lr · (∇/n + l2·W)``,
+    ``b -= lr · ∇b/n``. ``residual(margins (K, rows), labels)`` is
+    the family's link: it returns the (K, rows) residual
+    ``∂loss/∂margin`` and the batch's summed log-likelihood. Returns
+    ``(W, b, mean loss per iteration)``."""
+    import numpy as np
+    import pyarrow as pa
+
+    b = int(num_buckets)
+    w = np.zeros((k, b), dtype=np.float64)
+    bias = np.zeros(k, dtype=np.float64)
+    losses: "list[float]" = []
+    schema = "grad array<double>, gbias array<double>, loss double"
+
+    for _ in range(int(n_iter)):
+        cur_w, cur_b = w.copy(), bias.copy()
+
+        def _partial(batches):
+            # vectorized batch kernel: zero-copy Arrow segments, one
+            # add.reduceat segment sum per class for the margins and
+            # one bincount scatter per class for the gradient — the
+            # gather/scatter of a sparse matmul, no per-row Python
+            g = np.zeros((k, b), dtype=np.float64)
+            gb = np.zeros(k, dtype=np.float64)
+            loss = 0.0
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                idx, starts, counts = _segments(batch.column("_bk"))
+                scale = (
+                    1.0 / counts if normalize
+                    else np.ones(batch.num_rows, dtype=np.float64)
+                )
+                m = (
+                    _segment_sums(cur_w, idx, starts, counts) * scale
+                    + cur_b[:, None]
+                )
+                r, ll = residual(m, batch.column("_y"))
+                loss -= ll
+                # one shared row index per gram instead of a dense
+                # (k, n_grams) repeat
+                rows = np.repeat(np.arange(batch.num_rows), counts)
+                rs = r * scale
+                for ki in range(k):
+                    g[ki] += np.bincount(
+                        idx, weights=rs[ki][rows], minlength=b
+                    )
+                gb += r.sum(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([g.reshape(-1).tolist()],
+                             type=pa.list_(pa.float64())),
+                    pa.array([gb.tolist()], type=pa.list_(pa.float64())),
+                    pa.array([loss], type=pa.float64()),
+                ],
+                names=["grad", "gbias", "loss"],
+            )
+
+        parts = feats.mapInArrow(_partial, schema=schema).collect()
+        g = np.zeros((k, b), dtype=np.float64)
+        gb = np.zeros(k, dtype=np.float64)
+        loss = 0.0
+        for row in parts:
+            g += np.asarray(row["grad"], dtype=np.float64).reshape(k, b)
+            gb += np.asarray(row["gbias"], dtype=np.float64)
+            loss += row["loss"]
+        w -= learning_rate * (g / n + l2 * w)
+        bias -= learning_rate * (gb / n)
+        losses.append(loss / n)
+    return w, bias, losses
+
+
+def _logistic_residual(m, y):
+    """Binary link of :func:`_descend`: overflow-safe sigmoid,
+    clamped log-likelihood, residual ``p − y``."""
+    import numpy as np
+
+    m = m[0]
+    y = np.asarray(y, dtype=np.float64)
+    t = np.exp(-np.abs(m))
+    p = np.where(m >= 0, 1.0 / (1.0 + t), t / (1.0 + t))
+    ll = (
+        y * np.log(np.maximum(p, 1e-300))
+        + (1.0 - y) * np.log(np.maximum(1.0 - p, 1e-300))
+    ).sum()
+    return (p - y)[None, :], ll
+
+
+def _fit_args(num_buckets, n_iter) -> "tuple[int, int]":
+    b, iters = int(num_buckets), int(n_iter)
+    if iters < 1:
+        raise ValueError(f"n_iter must be >= 1 (got {n_iter})")
+    if b < 1:
+        raise ValueError(f"num_buckets must be >= 1 (got {num_buckets})")
+    return b, iters
 
 
 def train_quality_classifier(
@@ -460,124 +518,28 @@ def train_quality_classifier(
     and bit-stable only up to summation order — exactness gates pin
     the SCORER on fixed weights; training is certified by descent +
     accuracy invariants (the pyspark.ml contract too)."""
-    import numpy as np
-
-    from ..cache import track
-
-    b = int(num_buckets)
-    iters = int(n_iter)
-    lr = float(learning_rate)
-    reg = float(l2)
-    if iters < 1:
-        raise ValueError(f"n_iter must be >= 1 (got {n_iter})")
-
-    # base projected below the bucket transform so its ~4 references
-    # share one computation (r19 — see gram_bucket_base)
-    buckets = hashed_gram_buckets(
-        text_col, b, seed, portable,
-        feature=feature, base=F.col("_hgb_base"),
-    )
-    total = df.count()
-    feats = track(
-        df.select(
-            F.col(label_col).cast("double").alias("_y"),
-            gram_bucket_base(text_col, feature).alias("_hgb_base"),
+    b, iters = _fit_args(num_buckets, n_iter)
+    y = F.col(label_col).cast("double")
+    with _featurize(
+        df, y, text_col, b, seed, portable, feature,
+        "train_quality_classifier",
+        bad_label=(F.col("_y") != 0.0) & (F.col("_y") != 1.0),
+    ) as (feats, n, total):
+        w, bias, losses = _descend(
+            feats, n, 1, b, iters, float(learning_rate), float(l2),
+            bool(normalize), _logistic_residual,
         )
-        .select(
-            "_y",
-            buckets.alias("_bk"),
-        )
-        .filter(
-            F.col("_y").isNotNull() & (F.array_size("_bk") > 0)
-        )
-        .persist()
-    )
-    n = feats.count()
-    if n == 0:
-        raise ValueError(
-            "train_quality_classifier: no usable rows (every row had "
-            "a NULL label or no grams)"
-        )
-    bad_rows = feats.filter(
-        (F.col("_y") != 0.0) & (F.col("_y") != 1.0)
-    ).take(1)
-    if bad_rows:
-        raise ValueError(
-            f"labels must be 0/1; found {bad_rows[0]['_y']!r}"
-        )
-
-    w = np.zeros(b, dtype=np.float64)
-    bias = 0.0
-    norm_flag = bool(normalize)
-    losses: "list[float]" = []
-    schema = "grad array<double>, gbias double, loss double, n long"
-
-    for _ in range(iters):
-        cur_w, cur_b = w.copy(), bias
-
-        def _partial(batches):
-            # vectorized batch kernel (r14 verdict task 6): zero-copy
-            # Arrow segment extraction, one add.reduceat segment-sum
-            # for the margins and one bincount scatter for the
-            # gradient per batch — no per-row Python loop (scipy CSR
-            # is unavailable offline; these two numpy primitives are
-            # the same gather/scatter matmul)
-            g = np.zeros(b, dtype=np.float64)
-            gb = 0.0
-            loss = 0.0
-            cnt = 0
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                y = np.asarray(batch.column("_y"), dtype=np.float64)
-                idx, starts, counts = _arrow_segments(batch, "_bk")
-                scale = (
-                    1.0 / counts if norm_flag
-                    else np.ones(batch.num_rows, dtype=np.float64)
-                )
-                m = (
-                    np.add.reduceat(cur_w[idx], starts) * scale
-                    + cur_b
-                )
-                # overflow-safe sigmoid and clamped log-loss
-                t = np.exp(-np.abs(m))
-                p = np.where(m >= 0, 1.0 / (1.0 + t), t / (1.0 + t))
-                loss -= (
-                    y * np.log(np.maximum(p, 1e-300))
-                    + (1.0 - y) * np.log(np.maximum(1.0 - p, 1e-300))
-                ).sum()
-                r = p - y
-                g += np.bincount(
-                    idx, weights=np.repeat(r * scale, counts),
-                    minlength=b,
-                )
-                gb += r.sum()
-                cnt += batch.num_rows
-            yield _partials_batch(g.tolist(), gb, loss, cnt)
-
-        parts = feats.mapInArrow(_partial, schema=schema).collect()
-        g = np.zeros(b, dtype=np.float64)
-        gb = 0.0
-        loss = 0.0
-        for r in parts:
-            g += np.asarray(r["grad"], dtype=np.float64)
-            gb += r["gbias"]
-            loss += r["loss"]
-        w -= lr * (g / n + reg * w)
-        bias -= lr * (gb / n)
-        losses.append(loss / n)
-
     return {
-        "weights": w.tolist(),
-        "bias": float(bias),
+        "weights": w[0].tolist(),
+        "bias": float(bias[0]),
         "num_buckets": b,
         "seed": int(seed),
         "portable": bool(portable),
-        "normalize": norm_flag,
+        "normalize": bool(normalize),
         "feature": str(feature),
         "loss_history": losses,
-        "n_rows": int(n),
-        "n_dropped": int(total - n),
+        "n_rows": n,
+        "n_dropped": total - n,
     }
 
 

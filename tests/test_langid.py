@@ -1,6 +1,6 @@
 """Trained multiclass language ID (operators/langid.py): softmax
 training descent/accuracy invariants on a planted multilingual
-fixture, scorer path parity (literal vs broadcast), NULL handling,
+fixture, NULL handling,
 a differential against the heuristic detect_language, and the
 tokenizer_stats group-column composition. Trained weights are
 float-sum-order unstable by nature, so the t39 gate pins the SCORER
@@ -92,24 +92,6 @@ def test_training_is_repeatable(multilingual, model):
     assert again["loss_history"][-1] == pytest.approx(
         ref["loss_history"][-1], rel=1e-9
     )
-
-
-def test_scorer_paths_agree_exactly(multilingual, model, monkeypatch):
-    """The in-plan literal path and the broadcast-table path must
-    produce identical predictions and near-identical probabilities
-    (the margins differ only in float-sum order)."""
-    import polaroam_spark.operators.langid as L
-
-    lit = score_langid(multilingual, model).orderBy("doc_id").collect()
-    monkeypatch.setattr(L, "_LITERAL_MAX", 0)
-    bc = score_langid(multilingual, model).orderBy("doc_id").collect()
-    assert [r.language_pred for r in lit] == [
-        r.language_pred for r in bc
-    ]
-    for a, b in zip(lit, bc):
-        assert a.language_prob == pytest.approx(
-            b.language_prob, abs=1e-9
-        )
 
 
 def test_scorer_matches_driver_replay(multilingual, model, spark):

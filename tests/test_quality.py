@@ -1,15 +1,14 @@
 """Trained quality classifier (operators/quality.py): descent and
 accuracy invariants for training (float-sum order makes trained
 weights bit-unstable by nature, so the t34 gate pins the SCORER on
-fixed weights and these tests certify the trainer), scorer path
-parity, NULL handling, and the curate_corpus stage."""
+fixed weights and these tests certify the trainer), NULL handling,
+and the curate_corpus stage."""
 
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
-import polaroam_spark.operators.quality as q
 from polaroam_spark.operators.quality import (
     hashed_gram_buckets,
     score_quality_classifier,
@@ -77,25 +76,6 @@ def test_training_is_repeatable(labeled, model):
     assert again["bias"] == pytest.approx(model["bias"], abs=1e-9)
     for a, b in zip(again["weights"], model["weights"]):
         assert a == pytest.approx(b, abs=1e-9)
-
-
-def test_scorer_paths_agree_exactly(labeled, model, monkeypatch):
-    """The in-plan array-literal path (B ≤ _LITERAL_MAX) and the
-    broadcast-join path must produce identical probabilities."""
-    lit = {
-        r.doc_id: r.quality_prob
-        for r in score_quality_classifier(
-            labeled, model, label_col=None
-        ).collect()
-    }
-    monkeypatch.setattr(q, "_LITERAL_MAX", 1)
-    jn = {
-        r.doc_id: r.quality_prob
-        for r in score_quality_classifier(
-            labeled, model, label_col=None
-        ).collect()
-    }
-    assert lit == jn
 
 
 def test_scorer_matches_driver_replay(labeled, model, spark):
