@@ -3,8 +3,8 @@ intermediates had no release path).
 
 Several operators persist intermediate frames that the RETURNED LAZY
 frame still references — e.g. the decontamination token arrays
-(dedup.py ``c_toks``: reused by one corpus pass per distinct short
-eval length) or DSIR's two B-row count tables (textstats.py: each
+(dedup.py ``_corpus_tokens``: reused by one corpus pass per distinct
+short eval length) or DSIR's two B-row count tables (textstats.py: each
 feeds a join AND its own scalar total). Unpersisting inside the
 operator would fire before the caller's first action ever executes
 the plan, so the persists must outlive the call — but a long-lived

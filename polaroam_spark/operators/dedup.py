@@ -33,23 +33,49 @@ stay with the callers. The n-gram scorers are an inverted-index join
 (:func:`_gram_pair_counts`) with a document-frequency cap instead of
 a star guard.
 
+The corpus-vs-eval gram matchers — :func:`ngram_overlap_counts` /
+:func:`decontaminate`, :func:`eval_contamination_report`,
+:func:`memorization_scan` and
+:func:`~polaroam_spark.operators.sketches.bloom_decontaminate` —
+share a second core:
+
+- :func:`_corpus_tokens` — the narrow tokenized corpus frame,
+  persisted and tracked only when more than one length pass reads it;
+- :func:`_gram_hashes` — the ``(key…, gram-hash)`` explode of
+  exactly-k-token grams, the hash function an argument;
+- :func:`_short_lengths` — the bounded read of the short item lengths;
+- :func:`_item_tokens` — the eval/probe side, raising on NULL ids
+  where ids key the output;
+- :func:`_gram_passes` — the broadcast item join, one pass per length;
+- :func:`_decontaminated` — the null-safe survivor anti-join.
+
+Each keeps only its own aggregation: the per-doc overlap sum, the
+per-item distinct counts, the capped per-probe dense ranks, or the
+Bloom build and probe.
+
 No reference counterpart (the reference is a mobility engine); these
 are the beyond-reference components required by the build brief.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polaroam_spark.cache import track
 from polaroam_spark.functions.text import (
     band_hashes,
+    fast_hash64,
     jaccard,
     minhash_signature,
     ngram_set,
     tokens,
     word_shingles,
 )
+from polaroam_spark.session import fan_out
 from polaroam_spark.session import materialize as materialize_df
 
 
@@ -344,8 +370,6 @@ def minhash_lsh_pairs(
     :func:`_candidates`); feed the pairs to
     :func:`duplicate_components` for the full transitive closure.
     """
-    from ..session import fan_out
-
     # fan_out BEFORE the signature compute (guide §2.5): shingling +
     # num_hashes MinHash passes are the heaviest per-row work in this
     # operator, and a single-row-group input (any local parquet under
@@ -971,42 +995,126 @@ def embedding_neardup_pairs(
     return _finalize_pairs(verified, [b], materialize)
 
 
-def _gram_hits(
-    corpus_toks: DataFrame,
-    eval_subset: DataFrame,
-    k: int,
-    id_col: str,
-    eval_text_col: str,
-    broadcast_eval: bool,
-) -> DataFrame:
-    """(id, shared-k-gram count) of corpus docs against one eval
-    subset, both sides shingled at k. ``corpus_toks`` is the
-    PRE-TOKENIZED narrow corpus frame (id_col, _ctoks) — tokenizing
-    happens once in the caller, so a multi-length pass never re-runs
-    the regex tokenizer over corpus text (VERDICT r10 #5)."""
-    from polaroam_spark.functions.text import fast_hash64
+# ---- corpus-vs-eval gram matches -------------------------------------
 
-    corpus_grams = corpus_toks.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(word_shingles(F.col("_ctoks"), k, assume_no_nulls=True))
-        ).alias("_gram"),
-    ).select(id_col, fast_hash64("_gram").alias("_gh"))
-    eval_grams = (
-        eval_subset.select(
-            F.explode(
-                F.array_distinct(word_shingles(tokens(eval_text_col), k, assume_no_nulls=True))
-            ).alias("_gram")
+
+def _corpus_tokens(
+    corpus: DataFrame, id_col: str, text_col: str, lengths: list
+) -> DataFrame:
+    """The narrow ``(_cid, _toks)`` corpus frame of every gram-match
+    operator: corpus text is scanned and tokenized once, whatever the
+    number of gram ``lengths``, and documents shorter than all of
+    them are dropped. Tokenize, shingle, hash and the broadcast item
+    join are all map-side, so an input in fewer splits than the
+    session has cores is fanned out first (:func:`fan_out`, a no-op
+    at corpus scale). With more than one length pass ahead the frame
+    is persisted (spilling to disk past memory) and registered with
+    :mod:`polaroam_spark.cache`, since an unpersist here would run
+    before the caller's lazy result does; a single pass streams."""
+    toks = (
+        fan_out(
+            corpus.select(
+                F.col(id_col).alias("_cid"), F.col(text_col).alias("_text")
+            )
         )
-        .select(fast_hash64("_gram").alias("_gh"))
-        .distinct()
+        .select("_cid", tokens("_text").alias("_toks"))
+        .filter(F.size("_toks") >= min(lengths))
     )
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
+    if len(lengths) > 1:
+        toks = track(toks.persist(StorageLevel.MEMORY_AND_DISK))
+    return toks
+
+
+def _item_tokens(
+    items: DataFrame, text_col: str, id_col: str | None = None,
+    where: str = "",
+) -> DataFrame:
+    """The eval/probe side ``([_iid,] _toks)``; NULL text reads as no
+    tokens. Item ids key the per-item aggregate and its join back to
+    every item, where a NULL id would fall out and report a matched
+    item as clean, so a NULL ``id_col`` raises (a bounded
+    ``limit(1)`` probe)."""
+    cols = [
+        F.coalesce(tokens(text_col), F.array().cast("array<string>"))
+        .alias("_toks")
+    ]
+    if id_col is not None:
+        if items.filter(F.col(id_col).isNull()).limit(1).count():
+            raise ValueError(
+                f"{where}: NULL {id_col} — a NULL id would silently "
+                "report its row as clean"
+            )
+        cols.insert(0, F.col(id_col).alias("_iid"))
+    return items.select(*cols)
+
+
+def _distinct_grams(toks: str, k: int) -> F.Column:
+    return F.array_distinct(
+        word_shingles(F.col(toks), k, assume_no_nulls=True)
+    )
+
+
+def _gram_hashes(
+    df: DataFrame, keys: list, k: int, ghash=fast_hash64
+) -> DataFrame:
+    """``(keys…, _gh)``: one row per distinct word ``k``-gram of each
+    row's ``_toks``, hashed to 64 bits by ``ghash``. Rows shorter
+    than ``k`` tokens yield nothing, so every gram is exactly ``k``
+    tokens long (``word_shingles`` alone would fold a shorter row
+    into one whole-text shingle)."""
     return (
-        corpus_grams.join(eval_grams, on="_gh")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_overlap"))
+        df.filter(F.size("_toks") >= k)
+        .select(*keys, F.explode(_distinct_grams("_toks", k)).alias("_gram"))
+        .select(*keys, ghash("_gram").alias("_gh"))
+    )
+
+
+def _short_lengths(items: DataFrame, n: int) -> list:
+    """The distinct item lengths below ``n`` tokens, ascending: one
+    extra pass each. A bounded driver read (at most n-1 rows)."""
+    return sorted(
+        r[0]
+        for r in items.select(F.size("_toks").alias("_L"))
+        .filter((F.col("_L") > 0) & (F.col("_L") < n))
+        .distinct()
+        .collect()
+    )
+
+
+def _gram_passes(
+    corpus: DataFrame, id_col: str, text_col: str, items: DataFrame,
+    keys: list, n: int, short_lens: list = (),
+) -> list:
+    """One ``(_gh, _cid, keys…)`` frame of matched grams per pass:
+    corpus ``n``-grams against the items of >= ``n`` tokens, then for
+    each short length L corpus L-grams against the WHOLE text of the
+    L-token items, all over one :func:`_corpus_tokens` frame. The
+    item side reduces to distinct ``(keys…, _gh)`` rows and
+    broadcasts (benchmark- or probe-set sized), so corpus grams join
+    map-side and only matched rows leave the stage."""
+    lengths = [n, *short_lens]
+    c_toks = _corpus_tokens(corpus, id_col, text_col, lengths)
+    passes = []
+    for k in lengths:
+        sub = items if k == n else items.filter(F.size("_toks") == k)
+        item_g = F.broadcast(_gram_hashes(sub, keys, k).dropDuplicates())
+        passes.append(_gram_hashes(c_toks, ["_cid"], k).join(item_g, "_gh"))
+    return passes
+
+
+def _decontaminated(
+    corpus: DataFrame, counts: DataFrame, id_col: str, min_overlap: int
+) -> DataFrame:
+    """The survivor rule: corpus rows unchanged, minus those whose id
+    has ``n_overlap >= min_overlap`` in ``counts`` ``(_cid,
+    n_overlap)``. The anti-join is null-safe: NULL corpus ids count
+    as one document, so every NULL-id row drops once they reach the
+    bar together (the conservative read; a plain anti-join never
+    matches a NULL key and let them through). Corpus bodies scan
+    once and never shuffle."""
+    hit = counts.filter(F.col("n_overlap") >= F.lit(min_overlap))
+    return corpus.join(
+        hit, corpus[id_col].eqNullSafe(hit["_cid"]), how="left_anti"
     )
 
 
@@ -1017,7 +1125,6 @@ def ngram_overlap_counts(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_text_col: str = "text",
-    broadcast_eval: bool = True,
     match_short_eval: bool = True,
 ) -> DataFrame:
     """Per-document count of distinct word n-grams shared with ANY
@@ -1030,80 +1137,39 @@ def ngram_overlap_counts(
     Eval benchmarks are small (1e3-1e6 docs), so their distinct
     gram-hash set broadcasts and the exploded corpus grams join
     map-side with no shuffle; the per-doc overlap count is then a
-    map-side-combined groupBy on the doc id. Set
-    ``broadcast_eval=False`` to fall back to a hash-partitioned
-    equi-join when the eval side is genuinely large.
+    map-side-combined groupBy on the doc id. An eval side too large
+    to broadcast goes through
+    :func:`~polaroam_spark.operators.sketches.bloom_decontaminate`.
 
     Eval items SHORTER than n tokens (short QA answers are common in
     benchmarks) cannot match any n-gram, so with
     ``match_short_eval=True`` each distinct short eval length L gets
     its own pass: corpus L-grams against the length-L eval items'
-    whole text. The distinct short lengths are read driver-side — a
-    bounded (< n rows) scalar action. Corpus TEXT is scanned and
-    tokenized exactly ONCE regardless (VERDICT r10 #5): the token
-    arrays land in a persisted narrow (id, tokens) frame and each
-    length pass is an array-shingle + explode over it — the extra
-    cost per short length is the gram explode, never a repeat of the
-    corpus scan or the regex tokenizer. Set
-    ``match_short_eval=False`` to skip exact short-item matching
-    (the persist is then skipped too — a single pass streams).
+    whole text. Corpus text is scanned and tokenized once regardless
+    (:func:`_corpus_tokens`); the extra cost per short length is the
+    gram explode. ``match_short_eval=False`` skips exact short-item
+    matching.
 
     Returns ``id_col, n_overlap`` for docs with >= 1 shared gram
-    (counts sum across gram lengths).
+    (counts sum across gram lengths; NULL corpus ids count as one
+    document).
     """
-    eval_len = F.array_size(tokens(eval_text_col))
-    base_eval = eval_df.filter(eval_len >= F.lit(n))
-    c_toks = corpus.select(
-        F.col(id_col), tokens(text_col).alias("_ctoks")
-    )
-    short_lens: list = []
-    if match_short_eval:
-        short_lens = [
-            r[0]
-            for r in eval_df.select(eval_len.alias("_L"))
-            .filter((F.col("_L") > 0) & (F.col("_L") < n))
-            .distinct()
-            .collect()  # bounded: at most n-1 rows
-        ]
-    if short_lens:
-        # > 1 corpus pass ahead: materialize the token arrays once
-        # (spills to disk past memory; left cached for the caller's
-        # action — an explicit unpersist here would run before the
-        # lazy result ever executes). Registered with the session
-        # cache registry: polaroam_spark.unpersist_caches() releases
-        # it once the caller's terminal action has run (r11 ADVICE:
-        # long-lived sessions otherwise accumulate caches and rely
-        # purely on LRU eviction)
-        from pyspark import StorageLevel
-
-        from ..cache import track
-
-        c_toks = track(c_toks.persist(StorageLevel.MEMORY_AND_DISK))
+    items = _item_tokens(eval_df, eval_text_col)
+    short_lens = _short_lengths(items, n) if match_short_eval else []
     hits = [
-        _gram_hits(
-            c_toks, base_eval, n, id_col, eval_text_col,
-            broadcast_eval,
+        m.groupBy("_cid").agg(F.count("*").alias("n_overlap"))
+        for m in _gram_passes(
+            corpus, id_col, text_col, items, [], n, short_lens
         )
     ]
-    for length in sorted(short_lens):
-        hits.append(
-            _gram_hits(
-                c_toks,
-                eval_df.filter(eval_len == F.lit(length)),
-                length,
-                id_col,
-                eval_text_col,
-                broadcast_eval,
-            )
+    # per-pass counts, summed only across passes: one pass keeps the
+    # non-null count column, several the nullable sum (both pinned)
+    counts = hits[0]
+    if len(hits) > 1:
+        counts = reduce(DataFrame.unionByName, hits).groupBy("_cid").agg(
+            F.sum("n_overlap").cast("long").alias("n_overlap")
         )
-    if len(hits) == 1:
-        return hits[0]
-    unioned = hits[0]
-    for h in hits[1:]:
-        unioned = unioned.unionByName(h)
-    return unioned.groupBy(id_col).agg(
-        F.sum("n_overlap").cast("long").alias("n_overlap")
-    )
+    return counts.select(F.col("_cid").alias(id_col), "n_overlap")
 
 
 def eval_contamination_report(
@@ -1114,7 +1180,6 @@ def eval_contamination_report(
     eval_id: str = "doc_id",
     text_col: str = "text",
     eval_text_col: str = "text",
-    broadcast_eval: bool = True,
     match_short_eval: bool = True,
 ) -> DataFrame:
     """The EVAL-side contamination artifact — per benchmark item, how
@@ -1126,86 +1191,30 @@ def eval_contamination_report(
     REPORT (which eval items were compromised, and how badly —
     an item matched by one boilerplate gram reads differently from
     one with fifty shared grams across a dozen documents). Every
-    eval row appears in the output; clean items report zeros.
+    eval row appears in the output; clean items report zeros. A
+    NULL ``eval_id`` raises (it would report a leaked item as clean).
 
     Matching rules mirror :func:`ngram_overlap_counts`: items
     shorter than ``n`` tokens match corpus L-grams against their
     WHOLE text (one pass per distinct short length, driver-bounded
-    at n−1 passes; ``match_short_eval=False`` skips them). Corpus
-    TEXT is scanned and tokenized exactly ONCE regardless (VERDICT
-    r10 #5): short-length passes re-shingle a persisted narrow
-    (id, token-array) frame instead of re-running the regex
-    tokenizer over the corpus. Plan shape: the eval side reduces to
-    (item, gram-hash) pairs — benchmark-sized, broadcast by
-    default — so corpus grams join map-side; only MATCHED (corpus
-    doc, item, gram) triples shuffle into the per-item aggregate, a
-    volume bounded by the contamination itself, not the corpus.
+    at n−1 passes; ``match_short_eval=False`` skips them), over one
+    corpus tokenize. Plan shape: the eval side reduces to (item,
+    gram-hash) pairs — benchmark-sized, broadcast — so corpus grams
+    join map-side; only MATCHED (corpus doc, item, gram) triples
+    shuffle into the per-item aggregate, a volume bounded by the
+    contamination itself, not the corpus.
     """
-    from polaroam_spark.functions.text import fast_hash64
-
-    ev_len = F.array_size(tokens(eval_text_col))
-    c_toks = corpus.select(
-        F.col(corpus_id).alias("_cid"),
-        tokens(text_col).alias("_ctoks"),
+    items = _item_tokens(
+        eval_df, eval_text_col, eval_id, "eval_contamination_report (eval_df)"
     )
-
-    def _pairs(ev_subset: DataFrame, k: int, whole: bool) -> DataFrame:
-        if whole:
-            ev_g = ev_subset.select(
-                F.col(eval_id).alias("_eid"),
-                fast_hash64(
-                    F.concat_ws(" ", tokens(eval_text_col))
-                ).alias("_gh"),
-            )
-        else:
-            ev_g = (
-                ev_subset.select(
-                    F.col(eval_id).alias("_eid"),
-                    F.explode(
-                        F.array_distinct(
-                            word_shingles(tokens(eval_text_col), k, assume_no_nulls=True)
-                        )
-                    ).alias("_gram"),
-                )
-                .select("_eid", fast_hash64("_gram").alias("_gh"))
-                .dropDuplicates()
-            )
-        c_g = c_toks.select(
-            "_cid",
-            F.explode(
-                F.array_distinct(word_shingles(F.col("_ctoks"), k, assume_no_nulls=True))
-            ).alias("_gram"),
-        ).select("_cid", fast_hash64("_gram").alias("_gh"))
-        e = F.broadcast(ev_g) if broadcast_eval else ev_g
-        return c_g.join(e, on="_gh").select("_cid", "_eid", "_gh")
-
-    short_lens: list = []
-    if match_short_eval:
-        short_lens = [
-            int(r["L"])
-            for r in eval_df.select(ev_len.alias("L"))
-            .filter((F.col("L") > 0) & (F.col("L") < n))
-            .distinct()
-            .collect()  # bounded: < n distinct lengths
-        ]
-    if short_lens:
-        # > 1 corpus pass ahead: materialize token arrays once (see
-        # ngram_overlap_counts for the persist + registry rationale;
-        # polaroam_spark.unpersist_caches() releases it)
-        from pyspark import StorageLevel
-
-        from ..cache import track
-
-        c_toks = track(c_toks.persist(StorageLevel.MEMORY_AND_DISK))
-    parts = [_pairs(eval_df.filter(ev_len >= F.lit(n)), n, False)]
-    for L in sorted(short_lens):
-        parts.append(
-            _pairs(eval_df.filter(ev_len == F.lit(L)), L, True)
-        )
-    from functools import reduce as _reduce
-
-    allp = _reduce(lambda a, b: a.unionByName(b), parts)
-    agg = allp.groupBy("_eid").agg(
+    short_lens = _short_lengths(items, n) if match_short_eval else []
+    matched = reduce(
+        DataFrame.unionByName,
+        _gram_passes(
+            corpus, corpus_id, text_col, items, ["_iid"], n, short_lens
+        ),
+    )
+    agg = matched.groupBy("_iid").agg(
         F.countDistinct("_cid").cast("long").alias("n_corpus_docs"),
         F.countDistinct("_gh").cast("long").alias("n_shared_grams"),
     )
@@ -1216,7 +1225,7 @@ def eval_contamination_report(
         # eval item) — broadcast it so the report never sort-merges
         .join(
             F.broadcast(agg),
-            on=F.col(eval_id) == F.col("_eid"),
+            on=F.col(eval_id) == F.col("_iid"),
             how="left",
         )
         .select(
@@ -1238,7 +1247,6 @@ def memorization_scan(
     text_col: str = "text",
     probe_text_col: str = "text",
     max_match_docs: int = 20,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Verbatim-memorization scan — the PUBLICATION-side twin of
     :func:`decontaminate` (Lee et al. 2021 / Carlini et al. 2022:
@@ -1272,14 +1280,11 @@ def memorization_scan(
     appearing in the list). Plan shape mirrors
     :func:`eval_contamination_report`'s inverted index: the probe
     side reduces to (probe, 8-byte gram hash) pairs —
-    generation-set-sized, broadcast by default — so corpus grams
-    join map-side off one corpus scan and only MATCHED (corpus doc,
-    probe, gram) triples shuffle, a volume bounded by the
-    memorization itself, not the corpus. Reference for the gram
-    machinery: dedup.py:ngram_overlap_counts (d7/d14 gates).
+    generation-set-sized, broadcast — so corpus grams join map-side
+    off one corpus scan and only MATCHED (corpus doc, probe, gram)
+    triples shuffle, a volume bounded by the memorization itself,
+    not the corpus.
     """
-    from polaroam_spark.functions.text import fast_hash64
-
     nn = int(n)
     if nn < 2:
         raise ValueError(f"n must be >= 2 (got {n})")
@@ -1287,99 +1292,28 @@ def memorization_scan(
         raise ValueError(
             f"max_match_docs must be >= 1 (got {max_match_docs})"
         )
-    # probe ids key every join and group below; a NULL id would
-    # fall out of the equality join-back and report a MEMORIZED
-    # probe as clean (and groupBy would merge all NULL-id probes
-    # into one phantom row) — broken manifest, fail loudly.
-    # Bounded limit(1) probe, the blocklist-guard cost class.
-    if probes.filter(F.col(probe_id).isNull()).limit(1).count():
-        raise ValueError(
-            f"memorization_scan: NULL {probe_id} in probes — ids "
-            "identify generations; a NULL id would silently "
-            "report its probe as clean"
-        )
-    # word_shingles emits a SHORTER-than-k whole-text shingle for
-    # sub-k inputs (the decontaminate whole-text-match rule); a
-    # verbatim-N definition must not — gate both sides on >= n
-    # tokens so every gram is exactly n tokens long
-    p_base = probes.select(
-        F.col(probe_id).alias("_pid"),
-        # NULL probe text behaves as the empty probe (0 tokens,
-        # too_short, zeros) — not a NULL-riddled row
-        F.coalesce(
-            tokens(probe_text_col),
-            F.array().cast("array<string>"),
-        ).alias("_ptoks"),
-    ).withColumn(
-        "_pgrams",
-        F.when(
-            F.size("_ptoks") >= nn,
-            F.array_distinct(
-                word_shingles(
-                    F.col("_ptoks"), nn, assume_no_nulls=True
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>")),
+    items = _item_tokens(
+        probes, probe_text_col, probe_id, "memorization_scan (probes)"
     )
-    p_g = p_base.select(
-        "_pid", F.explode("_pgrams").alias("_gram")
-    ).select("_pid", fast_hash64("_gram").alias("_gh"))
-    if broadcast_probes:
-        p_g = F.broadcast(p_g)
-    # NULL corpus ids are excluded up front: they cannot be cited
-    # in matched_doc_ids (collect_list drops NULL) yet would rank
-    # FIRST in the cap window and crowd a real id out of the list.
-    # fan_out (r19 optimization round, guide §2.5 single-split
-    # input): the whole corpus-side chain below — tokenize, per-
-    # position n-token shingle concat, hash, broadcast probe join —
-    # is map-side, so on a single-split input it ran serially in one
-    # task (measured 1.76 -> 1.09 s interleaved A/B at sf0.1).
-    # Scale-adaptive: a no-op once the corpus arrives in >= cores
-    # splits; the 2-column projection keeps everything else out of
-    # the exchange (guide §2.3). Per-probe outputs are aggregates
-    # over an unordered match set — partition layout can't change
-    # them (d16 gate re-proved hash-exact).
-    from ..session import fan_out
-
-    c_toks = fan_out(
-        corpus.select(
-            F.col(corpus_id).alias("_cid"),
-            F.col(text_col).alias("_ctext"),
-        )
-    ).select(
-        "_cid", tokens(F.col("_ctext")).alias("_ctoks")
-    ).filter(
-        F.col("_cid").isNotNull() & (F.size("_ctoks") >= nn)
+    (matched,) = _gram_passes(
+        corpus, corpus_id, text_col, items, ["_iid"], nn
     )
-    c_g = c_toks.select(
-        "_cid",
-        F.explode(
-            F.array_distinct(
-                word_shingles(
-                    F.col("_ctoks"), nn, assume_no_nulls=True
-                )
-            )
-        ).alias("_gram"),
-    ).select("_cid", fast_hash64("_gram").alias("_gh"))
-    matched = c_g.join(p_g, on="_gh").select("_cid", "_pid", "_gh")
-    # ALL per-probe outputs from ONE pass over `matched` (r19
-    # optimization round): the old shape ran two independent
-    # aggregations (countDistinct stats + the cap window), each
-    # re-deriving `matched` — i.e. the corpus gram scan+explode+join,
-    # the single corpus-scaled subtree, executed TWICE per action.
-    # `matched` is distinct (cid, pid, gh) triples by construction
-    # (both gram sides are array_distinct per document), so:
-    #   - countDistinct(gh)  == max dense_rank over gh within pid
-    #   - countDistinct(cid) == max dense_rank over cid within pid
+    matched = matched.filter(F.col("_cid").isNotNull())
+    # All per-probe outputs come from ONE pass over `matched`, so the
+    # corpus-scaled subtree runs once per action. `matched` holds
+    # distinct (cid, iid, gh) triples (both gram sides are distinct
+    # per document), so:
+    #   - countDistinct(gh)  == max dense_rank over gh within iid
+    #   - countDistinct(cid) == max dense_rank over cid within iid
     #   - the capped id list == the cids whose dense_rank <= cap —
     #     a collect_set BOUNDED by max_match_docs, never the
     #     boilerplate-probe corpus-sized buffer the cap exists to
     #     prevent.
-    # One exchange on _pid, two in-partition sorts, and the groupBy
+    # One exchange on _iid, two in-partition sorts, and the groupBy
     # reuses the window partitioning — no second corpus pass, no
-    # persist. Guide §2.4.
-    w_gh = Window.partitionBy("_pid").orderBy("_gh")
-    w_cid = Window.partitionBy("_pid").orderBy("_cid")
+    # persist.
+    w_gh = Window.partitionBy("_iid").orderBy("_gh")
+    w_cid = Window.partitionBy("_iid").orderBy("_cid")
     stats = (
         matched.withColumns(
             {
@@ -1387,7 +1321,7 @@ def memorization_scan(
                 "_rc": F.dense_rank().over(w_cid),
             }
         )
-        .groupBy("_pid")
+        .groupBy("_iid")
         .agg(
             F.max("_rg").cast("long").alias("n_memorized_grams"),
             F.max("_rc").cast("long").alias("n_corpus_docs"),
@@ -1403,18 +1337,22 @@ def memorization_scan(
     )
     id_type = stats.schema["matched_doc_ids"].dataType.simpleString()
     out = (
-        p_base.select(
-            "_pid",
-            F.size("_ptoks").cast("long").alias("n_probe_tokens"),
-            F.size("_pgrams").cast("long").alias("n_probe_grams"),
-            (F.size("_ptoks") < nn).alias("too_short"),
+        items.select(
+            "_iid",
+            F.size("_toks").cast("long").alias("n_probe_tokens"),
+            F.size(
+                F.when(
+                    F.size("_toks") >= nn, _distinct_grams("_toks", nn)
+                ).otherwise(F.array().cast("array<string>"))
+            ).cast("long").alias("n_probe_grams"),
+            (F.size("_toks") < nn).alias("too_short"),
         )
         # the agg table is bounded by the probe set, not the corpus —
         # broadcast it so the report never sort-merges
-        .join(F.broadcast(stats), on="_pid", how="left")
+        .join(F.broadcast(stats), on="_iid", how="left")
     )
     return out.select(
-        F.col("_pid").alias(probe_id),
+        F.col("_iid").alias(probe_id),
         "n_probe_tokens",
         "n_probe_grams",
         "too_short",
@@ -1439,29 +1377,26 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_text_col: str = "text",
-    broadcast_eval: bool = True,
     match_short_eval: bool = True,
 ) -> DataFrame:
     """Drop corpus documents sharing >= ``min_overlap`` distinct word
     n-grams with the eval set (eval items shorter than n match by
-    their exact text — see :func:`ngram_overlap_counts`). Returns
-    surviving corpus rows unchanged (left_anti on the id — corpus
-    bodies scan once and never shuffle)."""
-    contaminated = (
-        ngram_overlap_counts(
-            corpus,
-            eval_df,
-            n=n,
-            id_col=id_col,
-            text_col=text_col,
-            eval_text_col=eval_text_col,
-            broadcast_eval=broadcast_eval,
-            match_short_eval=match_short_eval,
-        )
-        .filter(F.col("n_overlap") >= F.lit(min_overlap))
-        .select(id_col)
-    )
-    return corpus.join(contaminated, on=id_col, how="left_anti")
+    their exact text — see :func:`ngram_overlap_counts`; an eval side
+    too large to broadcast goes through
+    :func:`~polaroam_spark.operators.sketches.bloom_decontaminate`).
+    Returns surviving corpus rows unchanged; NULL corpus ids count as
+    one document, so all of them drop once they reach
+    ``min_overlap`` together."""
+    counts = ngram_overlap_counts(
+        corpus,
+        eval_df,
+        n=n,
+        id_col=id_col,
+        text_col=text_col,
+        eval_text_col=eval_text_col,
+        match_short_eval=match_short_eval,
+    ).withColumnRenamed(id_col, "_cid")
+    return _decontaminated(corpus, counts, id_col, min_overlap)
 
 
 def dedup_lines(
@@ -1493,8 +1428,6 @@ def dedup_lines(
     silently yielding a NULL line count — split(NULL) is NULL and
     would otherwise drop the doc from the explode and NULL the count.
     """
-    from polaroam_spark.functions.text import fast_hash64
-
     docs = docs.withColumn(
         text_col, F.coalesce(F.col(text_col), F.lit(""))
     )

@@ -332,14 +332,19 @@ def bloom_decontaminate(
     C(grams, min_overlap) * fp^min_overlap. Returned survivors are
     therefore a subset of the exact survivors.
 
+    Both sides go through the exact operator's gram core in
+    :mod:`~polaroam_spark.operators.dedup` (one corpus tokenize, the
+    ``(key…, gram-hash)`` explode with ``portable`` picking the hash,
+    and the survivor rule: NULL corpus ids count as one document, so
+    all of them drop once they reach ``min_overlap`` together).
     Short-eval semantics match the exact operator's
-    ``match_short_eval=False`` contract exactly: eval docs shorter
-    than ``n`` tokens are EXCLUDED before shingling. (Without the
-    exclusion, ``word_shingles`` would fold a short doc's whole
-    token sequence — for an empty/whitespace eval row, the empty
-    string — into the filter, deterministically over-dropping every
-    corpus doc sharing that degenerate gram: a probability-1 error
-    class the fp bound above does not cover.)
+    ``match_short_eval=False`` contract exactly: every gram is
+    exactly ``n`` tokens, so eval docs shorter than ``n`` tokens add
+    nothing to the filter. (Folding a short doc's whole token
+    sequence in instead — for an empty/whitespace eval row, the
+    empty string — would deterministically over-drop every corpus
+    doc sharing that degenerate gram: a probability-1 error class
+    the fp bound above does not cover.)
 
     The filter frame is persisted internally — its eval-side
     tokenize/shingle/aggregate subtree is referenced once per hash
@@ -351,46 +356,34 @@ def bloom_decontaminate(
     unpersists before returning — the right call inside a
     long-running loop (same contract as the dedup pair generators).
     """
-    from polaroam_spark.functions.text import (
-        fast_hash64,
-        portable_hash64,
-        tokens,
-        word_shingles,
+    from polaroam_spark.functions.text import fast_hash64, portable_hash64
+    from polaroam_spark.operators.dedup import (
+        _corpus_tokens,
+        _decontaminated,
+        _gram_hashes,
+        _item_tokens,
     )
     from polaroam_spark.session import materialize as materialize_df
 
     ghash = portable_hash64 if portable else fast_hash64
-    eval_toks = tokens(eval_text_col)
-    eval_grams = (
-        eval_df.filter(F.array_size(eval_toks) >= F.lit(n))
-        .select(
-            F.explode(
-                F.array_distinct(word_shingles(eval_toks, n, assume_no_nulls=True))
-            ).alias("_gram")
-        )
-        .select(ghash("_gram").alias("_gh"))
-        .distinct()
-    )
+    eval_grams = _gram_hashes(
+        _item_tokens(eval_df, eval_text_col), [], n, ghash
+    ).distinct()
     bloom = build_bloom(
         eval_grams, "_gh", num_bits, num_hashes, portable
     ).persist()
-    corpus_grams = corpus.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(word_shingles(tokens(text_col), n, assume_no_nulls=True))
-        ).alias("_gram"),
-    ).select(id_col, ghash("_gram").alias("_gh"))
+    corpus_grams = _gram_hashes(
+        _corpus_tokens(corpus, id_col, text_col, [n]), ["_cid"], n, ghash
+    )
     probed = probe_bloom(
         corpus_grams, "_gh", bloom, num_bits, num_hashes, portable
     )
-    contaminated = (
+    counts = (
         probed.filter(F.col("bloom_maybe"))
-        .groupBy(id_col)
+        .groupBy("_cid")
         .agg(F.count("*").alias("n_overlap"))
-        .filter(F.col("n_overlap") >= F.lit(min_overlap))
-        .select(id_col)
     )
-    survivors = corpus.join(contaminated, on=id_col, how="left_anti")
+    survivors = _decontaminated(corpus, counts, id_col, min_overlap)
     if not materialize:
         return survivors
     out = materialize_df(survivors)

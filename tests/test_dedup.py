@@ -331,6 +331,44 @@ def test_decontaminate_short_eval_items(spark):
     assert survivors_off == {0, 1, 2}
 
 
+LEAK = "one two three four five six seven eight nine ten eleven twelve"
+
+
+def _null_id_leak(spark):
+    """A contaminated corpus doc with a NULL id, beside a contaminated
+    and a clean doc with ids; the eval side holds the leak under a
+    NULL id and an unrelated item."""
+    corpus = spark.createDataFrame(
+        [(None, LEAK), (1, LEAK), (2, "clean words that match nothing")],
+        "doc_id long, text string",
+    )
+    ev = spark.createDataFrame(
+        [(None, LEAK), (10, "other")], "doc_id long, text string"
+    )
+    return corpus, ev
+
+
+def test_decontaminate_drops_null_id_docs(spark):
+    """NULL corpus ids form one group: once any NULL-id doc matches,
+    every NULL-id doc drops (a left-anti join on a NULL key never
+    matches, so the leaked row used to survive)."""
+    from polaroam_spark.operators.dedup import (
+        decontaminate,
+        ngram_overlap_counts,
+    )
+
+    corpus, ev = _null_id_leak(spark)
+    counts = {
+        r.doc_id: r.n_overlap
+        for r in ngram_overlap_counts(corpus, ev, n=3).collect()
+    }
+    assert counts == {1: 10, None: 10}
+    survivors = [
+        (r.doc_id, r.text) for r in decontaminate(corpus, ev, n=3).collect()
+    ]
+    assert survivors == [(2, "clean words that match nothing")]
+
+
 def test_dedup_lines_removes_boilerplate(spark):
     from polaroam_spark.operators.dedup import dedup_lines
 
@@ -972,6 +1010,17 @@ def test_eval_contamination_report(spark):
         ).collect()
     }
     assert off[102] == 0 and off[100] == 2
+
+
+
+def test_eval_contamination_report_rejects_null_eval_ids(spark):
+    """A NULL eval id would fall out of the join-back and report a
+    leaked item as clean (None, 0, 0): the report raises instead."""
+    from polaroam_spark.operators.dedup import eval_contamination_report
+
+    corpus, ev = _null_id_leak(spark)
+    with pytest.raises(ValueError, match="NULL doc_id"):
+        eval_contamination_report(corpus, ev, n=3)
 
 
 # ---- dup-cluster histogram ------------------------------------------

@@ -206,6 +206,27 @@ def test_bloom_decontaminate_short_and_empty_eval_rows(spark):
     assert sorted(r.doc_id for r in surv.collect()) == [0, 1]
 
 
+def test_bloom_decontaminate_drops_null_id_docs(spark):
+    """The exact operator's survivor rule: NULL corpus ids form one
+    group, so a contaminated NULL-id doc drops instead of slipping
+    through the anti-join."""
+    corpus = spark.createDataFrame(
+        [
+            (None, "one two three four five six seven eight"),
+            (1, "one two three four five six seven eight"),
+            (2, "clean words that match nothing"),
+        ],
+        "doc_id long, text string",
+    )
+    eval_df = spark.createDataFrame(
+        [("one two three four five six seven eight",)], "text string"
+    )
+    surv = bloom_decontaminate(
+        corpus, eval_df, n=3, num_bits=1 << 14, num_hashes=3
+    )
+    assert [r.doc_id for r in surv.collect()] == [2]
+
+
 def test_bloom_decontaminate_materialize_releases_cache(spark):
     corpus = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
