@@ -10172,7 +10172,7 @@ def t40(spark, sf_dir):
 def t39b(spark, sf_dir):
     """Trained langid scorer over the CHAR 3-5-gram feature stream
     (langid.py:score_langid with model feature='char' →
-    textstats.py:_char_grams — fasttext-langid's feature set, the
+    textstats.py:_char_grams_of — fasttext-langid's feature set, the
     robust choice for short / no-whitespace text): t39's fixed
     pure-function weights and oracle arithmetic, swapping only the
     gram stream (every length-3..5 substring of the

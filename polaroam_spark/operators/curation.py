@@ -398,7 +398,9 @@ kn_ngram_logprob_vs_reference` at ``perplexity_order`` (default 3
 
         cur = _stage(
             "decontaminate",
-            decontaminate(cur, decontaminate_against, text_col=text_col),
+            decontaminate(
+                cur, decontaminate_against, text_col=text_col, id_col=id_col
+            ),
         )
     if cap_per_source is not None:
         from polaroam_spark.operators.sampling import cap_per_key

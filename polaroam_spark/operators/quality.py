@@ -8,7 +8,7 @@ LLM-curation filter the rule-based (gopher/c4), LM-based
 decision boundary the curator controls with labels.
 
 Feature space: DSIR's hashed unigram+bigram stream
-(:func:`~polaroam_spark.operators.textstats._dsir_grams`) bucketed
+(:func:`~polaroam_spark.operators.textstats._dsir_grams_of`) bucketed
 into ``num_buckets`` — the same dimensionality-reduction property
 that makes DSIR 100 TB-safe makes the classifier so: the model is a
 fixed B-vector of weights, never an open vocabulary.

@@ -5,6 +5,20 @@ map-side transforms: no shuffle, no UDF, trivially scale-linear.
 
 Beyond-reference components required by the build brief (the
 reference is a mobility engine with no text surface).
+
+The per-document aggregates share one core. The n-gram language-model
+scorers (:func:`unigram_logprob`, :func:`bigram_logprob`,
+:func:`bigram_logprob_vs_reference`,
+:func:`kn_ngram_logprob_vs_reference`, :func:`dsir_importance_weights`)
+read the tokenized doc frame of :func:`_doc_tokens`, explode order-k
+windows with :func:`_windows` and keep only their count tables and
+smoothing formula. They, :func:`repetition_ratio`,
+:func:`duplicate_line_stats`, :func:`duplicated_span_stats` and
+:func:`badword_stats` aggregate per document and join back through
+:func:`_join_back`, whose id contract holds for all of them: the id
+column must be unique and non-NULL, or the action raises (a repeated
+id would merge two documents' scores, a NULL id would score NULL).
+:func:`dedup_spans` drops NULL-id rows instead, as documented there.
 """
 
 from __future__ import annotations
@@ -184,6 +198,92 @@ def pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+#: marks one row of each document in an id-keyed stream (:func:`_explode`)
+_DOC = "_doc"
+
+
+def _doc_tokens(df: DataFrame, text_col: str, id_col=None) -> DataFrame:
+    """The narrow tokenized doc frame ``[id_col,] _toks``: tokens() in
+    its OWN column (r20 CSE fix — a CodegenFallback higher-order filter
+    re-runs per reference when a window zip inlines it 2k times)."""
+    keep = [id_col] if id_col else []
+    return df.select(*keep, tokens(text_col).alias("_toks"))
+
+
+def _explode(frame: DataFrame, arr: Column, name: str, id_col=None):
+    """One row per element of ``arr``. With ``id_col`` a document with
+    an empty or NULL array keeps one NULL row, and ``_DOC`` is 1 on
+    each document's first row, 0 on the rest."""
+    if id_col is None:
+        return frame.select(F.explode(arr).alias(name))
+    return frame.select(
+        id_col, F.posexplode_outer(arr).alias("_pos", name)
+    ).select(
+        id_col,
+        name,
+        (F.coalesce("_pos", F.lit(0)) == 0).cast("int").alias(_DOC),
+    )
+
+
+def _windows(frame: DataFrame, k: int, id_col=None, starts=None):
+    """The order-``k`` window explode of ``_toks`` into ``_g1 .. _gk``:
+    ``arrays_zip`` of ``k`` bulk slices, no positional self-join.
+    ``starts`` windows per document, default ``size - (k-1)`` (the full
+    k-grams); more starts add tail windows that ``arrays_zip`` pads
+    with NULL, unambiguous since tokens() never yields NULL."""
+    toks = F.col("_toks")
+    full = starts is None
+    if full:
+        starts = F.greatest(F.size(toks) - (k - 1), F.lit(0))
+    names = [f"_g{j}" for j in range(1, k + 1)]
+    zipped = F.arrays_zip(
+        *[F.slice(toks, j + 1, starts).alias(names[j]) for j in range(k)]
+    )
+    out = _explode(frame, zipped, "_w", id_col)
+    if id_col is None and full:
+        # a no-op (full windows hold no NULL) that matches the
+        # isnotnull a join infers, so a count table feeding a join and
+        # a total still reuses one exchange
+        out = out.filter(F.col("_w._g1").isNotNull())
+    return out.select(
+        *([id_col, _DOC] if id_col else []),
+        *[F.col(f"_w.{nm}").alias(nm) for nm in names],
+    )
+
+
+def _mean_log(p: Column, out_col: str) -> Column:
+    """Per-doc mean ``log(p)`` over real windows (none → NULL)."""
+    return F.avg(F.when(F.col("_g1").isNotNull(), F.log(p))).alias(out_col)
+
+
+def _join_back(df: DataFrame, stream: DataFrame, id_col: str, *aggs):
+    """Aggregate an id-keyed stream per document and append the results
+    to ``df``'s columns. The id contract: ``id_col`` must be unique and
+    non-NULL in ``df``, or the action raises (a repeated id would merge
+    two documents' scores, a NULL id would score NULL). Both checks sit
+    inside expressions the result needs, so no filter skips them: each
+    value raises when its id's ``_DOC`` sum exceeds 1, and ``df``'s key
+    is ``coalesce(id, raise_error)`` (a separate check filter fails once
+    a filter on the result makes the join inner: Spark then evaluates
+    the inferred ``isnotnull`` first)."""
+    def fail(what):
+        return F.raise_error(F.lit(
+            f"{what} {id_col}: per-document results join back on "
+            f"{id_col}, which must be unique and non-NULL"
+        ))
+
+    per_doc = stream.groupBy(id_col).agg(*aggs, F.sum(_DOC).alias(_DOC))
+    new = [c for c in per_doc.columns if c not in (id_col, _DOC)]
+    dup = F.col(_DOC) > 1
+    per_doc = per_doc.select(id_col, *[
+        F.when(dup, fail("duplicate")).otherwise(F.col(c)).alias(c)
+        for c in new
+    ])
+    keyed = df.withColumn(id_col, F.coalesce(F.col(id_col), fail("NULL")))
+    out = keyed.join(per_doc, on=id_col, how="left")
+    return out.select(*df.columns, *new)
+
+
 def repetition_ratio(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 2
 ) -> DataFrame:
@@ -191,33 +291,34 @@ def repetition_ratio(
     n-grams taken by its single most frequent n-gram (Gopher-style
     repetition signal; boilerplate and spam score high).
 
-    Linear in document length: posexplode the gram array, build the
+    Linear in document length: explode the gram array, build the
     per-(doc, gram) histogram with a map-side-combined groupBy, take
     ``max(count)/sum(count)`` per doc, and join the scalar back on
-    ``id_col`` (which must uniquely key ``df``'s rows). Two narrow
-    shuffles keyed by doc id — the earlier all-in-one-row variant
-    (``transform(distinct, g -> size(filter(grams, = g)))``) was
-    O(distinct·total) per document and melted on long web documents.
+    ``id_col`` (:func:`_join_back`: unique and non-NULL, or the action
+    raises). Two narrow shuffles keyed by doc id — the earlier
+    all-in-one-row variant (``transform(distinct, g -> size(filter(
+    grams, = g)))``) was O(distinct·total) per document and melted on
+    long web documents.
     """
-    from polaroam_spark.functions.text import tokens, word_shingles
+    from polaroam_spark.functions.text import word_shingles
 
-    grams = word_shingles(tokens(text_col), n, assume_no_nulls=True)
+    grams = word_shingles(F.col("_toks"), n, assume_no_nulls=True)
     hist = (
-        df.select(F.col(id_col), F.explode_outer(grams).alias("_gram"))
+        _explode(_doc_tokens(df, text_col, id_col), grams, "_gram", id_col)
         .groupBy(id_col, "_gram")
-        .agg(F.count("*").alias("_c"))
+        .agg(F.count("*").alias("_c"), F.sum(_DOC).alias(_DOC))
     )
     nn = F.when(F.col("_gram").isNotNull(), F.col("_c"))
-    ratio = hist.groupBy(id_col).agg(
+    return _join_back(
+        df,
+        hist,
+        id_col,
         (
             F.max(nn).cast("double")
             / F.greatest(
                 F.coalesce(F.sum(nn), F.lit(0)), F.lit(1)
             ).cast("double")
-        ).alias("top_ngram_ratio")
-    )
-    return df.join(ratio, on=id_col, how="left").select(
-        *df.columns, "top_ngram_ratio"
+        ).alias("top_ngram_ratio"),
     )
 
 
@@ -331,12 +432,13 @@ def duplicate_line_stats(
       lines occurring more than once.
 
     Boilerplate (nav bars, cookie banners, forum signatures) repeats
-    lines verbatim; prose doesn't. Shape: posexplode the line array,
+    lines verbatim; prose doesn't. Shape: explode the line array,
     one map-side-combined groupBy on (doc, line) for the histogram,
     one groupBy on doc for the fold, then a broadcast-friendly join
-    back on ``id_col`` (must uniquely key ``df``). Linear in corpus
-    size, two narrow shuffles keyed by doc id — the same plan family
-    as :func:`repetition_ratio`. Documents with no non-blank lines get
+    back on ``id_col`` (:func:`_join_back`: unique and non-NULL, or
+    the action raises). Linear in corpus size, two narrow shuffles
+    keyed by doc id — the same plan family as
+    :func:`repetition_ratio`. Documents with no non-blank lines get
     0 / 0.0 / 0.0 rather than NULL. Pre-existing output-named columns
     (``n_lines`` etc., e.g. from a prior enrichment pass) are dropped
     and recomputed — without that the join-back would raise
@@ -346,22 +448,21 @@ def duplicate_line_stats(
     df = df.drop(*[c for c in out_cols if c in df.columns])
     lines = _nonblank_lines(F.col(text_col))
     hist = (
-        df.select(F.col(id_col), F.explode_outer(lines).alias("_line"))
+        _explode(df, lines, "_line", id_col)
         .groupBy(id_col, "_line")
-        .agg(F.count("*").alias("_c"))
+        .agg(F.count("*").alias("_c"), F.sum(_DOC).alias(_DOC))
     )
     nn = F.when(F.col("_line").isNotNull(), F.col("_c"))
+    total = F.coalesce(F.sum(nn), F.lit(0))
     line_chars = F.length("_line") * F.col("_c")
-    stats = hist.groupBy(id_col).agg(
-        F.coalesce(F.sum(nn), F.lit(0)).cast("long").alias("n_lines"),
+    stats = _join_back(
+        df,
+        hist,
+        id_col,
+        total.cast("long").alias("n_lines"),
         (
-            (
-                F.coalesce(F.sum(nn), F.lit(0))
-                - F.count(F.when(F.col("_line").isNotNull(), True))
-            ).cast("double")
-            / F.greatest(F.coalesce(F.sum(nn), F.lit(0)), F.lit(1)).cast(
-                "double"
-            )
+            (total - F.count(nn)).cast("double")
+            / F.greatest(total, F.lit(1)).cast("double")
         ).alias("dup_line_frac"),
         (
             F.coalesce(
@@ -372,7 +473,7 @@ def duplicate_line_stats(
             ).cast("double")
         ).alias("dup_line_char_frac"),
     )
-    return df.join(stats, on=id_col, how="left").select(
+    return stats.select(
         *df.columns,
         F.coalesce(F.col("n_lines"), F.lit(0)).alias("n_lines"),
         F.coalesce(F.col("dup_line_frac"), F.lit(0.0)).alias(
@@ -516,33 +617,25 @@ def unigram_logprob(
     cheapest member of the perplexity family of quality signals
     (gibberish and rare-token soup score low; no model file needed,
     the corpus is the model). Documents with no tokens get NULL.
+    ``id_col`` must be unique and non-NULL, or the action raises
+    (:func:`_join_back`).
 
-    Shape: one exploded token stream feeds both the global unigram
-    counts (map-side-combined groupBy on token) and the per-doc
-    average (token-keyed join back, then a doc-keyed aggregation);
-    the corpus token total rides a broadcast 1-row crossJoin. Linear
-    in corpus token volume, no UDF.
+    Shape: the exploded token stream (order-1 :func:`_windows`) feeds
+    both the global unigram counts (map-side-combined groupBy on
+    token) and the per-doc average (token-keyed join back, then a
+    doc-keyed aggregation); the corpus token total rides a broadcast
+    1-row crossJoin. Linear in corpus token volume, no UDF.
     """
-    tok = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("_t")
-    )
-    counts = tok.groupBy("_t").agg(F.count("*").alias("_c"))
+    tsrc = _doc_tokens(df, text_col, id_col)
+    counts = _windows(tsrc, 1).groupBy("_g1").agg(F.count("*").alias("_c"))
     total = counts.agg(F.sum("_c").alias("_total"))
-    per_doc = (
-        tok.join(counts, on="_t")
-        .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
-        .agg(
-            F.avg(
-                F.log(
-                    F.col("_c").cast("double")
-                    / F.col("_total").cast("double")
-                )
-            ).alias("mean_logprob")
-        )
-    )
-    return df.join(per_doc, on=id_col, how="left").select(
-        *df.columns, "mean_logprob"
+    scored = _windows(tsrc, 1, id_col).join(counts, on="_g1", how="left")
+    p = F.col("_c").cast("double") / F.col("_total").cast("double")
+    return _join_back(
+        df,
+        scored.crossJoin(F.broadcast(total)),
+        id_col,
+        _mean_log(p, "mean_logprob"),
     )
 
 
@@ -562,70 +655,54 @@ def bigram_logprob(
     starting with w1), so the ML term is a proper conditional;
     interpolation with the unigram term keeps unseen pairs finite —
     no explicit smoothing constant to tune. Documents with fewer
-    than 2 tokens get NULL.
+    than 2 tokens get NULL. ``id_col`` must be unique and non-NULL,
+    or the action raises (:func:`_join_back`).
 
     Default λ=0.75: an exact binary double, so the interpolation
     arithmetic is the same correctly-rounded expression on any
     engine (the t22 oracle mirrors it term for term). Shape: bigram
-    pairs are built MAP-SIDE from each token array (zip of two
-    slices — no positional self-join); then three
+    pairs are built MAP-SIDE from each token array (order-2
+    :func:`_windows` — no positional self-join); then three
     map-side-combined count tables (pair, context, unigram) join
-    back onto the bigram stream and a doc-keyed average finishes.
-    Linear in corpus token volume, no UDF.
+    back onto the bigram stream and a doc-keyed average finishes
+    (:func:`_bigram_joined`). Linear in corpus token volume, no UDF.
     """
     lam = float(lambda_bigram)
     if not 0.0 <= lam <= 1.0:
         raise ValueError("lambda_bigram must be in [0, 1]")
-    # project the token array into its OWN column before the zip
-    # (r20 CSE fix — tokens() is a CodegenFallback higher-order
-    # filter, re-evaluated per reference when inlined, and the zip
-    # references it 4x)
-    tsrc = df.select(
-        F.col(id_col), tokens(text_col).alias("_bt")
+    tsrc = _doc_tokens(df, text_col, id_col)
+    p = F.lit(lam) * (
+        F.col("_c12").cast("double") / F.col("_c1").cast("double")
+    ) + F.lit(1.0 - lam) * (
+        F.col("_cu").cast("double") / F.col("_n").cast("double")
     )
-    toks = F.col("_bt")
-    n = F.size(toks)
-    pairs = F.zip_with(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    return _join_back(
+        df,
+        _bigram_joined(tsrc, tsrc, id_col),
+        id_col,
+        _mean_log(p, "mean_bigram_logprob"),
     )
-    bg = tsrc.select(
-        F.col(id_col), F.explode(pairs).alias("_p")
-    ).select(
-        id_col, F.col("_p.w1").alias("_w1"), F.col("_p.w2").alias("_w2")
-    )
-    c12 = bg.groupBy("_w1", "_w2").agg(F.count("*").alias("_c12"))
-    c1 = bg.groupBy("_w1").agg(F.count("*").alias("_c1"))
-    uni = tsrc.select(F.explode(toks).alias("_w2")).groupBy("_w2").agg(
+
+
+def _bigram_joined(
+    scored: DataFrame, model: DataFrame, id_col: str
+) -> DataFrame:
+    """``scored``'s id-keyed bigram stream with ``model``'s pair,
+    context and unigram counts (``_c12``, ``_c1``, ``_cu``; NULL when
+    unseen) and token total ``_n`` left-joined on."""
+    bg = _windows(model, 2)
+    c12 = bg.groupBy("_g1", "_g2").agg(F.count("*").alias("_c12"))
+    c1 = bg.groupBy("_g1").agg(F.count("*").alias("_c1"))
+    uni = _windows(model, 1).groupBy(F.col("_g1").alias("_g2")).agg(
         F.count("*").alias("_cu")
     )
-    total = uni.agg(F.sum("_cu").alias("_n"))
-    per_doc = (
-        bg.join(c12, on=["_w1", "_w2"])
-        .join(c1, on="_w1")
-        .join(uni, on="_w2")
+    total = uni.agg(F.coalesce(F.sum("_cu"), F.lit(0)).alias("_n"))
+    return (
+        _windows(scored, 2, id_col)
+        .join(c12, on=["_g1", "_g2"], how="left")
+        .join(c1, on="_g1", how="left")
+        .join(uni, on="_g2", how="left")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
-        .agg(
-            F.avg(
-                F.log(
-                    F.lit(lam)
-                    * (
-                        F.col("_c12").cast("double")
-                        / F.col("_c1").cast("double")
-                    )
-                    + F.lit(1.0 - lam)
-                    * (
-                        F.col("_cu").cast("double")
-                        / F.col("_n").cast("double")
-                    )
-                )
-            ).alias("mean_bigram_logprob")
-        )
-    )
-    return df.join(per_doc, on=id_col, how="left").select(
-        *df.columns, "mean_bigram_logprob"
     )
 
 
@@ -658,10 +735,13 @@ def bigram_logprob_vs_reference(
       and a fixed penalty rather than −inf (a single OOV token must
       dent a document's mean, not erase it).
 
-    Shape: identical to t22 — map-side bigram construction, three
-    map-side-combined count tables (over the REFERENCE), left joins
-    back onto the scored bigram stream, one doc-keyed average.
-    Documents with fewer than 2 tokens get NULL.
+    Shape: identical to t22 (:func:`_bigram_joined`) — map-side
+    bigram construction, three map-side-combined count tables (over
+    the REFERENCE), left joins back onto the scored bigram stream, one
+    doc-keyed average. Documents with fewer than 2 tokens get NULL.
+    ``id_col`` must be unique and non-NULL in ``df``, or the action
+    raises (:func:`_join_back`); ``reference`` needs only
+    ``text_col``.
 
     Broadcast caveat at reference scale (measured r11, BASELINE.md
     §t24 probe): the context-count (c1), unigram, and scalar-total
@@ -691,40 +771,6 @@ def bigram_logprob_vs_reference(
             " denting it"
         )
 
-    def _bigrams(frame: DataFrame) -> DataFrame:
-        # token array projected to its own column first (r20 CSE
-        # fix, see bigram_logprob)
-        base = frame.select(
-            F.col(id_col), tokens(text_col).alias("_bt")
-        )
-        toks = F.col("_bt")
-        n = F.size(toks)
-        pairs = F.zip_with(
-            F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-            F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        )
-        return base.select(
-            F.col(id_col), F.explode(pairs).alias("_p")
-        ).select(
-            id_col,
-            F.col("_p.w1").alias("_w1"),
-            F.col("_p.w2").alias("_w2"),
-        )
-
-    ref_bg = _bigrams(reference)
-    c12 = ref_bg.groupBy("_w1", "_w2").agg(F.count("*").alias("_c12"))
-    c1 = ref_bg.groupBy("_w1").agg(F.count("*").alias("_c1"))
-    uni = (
-        reference.select(F.explode(tokens(text_col)).alias("_w2"))
-        .groupBy("_w2")
-        .agg(F.count("*").alias("_cu"))
-    )
-    total = uni.agg(
-        F.coalesce(F.sum("_cu"), F.lit(0)).alias("_n")
-    )
-
-    bg = _bigrams(df)
     bigram_term = F.when(
         F.coalesce(F.col("_c1"), F.lit(0)) > 0,
         F.lit(lam)
@@ -737,20 +783,16 @@ def bigram_logprob_vs_reference(
         (F.coalesce(F.col("_cu"), F.lit(0)).cast("double") + F.lit(0.5))
         / (F.col("_n").cast("double") + F.lit(0.5))
     )
-    per_doc = (
-        bg.join(c12, on=["_w1", "_w2"], how="left")
-        .join(c1, on="_w1", how="left")
-        .join(uni, on="_w2", how="left")
-        .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
-        .agg(
-            F.avg(F.log(bigram_term + unigram_term)).alias(
-                "mean_bigram_logprob"
-            )
-        )
+    scored = _bigram_joined(
+        _doc_tokens(df, text_col, id_col),
+        _doc_tokens(reference, text_col),
+        id_col,
     )
-    return df.join(per_doc, on=id_col, how="left").select(
-        *df.columns, "mean_bigram_logprob"
+    return _join_back(
+        df,
+        scored,
+        id_col,
+        _mean_log(bigram_term + unigram_term, "mean_bigram_logprob"),
     )
 
 
@@ -805,8 +847,8 @@ def kn_ngram_logprob_vs_reference(
     the level below outright); an unseen word bottoms out at the
     floor ``0.5/(N1+(··)+0.5)`` — finite, positive, a fixed dent.
 
-    Shape: n-gram positions build MAP-SIDE per document (arrays_zip
-    over ``order`` bulk slices — no positional self-join); the
+    Shape: n-gram positions build MAP-SIDE per document
+    (:func:`_windows` — no positional self-join); the
     reference is consumed in ONE pass that explodes each position's
     up-to-``order``-token window and counts window TYPES with a
     single wide exchange (r20 fan-in) — the ``order``-gram count
@@ -821,7 +863,8 @@ def kn_ngram_logprob_vs_reference(
     consumers; all registered with the session cache registry
     (``polaroam_spark.unpersist_caches()``). Linear in corpus token
     volume, no UDF. Documents with fewer than ``order`` tokens get
-    NULL.
+    NULL. ``id_col`` must be unique and non-NULL in ``df``, or the
+    action raises (:func:`_join_back`).
 
     ``discount`` must be in (0, 1): at 0 the model collapses to
     unsmoothed ML with zero backoff mass (an unseen gram under a
@@ -846,22 +889,6 @@ def kn_ngram_logprob_vs_reference(
     from ..cache import track
 
     gnames = [f"_g{i}" for i in range(1, N + 1)]
-
-    def _gram_stream(frame, tok_col, n, names, keep_id):
-        cnt = F.size(tok_col)
-        m = F.greatest(cnt - (n - 1), F.lit(0))
-        zipped = F.arrays_zip(
-            *[
-                F.slice(tok_col, j + 1, m).alias(names[j])
-                for j in range(n)
-            ]
-        )
-        pre = [F.col(id_col)] if keep_id else []
-        ex = frame.select(*pre, F.explode(zipped).alias("_p"))
-        return ex.select(
-            *([id_col] if keep_id else []),
-            *[F.col(f"_p.{nm}").alias(nm) for nm in names],
-        )
 
     from ..session import fan_out
 
@@ -891,24 +918,12 @@ def kn_ngram_logprob_vs_reference(
     # text scan stays (guide §2.5 "one huge unsplittable file": at
     # bench scale the parquet is ONE split and the explode+partial-
     # agg stage would run serially; at corpus scale it is a no-op).
-    # The tokens() projection must stay OWN-column: higher-order
-    # lambdas are CodegenFallback (no CSE), and the window zip
-    # references its token array 2N times.
-    rtok = fan_out(
-        reference.select(_col(text_col).alias("_t"))
-    ).select(tokens(F.col("_t")).alias("_toks"))
-    wtoks = F.col("_toks")
-    wcnt = F.greatest(F.size(wtoks) - 1, F.lit(0))
-    win = rtok.select(
-        F.explode(
-            F.arrays_zip(
-                *[
-                    F.slice(wtoks, j + 1, wcnt).alias(gnames[j])
-                    for j in range(N)
-                ]
-            )
-        ).alias("_p")
-    ).select(*[F.col(f"_p.{nm}").alias(nm) for nm in gnames])
+    # The windows start at every position but the last (a bigram
+    # type needs two real tokens).
+    rtok = _doc_tokens(fan_out(reference.select(text_col)), text_col)
+    win = _windows(
+        rtok, N, starts=F.greatest(F.size("_toks") - 1, F.lit(0))
+    )
     wtypes = track(
         win.groupBy(*gnames).agg(F.count("*").alias("_cW")).persist()
     )
@@ -987,17 +1002,9 @@ def kn_ngram_logprob_vs_reference(
         )
     builds.agg(F.count("_one")).collect()
 
-    # Scored side: project the token array into its OWN column
-    # before the gram zip (r20, guide §4.1 note above — tokens() is
-    # a higher-order filter, CodegenFallback, no CSE, and
-    # _gram_stream references its token column 2N times; inline,
-    # the split+lower+filter chain re-ran per reference over the
-    # FULL scored corpus).
-    scored_src = fan_out(df.select(id_col, text_col)).select(
-        id_col, tokens(text_col).alias("_stoks")
-    )
-    tg = _gram_stream(scored_src, F.col("_stoks"), N, gnames, True)
-    j = tg.join(ng, on=gnames, how="left").join(
+    # scored side: the full order-N windows of the fanned-out docs
+    stok = _doc_tokens(fan_out(df.select(id_col, text_col)), text_col, id_col)
+    j = _windows(stok, N, id_col).join(ng, on=gnames, how="left").join(
         ctx, on=gnames[:-1], how="left"
     )
     for k in range(N - 1, 1, -1):
@@ -1040,10 +1047,7 @@ def kn_ngram_logprob_vs_reference(
         + (dd * F.col("_ctyp").cast("double")) / ctot * p,
     ).otherwise(p)
 
-    per_doc = j.groupBy(id_col).agg(F.avg(F.log(p)).alias(out_col))
-    return df.join(per_doc, on=id_col, how="left").select(
-        *df.columns, out_col
-    )
+    return _join_back(df, j, id_col, _mean_log(p, out_col))
 
 
 def kn_trigram_logprob_vs_reference(
@@ -1071,6 +1075,9 @@ def kn_trigram_logprob_vs_reference(
     )
 
 
+# DSIR's feature stream: unigrams plus word bigrams (the paper's set);
+# a one-token document yields just its unigram, not word_shingles'
+# whole-text fallback
 def _dsir_grams_of(toks: Column) -> Column:
     """DSIR gram stream built from an ALREADY-TOKENIZED array column
     (r19 optimization round, guide §1.2 per-task work): the stream
@@ -1096,20 +1103,8 @@ def _dsir_grams_of(toks: Column) -> Column:
     return F.concat(toks, bigrams)
 
 
-def _dsir_grams(text_col: str) -> Column:
-    """DSIR's hashed-ngram feature stream: unigrams plus word
-    bigrams (the paper's feature set). Documents with a single token
-    contribute just that unigram — the bigram half is empty rather
-    than duplicating the unigram (word_shingles' short-doc fallback
-    would re-emit the whole text). Bigrams build via zip_with of two
-    bulk slices (t22/t24's shape) rather than word_shingles(k=2)'s
-    per-position slice — the stream is evaluated twice per corpus
-    (count + score passes), so per-gram expression cost is the hot
-    path. Prefer :func:`_dsir_grams_of` over a pre-projected token
-    column when a DataFrame is in hand (see its note)."""
-    return _dsir_grams_of(tokens(text_col))
-
-
+# fasttext-langid's CHAR 3-5-gram stream: robust on short and
+# no-whitespace text, where word grams degenerate to one giant token
 def _char_norm(text_col: "Column | str") -> Column:
     """The char-gram base string: lowercase, whitespace runs to one
     space, trimmed. Project this into its own column before
@@ -1148,23 +1143,6 @@ def _char_grams_of(
     )
 
 
-def _char_grams(
-    text_col: "Column | str", n_lo: int = 3, n_hi: int = 5
-) -> Column:
-    """fasttext-langid's CHAR n-gram feature stream (default 3–5):
-    lowercase, collapse whitespace runs to one space, trim, then
-    every length-n substring for each n — what makes a trained
-    langid robust on short and NO-WHITESPACE (CJK-like) text, where
-    :func:`_dsir_grams`' word features degenerate to one giant
-    unique token per document. Pure array expressions (sequence →
-    transform → substr), character-based on both engines so a DuckDB
-    oracle replays the stream exactly. NULL text → NULL; text
-    shorter than ``n_lo`` chars → empty array (no evidence).
-    Prefer :func:`_char_grams_of` over a pre-projected
-    :func:`_char_norm` column when a DataFrame is in hand."""
-    return _char_grams_of(_char_norm(text_col), n_lo, n_hi)
-
-
 def dsir_importance_weights(
     corpus: DataFrame,
     target: DataFrame,
@@ -1199,9 +1177,11 @@ def dsir_importance_weights(
     against the broadcast B-row log-ratio table) plus one target
     scan; the only shuffles are B-row map-side-combined counts and
     the per-doc sum keyed by ``id_col``. Documents with no tokens
-    get NULL. An EMPTY target degenerates to a pure raw-rarity score
-    (every bucket falls to the λ/(λB) floor) — callers wanting a
-    hard failure should validate the target upstream.
+    get NULL. ``id_col`` must be unique and non-NULL in ``corpus``,
+    or the action raises (:func:`_join_back`). An EMPTY target
+    degenerates to a pure raw-rarity score (every bucket falls to the
+    λ/(λB) floor) — callers wanting a hard failure should validate
+    the target upstream.
 
     ``portable=True`` swaps xxhash64 bucketing for the md5-based
     :func:`portable_hash64` so a DuckDB oracle can replay bucket
@@ -1220,24 +1200,14 @@ def dsir_importance_weights(
             " put ln(0) on every unseen bucket"
         )
 
-    def _buckets(frame: DataFrame, cols: list) -> DataFrame:
-        # tokenize in a LOWER projection so the gram stream's four
-        # references to the token array reuse one computation instead
-        # of re-running lower+split+filter per reference (r19
-        # optimization round — see _dsir_grams_of; CollapseProject
-        # keeps the split because the alias is non-cheap and
-        # multiply referenced)
-        g = F.explode(_dsir_grams_of(F.col("_tk"))).alias("_gram")
-        h = (
-            portable_hash64(F.col("_gram"), 13)
-            if portable
-            else fast_hash64("_gram", 13)
-        )
-        return (
-            frame.select(*cols, tokens(text_col).alias("_tk"))
-            .select(*cols, g)
-            .select(*cols, F.pmod(h, F.lit(b)).alias("_bucket"))
-        )
+    def _buckets(frame: DataFrame, id_col=None) -> DataFrame:
+        # keyed by id, a document with no gram keeps a NULL-bucket row
+        toks = _doc_tokens(frame, text_col, id_col)
+        g = _explode(toks, _dsir_grams_of(F.col("_toks")), "_g", id_col)
+        h = portable_hash64("_g", 13) if portable else fast_hash64("_g", 13)
+        bucket = F.when(F.col("_g").isNotNull(), F.pmod(h, F.lit(b)))
+        keep = [id_col, _DOC] if id_col else []
+        return g.select(*keep, bucket.alias("_bucket"))
 
     # persist is load-bearing for BOTH count tables: each is ≤ B rows
     # (KBs), but each feeds TWO consumers — the per-bucket log-ratio
@@ -1250,13 +1220,13 @@ def dsir_importance_weights(
     from ..cache import track
 
     raw = track(
-        _buckets(corpus, [])
+        _buckets(corpus)
         .groupBy("_bucket")
         .agg(F.count("*").cast("double").alias("_c_raw"))
         .persist()
     )
     tgt = track(
-        _buckets(target, [])
+        _buckets(target)
         .groupBy("_bucket")
         .agg(F.count("*").cast("double").alias("_c_tgt"))
         .persist()
@@ -1296,14 +1266,11 @@ def dsir_importance_weights(
             ).alias("_lw"),
         )
     )
-    per_doc = (
-        _buckets(corpus, [F.col(id_col)])
-        .join(F.broadcast(lw), on="_bucket")
-        .groupBy(id_col)
-        .agg(F.sum("_lw").alias("dsir_logweight"))
+    scored = _buckets(corpus, id_col).join(
+        F.broadcast(lw), on="_bucket", how="left"
     )
-    return corpus.join(per_doc, on=id_col, how="left").select(
-        *corpus.columns, "dsir_logweight"
+    return _join_back(
+        corpus, scored, id_col, F.sum("_lw").alias("dsir_logweight")
     )
 
 
@@ -1624,10 +1591,12 @@ def duplicated_span_stats(
     either way).
 
     Shape: explode spans → one groupBy on the span key (map-side
-    combined) → join the multiplicity back → per-doc aggregate; all
-    shuffles keyed by span/doc. ``portable=False`` (default) folds
-    each span to a 64-bit xxhash64 so the shuffle carries 8 bytes
-    per span, not ~window·6 text bytes — at corpus scale the span
+    combined) → join the multiplicity back → per-doc aggregate, joined
+    back on ``id_col`` (:func:`_join_back`: unique and non-NULL, or
+    the action raises); all shuffles keyed by span/doc.
+    ``portable=False`` (default) folds each span to a 64-bit xxhash64
+    so the shuffle carries 8 bytes per span, not ~window·6 text bytes
+    — at corpus scale the span
     text must not move twice; ``portable=True`` keeps span STRINGS
     (what a SQL oracle reproduces; collision-free). 64 bits is
     deliberate HERE and not in :func:`dedup_spans`: a birthday
@@ -1640,7 +1609,7 @@ def duplicated_span_stats(
     stride = int(stride)
     if window < 2 or stride < 1:
         raise ValueError("need window >= 2 and stride >= 1")
-    toks = tokens(F.col(text_col))
+    toks = F.col("_toks")
     n = F.size(toks)
     starts = F.when(
         n >= window,
@@ -1652,24 +1621,25 @@ def duplicated_span_stats(
         if not portable
         else span
     )
-    ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode_outer(F.transform(starts, key)).alias("_span"),
+    ex = _explode(
+        _doc_tokens(df, text_col, id_col),
+        F.transform(starts, key),
+        "_span",
+        id_col,
     )
     mult = ex.filter(F.col("_span").isNotNull()).groupBy("_span").agg(
         F.count("*").alias("_c")
     )
-    flagged = ex.join(mult, on="_span", how="left")
-    per = flagged.groupBy("_id").agg(
+    return _join_back(
+        df,
+        ex.join(mult, on="_span", how="left"),
+        id_col,
         F.count("_span").cast("bigint").alias("n_spans"),
         F.coalesce(
             F.sum(F.when(F.col("_c") > 1, 1).otherwise(0)), F.lit(0)
         )
         .cast("bigint")
         .alias("n_dup_spans"),
-    )
-    return df.join(
-        per.withColumnRenamed("_id", id_col), on=id_col, how="left"
     ).withColumn(
         "dup_span_ratio",
         F.when(
@@ -2485,11 +2455,13 @@ def badword_stats(
 
     Matching is exact on lowercased whitespace tokens (the
     library's ``tokens()`` rule — no substring matching: "class"
-    must not hit a 3-letter entry). Plan shape: one token explode +
-    a BROADCAST semi-side join against the (tiny) word list + a
-    doc-keyed count of HITS only, joined back — corpus text never
-    shuffles, only the hit rows do. NULL/empty text rows get 0
-    hits, NULL ratio.
+    must not hit a 3-letter entry). Plan shape: one token explode + a
+    BROADCAST left join against the (tiny) word list + one doc-keyed
+    count of hits and tokens, joined back on ``id_col``
+    (:func:`_join_back`: unique and non-NULL, or the action raises) —
+    corpus text never shuffles into the count, only one partial row
+    per doc and partition does. NULL/empty text rows get 0 hits,
+    NULL ratio.
     """
     if isinstance(words, (list, tuple)):
         if not words:
@@ -2532,26 +2504,26 @@ def badword_stats(
         wdf = words.select(
             F.lower(F.col("word")).alias("word")
         )
-    toks = df.select(
-        F.col(id_col),
-        F.explode(tokens(text_col)).alias("word"),
+    toks = _explode(
+        _doc_tokens(df, text_col, id_col), F.col("_toks"), "word", id_col
     )
-    hits = (
-        toks.join(F.broadcast(wdf.distinct()), on="word")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_badword_hits"))
-    )
-    n_tok = F.size(tokens(text_col))
-    out = df.join(hits, on=id_col, how="left").withColumn(
+    hit = wdf.distinct().withColumn("_hit", F.lit(True))
+    out = _join_back(
+        df,
+        toks.join(F.broadcast(hit), on="word", how="left"),
+        id_col,
+        F.count("_hit").alias("n_badword_hits"),
+        F.count("word").alias("_ntok"),
+    ).withColumn(
         "n_badword_hits",
         F.coalesce("n_badword_hits", F.lit(0)).cast("long"),
     )
     return out.withColumn(
         "badword_ratio",
         F.when(
-            n_tok > 0,
-            F.col("n_badword_hits") / n_tok.cast("double"),
+            F.col("_ntok") > 0,
+            F.col("n_badword_hits") / F.col("_ntok").cast("double"),
         ),
     ).withColumn(
         "has_badword", F.col("n_badword_hits") > 0
-    )
+    ).drop("_ntok")

@@ -765,3 +765,28 @@ def test_domain_report_feeds_mixture_plan(spark):
     for r in got.values():
         assert 0.0 <= r.rate <= 1.0
         assert r.available_tokens > 0
+
+
+def test_curate_corpus_decontaminate_uses_id_col(spark):
+    """The decontamination stage keys documents by the caller's
+    ``id_col`` like every other stage; a frame without ``doc_id``
+    must not fail on an unresolved default column."""
+    from polaroam_spark.operators.curation import curate_corpus
+
+    leak = "one two three four five six seven eight nine ten"
+    docs = spark.createDataFrame(
+        [
+            (10, "prefix " + leak + " suffix"),
+            (11, "an entirely clean document with nothing from the eval"),
+        ],
+        "uid long, text string",
+    )
+    ev = spark.createDataFrame([(0, leak)], "doc_id long, text string")
+    kept, _ = curate_corpus(
+        docs,
+        id_col="uid",
+        dedup=None,
+        decontaminate_against=ev,
+        with_stats=False,
+    )
+    assert [r.uid for r in kept.collect()] == [11]

@@ -1841,3 +1841,81 @@ def test_kn_ngram_derived_type_tables_differential(spark, order):
             assert out[k] is None, (k, out[k])
         else:
             assert abs(out[k] - v) < 1e-9, (k, out[k], v)
+
+
+# Every per-document join-back of textstats keys its result by the
+# caller's id, so the id must be unique and non-NULL: two documents
+# sharing an id would get one merged score, and a NULL id would
+# silently score NULL. "dup_short" repeats an id on documents with no
+# gram at all, which must be caught too.
+_JOIN_BACK_SITES = {
+    "unigram_logprob": lambda ts, d, r: ts.unigram_logprob(d),
+    "bigram_logprob": lambda ts, d, r: ts.bigram_logprob(d),
+    "bigram_logprob_vs_reference": (
+        lambda ts, d, r: ts.bigram_logprob_vs_reference(d, r)
+    ),
+    "kn_ngram_logprob_vs_reference": (
+        lambda ts, d, r: ts.kn_ngram_logprob_vs_reference(d, r, order=3)
+    ),
+    "dsir_importance_weights": (
+        lambda ts, d, r: ts.dsir_importance_weights(d, r, num_buckets=64)
+    ),
+    "repetition_ratio": lambda ts, d, r: ts.repetition_ratio(d),
+    "duplicate_line_stats": lambda ts, d, r: ts.duplicate_line_stats(d),
+    "duplicated_span_stats": (
+        lambda ts, d, r: ts.duplicated_span_stats(d, window=2, stride=1)
+    ),
+    "badword_stats": lambda ts, d, r: ts.badword_stats(d, ["zeta"]),
+}
+
+_BAD_IDS = {
+    "dup": (
+        [(1, "alpha beta gamma"), (1, "zeta zeta zeta zeta"),
+         (2, "alpha beta gamma")],
+        "duplicate doc_id",
+    ),
+    "dup_short": (
+        [(1, ""), (1, None), (2, "alpha beta gamma")],
+        "duplicate doc_id",
+    ),
+    "null": (
+        [(None, "alpha beta gamma delta"), (2, "alpha beta gamma")],
+        "NULL doc_id",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_IDS))
+@pytest.mark.parametrize("site", sorted(_JOIN_BACK_SITES))
+def test_join_back_rejects_null_and_duplicate_ids(spark, site, case):
+    from polaroam_spark.operators import textstats as ts
+
+    rows, msg = _BAD_IDS[case]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    ref = spark.createDataFrame(
+        [(0, "alpha beta gamma delta zeta")], "doc_id long, text string"
+    )
+    out = _JOIN_BACK_SITES[site](ts, docs, ref)
+    with pytest.raises(Exception, match=msg):
+        out.collect()
+
+
+@pytest.mark.parametrize("case", ["null", "dup_short"])
+def test_join_back_checks_hold_under_score_filter(spark, case):
+    """A filter on the score turns the left join-back into an inner
+    join, which lets Spark infer ``isnotnull`` on both sides and run
+    it, or the score filter, before anything else; a NULL id and a
+    repeated id on NULL-score documents must still raise rather than
+    silently drop (the curate_corpus perplexity stage filters exactly
+    this way)."""
+    from polaroam_spark.operators.textstats import (
+        kn_ngram_logprob_vs_reference,
+    )
+
+    rows, msg = _BAD_IDS[case]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = kn_ngram_logprob_vs_reference(docs, docs, order=2).filter(
+        F.col("mean_kn_logprob") > -1e9
+    )
+    with pytest.raises(Exception, match=msg):
+        out.collect()

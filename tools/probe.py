@@ -1,5 +1,6 @@
 """Isolated per-query timing probe: reuse plan_capture's builders,
-time the noop sink N times for the named queries only.
+time the noop sink N times for the named queries only, and count the
+Spark jobs of each run.
 
 Usage: python tools/probe.py <runs> <query> [query...]
 """
@@ -51,11 +52,15 @@ def run(df):
     df.write.format("noop").mode("overwrite").save()
 
 
+sc = spark.sparkContext
 for name in NAMES:
     fn = builders[name]
-    spark.sparkContext.setJobDescription(f"probe:{name}")
-    times = []
+    times, jobs = [], []
     for i in range(RUNS):
+        # one job group per run, so the run's Spark jobs (the eager
+        # actions a query runs while it is built included) can be counted
+        group = f"probe:{name}:{i}"
+        sc.setJobGroup(group, group)
         em._MATERIALIZED_MEDIANS.clear()
         spark.catalog.clearCache()
         try:
@@ -67,5 +72,8 @@ for name in NAMES:
         t0 = time.time()
         run(fn())
         times.append(round(time.time() - t0, 3))
-    print(f"{name}: {times} median={sorted(times)[len(times)//2]}")
-    spark.sparkContext.setJobDescription(None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    print(
+        f"{name}: {times} median={sorted(times)[len(times)//2]}"
+        f" jobs={jobs}"
+    )
